@@ -3594,16 +3594,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["pagerank_fixed"] = _pr
 
-    def _pr_csr(spark, sf):
-        from smatchpp_spark.operators.csr import pagerank_csr
-
-        r = pagerank_csr(
-            _e_op(spark, sf), alpha=ALPHA, tol=-1.0, max_supersteps=PR_STEPS
-        )
-        return r.ranks.select("vertex", F.round("rank", 9).alias("rank"))
-
-    q["pagerank_csr"] = _pr_csr
-
     def _pr_hetero(spark, sf):
         from smatchpp_spark.sources.tables import tpch_edges
 
@@ -4052,9 +4042,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         # warm start = PR_STEPS truncated rounds on the OLD graph
         # (lineitem l_linenumber <= 5); the delta is the linenumber 6/7
-        # edge set.  4 incremental rounds on the full graph — the
-        # oracle replays the whole chain (old rounds, the round-1 full
-        # step, then the sparse-delta rounds) 1:1.
+        # edge set.  4 warm-started rounds on the full graph — the
+        # oracle replays the whole chain (old rounds, then the new
+        # graph's rounds in their correction form rank + δ, equal to
+        # the operator's power iteration to well under the 9 dp
+        # rounding).
         li = _read(spark, sf, "lineitem")
         old = li.filter(F.col("l_linenumber") <= 5).select(
             F.concat(F.lit("o"), F.col("l_orderkey").cast("string")).alias(
@@ -5811,7 +5803,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # queries — single_linkage_clusters, pagerank_incremental,
 # fastrp_embeddings, widest_path, reliable_path, graph_snapshot_diff,
 # cc_incremental, doc_unimax, egonet_anomalies, neighbor_features,
-# vertex_encode, pagerank_csr, doc_lm_scores, degree_quantiles,
+# vertex_encode, doc_lm_scores, degree_quantiles,
 # hitting_times, doc_dedup_against, spectral_bisection,
 # doc_collocations, edge_embeddedness, graph_sparsify, doc_containment,
 # graph_percolation, doc_entropy, emb_sq_topk, doc_clone_pairs — plus
@@ -5900,9 +5892,6 @@ SELECT vertex, CAST(SUM(i) AS BIGINT) AS in_deg, CAST(SUM(o) AS BIGINT) AS out_d
 FROM ends GROUP BY vertex
 """,
         "pagerank_fixed": _pagerank_sql(PR_STEPS),
-        # same fixpoint as the join dataflow — the CSR variant is held
-        # to the identical unrolled oracle
-        "pagerank_csr": _pagerank_sql(PR_STEPS),
         "pagerank_incremental": _pagerank_incremental_sql(PR_STEPS, 4),
         "fastrp_embeddings": _fastrp_sql(4, 2, (1.0, 0.5)),
         "cc_incremental": _cc_incremental_sql(6, 4),

@@ -11,8 +11,8 @@ Each run:
   2. updates connected components — warm hash-min (cc_incremental)
      when the delta is additions-only, honest cold rerun otherwise
      (removals can split components; the guard decides, not a flag);
-  3. updates PageRank with warm-start correction rounds
-     (pagerank_incremental) from the previous run's ranks — correct
+  3. updates PageRank warm-started (pagerank_incremental, i.e.
+     pagerank(init=...)) from the previous run's ranks — correct
      under ANY delta (the fixpoint is unique; the warm start only
      buys rounds);
   4. commits the new snapshot/labels/ranks under

@@ -1,13 +1,16 @@
 """spark-submit job for the link-graph suite (north-rule pipeline):
 
   spark-submit --py-files smatchpp_spark.zip jobs/linkgraph.py \
-      --op pagerank|components|components_twophase|labelprop|triangles|degrees \
-           |kcore|bfs|scc|hyperball|clustering|linkpred \
+      --op pagerank|pagerank_incremental|components|components_twophase|labelprop \
+           |triangles|degrees|kcore|bfs|scc|hyperball|clustering|linkpred \
       --edges <parquet dir with (src, dst)> \
       [--src-col src] [--dst-col dst] \
       [--checkpoint-dir /ckpt] [--resume] [--max-supersteps N] \
-      [--alpha 0.85] [--tol 1e-10] [--adjacency] [--max-fanout N] \
-      -o <output parquet dir>
+      [--alpha 0.85] [--tol 1e-10] [--warm-ranks <parquet dir>] \
+      [--max-fanout N] -o <output parquet dir>
+
+--op pagerank and --op pagerank_incremental run the same operator
+(operators/pagerank.py): cold, or warm-started from --warm-ranks.
 
 Every iterative op checkpoints per-superstep state + metrics/lineage
 under --checkpoint-dir (parquet + jsonl — the sandbox stand-in for the
@@ -38,7 +41,7 @@ def build_arg_parser() -> argparse.ArgumentParser:
                             "single_linkage", "pagerank_incremental",
                             "fastrp", "widest_path", "reliable_path",
                             "graph_diff", "cc_incremental",
-                            "pagerank_csr", "hitting", "spectral",
+                            "hitting", "spectral",
                             "encode", "degree_quantiles",
                             "percolation", "sparsify", "embeddedness"])
     p.add_argument("--ps", default="0.2,0.5,0.8",
@@ -135,12 +138,12 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--undirected", action="store_true",
                    help="bfs: expand edges in both directions")
     p.add_argument("--tol", type=float, default=1e-10,
-                   help="pagerank convergence threshold (max |delta rank|)")
-    p.add_argument("--adjacency", action="store_true",
-                   help="pagerank: pre-grouped hub-salted adjacency variant "
-                        "(memory-bound regimes; per-edge is the default)")
+                   help="pagerank convergence threshold: max |delta rank| "
+                        "when cold, L1 norm of the rank change when "
+                        "warm-started (pagerank_incremental); negative "
+                        "runs exactly --max-supersteps rounds")
     p.add_argument("--max-fanout", type=int, default=100_000,
-                   help="pagerank adjacency: hub-bucket size cap (skew salt)")
+                   help="sparsify: hub-bucket size cap (skew salt)")
     p.add_argument("-o", "--output", required=True, help="output parquet dir")
     p.add_argument("--master", default=None)
     return p
@@ -180,8 +183,6 @@ def main() -> None:
             max_supersteps=args.max_supersteps,
             checkpoint_dir=args.checkpoint_dir,
             resume=args.resume,
-            adjacency=args.adjacency,
-            max_fanout=args.max_fanout,
             sources=sources,
         )
         out, summary["supersteps"], summary["converged"] = (
@@ -620,18 +621,6 @@ def main() -> None:
         print(f"single_linkage: n_clusters={res.n_clusters} "
               f"msf_rounds={res.msf_rounds}")
         out = res.clusters
-    elif args.op == "pagerank_csr":
-        from smatchpp_spark.operators.csr import pagerank_csr
-
-        res = pagerank_csr(
-            edges, alpha=args.alpha, tol=args.tol,
-            max_supersteps=args.max_supersteps,
-            checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-            max_fanout=args.max_fanout,
-        )
-        out, summary["supersteps"], summary["converged"] = (
-            res.ranks, res.supersteps, res.converged
-        )
     elif args.op == "hitting":
         from smatchpp_spark.operators.hitting import hitting_times
 

@@ -4,7 +4,7 @@ The companion to incremental computation (operators/incremental.py,
 streaming/ranks.py): given two snapshots of an edge table (yesterday's
 crawl, today's crawl), classify every distinct edge as added / removed
 / kept and aggregate per-vertex degree churn.  This is what decides
-whether a delta is small enough for warm-start correction rounds, and
+whether a delta is small enough for a warm-started recompute, and
 what a crawl-health dashboard aggregates.
 
 Scale shape at 100 TB: one distinct per side + one full-outer join on

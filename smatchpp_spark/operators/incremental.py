@@ -2,44 +2,20 @@
 components updated from a previous snapshot's answers instead of from
 scratch.
 
-The PageRank iteration is affine, ``T(π) = c + Aπ`` with
-``A = α(Pᵀ + dangling·𝟙ᵀ/n)`` and ``c = (1−α)/n·𝟙`` (the exact operator
-of operators/pagerank.py, reference scoring has no counterpart — this
-is a north-rule link-graph operator).  Given any warm start ``π₀``
-(typically the OLD graph's fixpoint) the exact new fixpoint is
+PageRank: ``pagerank_incremental`` is ``pagerank(edges, init=old_ranks)``
+— plain power iteration warm-started from the old graph's fixpoint
+(operators/pagerank.py, the engine's one PageRank).  Ranks of vertices
+absent from the new graph are dropped; new vertices start at 0.0.  The
+fixpoint is unique, so the warm start changes the round count —
+``log(‖δ₀‖₁/tol)/log(1/α)`` instead of ``log(1/tol)/log(1/α)`` from
+scratch — never the answer.
 
-    π = π₀ + Σ_{k≥0} δ_k,   δ₀ = T_new(π₀) − π₀,   δ_{k+1} = A_new δ_k
-
-— plain power iteration from a warm start, but expressed through the
-CORRECTION vector.  That form is what scales: after a localized edge
-delta, ``δ₀`` is nonzero only at vertices whose in-neighborhood or
-out-degree normalization changed, and ``δ_k``'s support grows one hop
-per round while its mass decays by α.  Per-round join work is
-proportional to the ACTIVE support's edge volume (`delta != 0.0`
-filter — exact zeros, not a threshold, so the result is identical to
-full recompute, not an approximation), instead of the full edge set a
-from-scratch run pays every superstep.
-
-Honest caveat (documented, not hidden): a NONZERO delta on a dangling
-vertex redistributes uniformly (the ``α·dm/n`` term), which makes the
-next δ dense — sparsity then degrades to warm-start power iteration,
-which still converges in ``log(‖δ₀‖₁/tol)/log(1/α)`` rounds instead of
-``log(1/tol)/log(1/α)`` from scratch.  On dangling-free graphs (or
-deltas that never touch dangling vertices) the active set stays
-local.
-
-Convergence: ``‖δ_k‖₁ ≤ tol`` — the truncation error of the summed
-tail is bounded by ``‖δ_k‖₁·α/(1−α)``.
-
-Cross-engine determinism: each round is one contribution join + one
-map-side-combined sum + scalar broadcasts — the pagerank.py dataflow —
-so truncated runs replay 1:1 in the DuckDB oracle (the sssp.py
-unrolling contract), including the round-1 full step.
-
-Vertex-set changes are handled by the warm start: ranks of vertices
-absent from the new graph are dropped; new vertices start at 0.0 and
-receive their mass through the correction rounds (the fixpoint is
-unique, so initialization affects round count, never the answer).
+Convergence: ``‖δ_k‖₁ ≤ tol`` with ``δ_k`` the round-k rank change (a
+cold ``pagerank`` stops on ``max |δ_k| ≤ tol`` instead) — the
+truncation error of the summed tail is bounded by
+``‖δ_k‖₁·α/(1−α)``, reported as ``delta_l1``.  A fixed
+``max_supersteps`` with ``tol=-1`` runs the deterministic truncated form
+the DuckDB oracle replays.
 """
 
 from __future__ import annotations
@@ -49,14 +25,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smatchpp_spark.operators.pagerank import _vertices
+from smatchpp_spark.operators.pagerank import pagerank
 from smatchpp_spark.operators.supersteps import SuperstepRunner
 
 
 @dataclass
 class IncrementalPageRankResult:
     ranks: DataFrame  # (vertex, rank) on the NEW graph
-    state: DataFrame  # (vertex, dangling, rank, delta) — last δ exposed
     delta_l1: float  # ‖δ‖₁ of the last round (tail bound × α/(1−α))
     supersteps: int
     converged: bool
@@ -76,155 +51,21 @@ def pagerank_incremental(
 ) -> IncrementalPageRankResult:
     """PageRank of the (new) graph ``edges`` starting from ``old_ranks``
     (columns: vertex, rank — extra columns ignored).  Semantics match
-    ``pagerank(edges, alpha=alpha)`` exactly at convergence; a fixed
-    ``max_supersteps`` with ``tol=-1`` runs the deterministic truncated
-    form the oracle replays.  Unweighted, unpersonalized (compose the
-    warm start with those variants once they need deltas)."""
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    out_deg = edges.groupBy(F.col("src").alias("vertex")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    vertices = (
-        _vertices(edges)
-        .join(out_deg, "vertex", "left")
-        .select("vertex", F.col("out_deg").isNull().alias("dangling"))
-        .repartition(num_partitions, "vertex")
-        .persist()
-    )
-    n = vertices.count()
-    if n == 0:
-        empty = spark.createDataFrame([], "vertex string, rank double")
-        return IncrementalPageRankResult(
-            ranks=empty,
-            state=empty,
-            delta_l1=0.0,
-            supersteps=0,
-            converged=True,
-            metrics=[],
-        )
-    # static contribution side: hash-partitioned by src once, persisted
-    # (the pagerank.py pattern — only the delta side reshuffles)
-    contrib_edges = (
-        edges.select("src", "dst")
-        .join(out_deg.withColumnRenamed("vertex", "src"), "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-        .repartition(num_partitions, "src")
-        .persist()
-    )
-    contrib_edges.count()
-
-    warm = old_ranks.select(
-        F.col("vertex"), F.col("rank").cast("double").alias("old_rank")
-    )
-    init = vertices.join(warm, "vertex", "left").select(
-        "vertex",
-        "dangling",
-        F.coalesce("old_rank", F.lit(0.0)).alias("rank"),
-        F.lit(float("nan")).alias("delta"),
-    )
-
-    def step(state: DataFrame, k: int) -> DataFrame:
-        if k == 1:
-            # round 1: one FULL step T_new(π₀) — the pagerank.py
-            # arithmetic verbatim; δ₁ = T_new(π₀) − π₀
-            dm_df = state.filter("dangling").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-            )
-            base_df = dm_df.select(
-                (
-                    F.lit((1.0 - alpha) / n)
-                    + F.lit(alpha) * F.col("dm") / F.lit(float(n))
-                ).alias("base")
-            )
-            contribs = (
-                state.select(F.col("vertex").alias("src"), "rank")
-                .join(contrib_edges, "src")
-                .groupBy(F.col("dst").alias("vertex"))
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("in_sum"))
-            )
-            return (
-                state.select(
-                    "vertex", "dangling", F.col("rank").alias("old_rank")
-                )
-                .join(contribs, "vertex", "left")
-                .crossJoin(F.broadcast(base_df))
-                .select(
-                    "vertex",
-                    "dangling",
-                    (
-                        F.col("base")
-                        + F.lit(alpha) * F.coalesce("in_sum", F.lit(0.0))
-                    ).alias("rank"),
-                    (
-                        (
-                            F.col("base")
-                            + F.lit(alpha) * F.coalesce("in_sum", F.lit(0.0))
-                        )
-                        - F.col("old_rank")
-                    ).alias("delta"),
-                )
-            )
-        # rounds ≥ 2: δ' = A δ over the ACTIVE support only
-        act = state.filter(F.col("delta") != 0.0)
-        dm_df = act.filter("dangling").agg(
-            F.coalesce(F.sum("delta"), F.lit(0.0)).alias("dm")
-        )
-        unif_df = dm_df.select(
-            (F.lit(alpha) * F.col("dm") / F.lit(float(n))).alias("unif")
-        )
-        contribs = (
-            act.select(F.col("vertex").alias("src"), "delta")
-            .join(contrib_edges, "src")
-            .groupBy(F.col("dst").alias("vertex"))
-            .agg(F.sum(F.col("delta") * F.col("w")).alias("in_sum"))
-        )
-        return (
-            state.select("vertex", "dangling", "rank")
-            .join(contribs, "vertex", "left")
-            .crossJoin(F.broadcast(unif_df))
-            .select(
-                "vertex",
-                "dangling",
-                (
-                    F.col("rank")
-                    + F.col("unif")
-                    + F.lit(alpha) * F.coalesce("in_sum", F.lit(0.0))
-                ).alias("rank"),
-                (
-                    F.col("unif")
-                    + F.lit(alpha) * F.coalesce("in_sum", F.lit(0.0))
-                ).alias("delta"),
-            )
-        )
-
-    runner = SuperstepRunner(
-        spark,
-        op="pagerank_incremental",
-        checkpoint_dir=checkpoint_dir,
-        max_supersteps=max_supersteps,
+    ``pagerank(edges, alpha=alpha)`` exactly at convergence."""
+    res = pagerank(
+        edges,
+        alpha=alpha,
         tol=tol,
-        input_lineage=input_lineage,
-    )
-    res = runner.run(
-        init,
-        step,
-        lambda old, new: float(
-            new.agg(F.coalesce(F.sum(F.abs("delta")), F.lit(0.0))).collect()[
-                0
-            ][0]
-        ),
+        max_supersteps=max_supersteps,
+        checkpoint_dir=checkpoint_dir,
         resume=resume,
+        num_partitions=num_partitions,
+        input_lineage=input_lineage,
+        init=old_ranks,
     )
-    vertices.unpersist()
-    contrib_edges.unpersist()
-    last_l1 = res.metrics[-1]["delta"] if res.metrics else 0.0
     return IncrementalPageRankResult(
-        ranks=res.state.select("vertex", "rank"),
-        state=res.state,
-        delta_l1=float(last_l1),
+        ranks=res.ranks,
+        delta_l1=float(res.metrics[-1]["delta"]) if res.metrics else 0.0,
         supersteps=res.supersteps,
         converged=res.converged,
         metrics=res.metrics,

@@ -1,12 +1,28 @@
-"""Power-iteration PageRank over the global edge table.
+"""Power-iteration PageRank over the global edge table — the engine's one
+PageRank: cold, warm-started (``init=``, the incremental update),
+personalized (``sources=``) and weighted (``weight_col=``) runs share
+this dataflow.
 
 Semantics (held to allclose 1e-6 against a numpy power-iteration oracle):
   * vertices = distinct endpoints of ``edges(src, dst)``;
   * multi-edges count with multiplicity (out-degree too);
   * dangling mass (out-degree-0 vertices) is redistributed uniformly;
   * ``rank' = (1-α)/N + α·(Σ_in contrib + dangling_mass/N)``;
-  * stop at ``max |Δrank| < tol`` (default 1e-10, leaving ~4 digits of
-    headroom under the 1e-6 parity bar regardless of summation order).
+  * the start vector is uniform (the teleport vector when personalized),
+    or ``init``'s ranks: vertices missing from ``init`` start at 0.0 and
+    ``init`` rows for vertices not in the graph are dropped.  The
+    fixpoint is unique, so the start changes the round count, never the
+    answer.
+
+Stopping rules (``tol < 0`` runs exactly ``max_supersteps`` rounds):
+  * cold: ``max |Δrank| ≤ tol`` (default 1e-10, leaving ~4 digits of
+    headroom under the 1e-6 parity bar regardless of summation order);
+  * warm-started: ``‖Δrank‖₁ ≤ tol``.  Successive deltas contract by α
+    in L1, so the distance to the fixpoint is at most
+    ``‖Δ‖₁·α/(1−α)`` — the tail bound incremental callers check.
+  The step's delta, and the dangling mass the next step needs, are
+  collected by an Observation on each step's materialization job:
+  convergence costs no extra job.
 
 Physical shape per superstep (two shuffles, the Spark minimum for this
 dataflow):
@@ -28,6 +44,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from smatchpp_spark.operators.supersteps import SuperstepRunner
 
@@ -40,14 +57,6 @@ class PageRankResult:
     metrics: list
 
 
-def _vertices(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("vertex"))
-        .unionByName(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
-
-
 def pagerank(
     edges: DataFrame,
     alpha: float = 0.85,
@@ -57,27 +66,11 @@ def pagerank(
     resume: bool = False,
     num_partitions: int | None = None,
     input_lineage: str = "",
-    adjacency: bool = False,
-    max_fanout: int = 100_000,
     sources: "list | DataFrame | None" = None,
     weight_col: str | None = None,
+    init: DataFrame | None = None,
 ) -> PageRankResult:
-    """``adjacency=True`` stores the static join side pre-grouped: one row
-    per (src, hub-bucket) with a dst array instead of one row per edge,
-    expanding to |E| inside the stage via ``explode`` (narrow, no extra
-    exchange) before the map-side-combined dst aggregation.  Hub sources
-    are salted into buckets of ≤ ``max_fanout`` dsts so no row exceeds
-    array bounds at web scale.
-
-    Measured on this box (19.2M edges, 5 supersteps): per-edge 1.75M
-    edges/s @4 cores / 2.40M @32; adjacency 1.35M / 1.91M — the
-    collect_list build + Generate node costs more than the per-row
-    overhead it saves, because the per-edge static table is already
-    hash-partitioned once and never reshuffles.  Per-edge is therefore
-    the default; adjacency remains for memory-bound static tables (array
-    rows compress the src column away) and is held to the same oracle.
-
-    ``sources`` switches to PERSONALIZED PageRank: the teleport vector is
+    """``sources`` switches to PERSONALIZED PageRank: the teleport vector is
     uniform over the source set (a small Python list inlined as a
     predicate, or a DataFrame of vertex ids joined in — use the DataFrame
     form when the set itself is big).  Initial rank, the (1-α) restart
@@ -88,13 +81,18 @@ def pagerank(
     ``weight_col`` switches to WEIGHTED PageRank: a source distributes
     its rank proportionally to its positive edge weights (w_e / Σ_src w)
     instead of uniformly.  Weights must be positive (callers filter).
-    Composes with ``sources``; not with ``adjacency``."""
+    Composes with ``sources``.
+
+    ``init`` WARM-STARTS the iteration from a ``(vertex, rank)`` frame
+    (extra columns ignored), typically the previous snapshot's ranks;
+    convergence is then judged on ``‖Δ‖₁`` and every superstep's
+    ``metrics`` record carries that L1 delta (the module docstring has
+    both stopping rules).  Composes with ``sources`` and ``weight_col``."""
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     personalized = sources is not None
-    if weight_col is not None and adjacency:
-        raise ValueError("weight_col does not compose with adjacency=True")
+    warm = init is not None
 
     # vertex set, out-degree and the dangling flag all come out of ONE
     # union-aggregation over the endpoint projections (dst rows
@@ -150,52 +148,22 @@ def pagerank(
     # forcing count also materializes the vdeg cache it joins, so the
     # vertex count below is a cached scan instead of a second
     # cache-building job.
-    if adjacency:
-        contrib_edges = (
-            edges.select("src", "dst")
-            .join(out_deg.withColumnRenamed("vertex", "src"), "src")
-            .withColumn(
-                "bkt",
-                F.pmod(
-                    F.xxhash64("dst"),
-                    F.greatest(
-                        F.lit(1).cast("long"),
-                        F.ceil(F.col("out_deg") / F.lit(max_fanout)).cast("long"),
-                    ),
-                ),
-            )
-            .groupBy("src", "bkt", "out_deg")
-            .agg(F.collect_list("dst").alias("dsts"))
-            .drop("bkt")
-            .repartition(num_partitions, "src")
-            .sortWithinPartitions("src")
-            .persist()
+    if weight_col is not None:
+        contrib_edges = edges.select(
+            "src", "dst", F.col(weight_col).cast("double").alias("ew")
+        ).join(out_deg.withColumnRenamed("vertex", "src"), "src").select(
+            "src", "dst", (F.col("ew") / F.col("out_w")).alias("w")
         )
-        n_edges = (
-            contrib_edges.agg(F.sum(F.size("dsts"))).collect()[0][0] or 0
-        )  # also forces the persist
-    elif weight_col is not None:
-        contrib_edges = (
-            edges.select(
-                "src", "dst", F.col(weight_col).cast("double").alias("ew")
-            )
-            .join(out_deg.withColumnRenamed("vertex", "src"), "src")
-            .select("src", "dst", (F.col("ew") / F.col("out_w")).alias("w"))
-            .repartition(num_partitions, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
-        n_edges = contrib_edges.count()
     else:
-        contrib_edges = (
-            edges.select("src", "dst")
-            .join(out_deg.withColumnRenamed("vertex", "src"), "src")
-            .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-            .repartition(num_partitions, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
-        n_edges = contrib_edges.count()
+        contrib_edges = edges.select("src", "dst").join(
+            out_deg.withColumnRenamed("vertex", "src"), "src"
+        ).select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
+    contrib_edges = (
+        contrib_edges.repartition(num_partitions, "src")
+        .sortWithinPartitions("src")
+        .persist()
+    )
+    n_edges = contrib_edges.count()
 
     if personalized:
         row = vertices.agg(
@@ -210,35 +178,49 @@ def pagerank(
     if n == 0:
         contrib_edges.unpersist()
         vdeg.unpersist()
+        schema = StructType([
+            StructField("vertex", edges.schema["src"].dataType),
+            StructField("rank", DoubleType()),
+        ])
         return PageRankResult(
-            ranks=spark.createDataFrame([], "vertex long, rank double"),
+            ranks=spark.createDataFrame([], schema),
             supersteps=0,
             converged=True,
             metrics=[],
         )
 
-    # FIXED-STEP MODE (tol < 0, the bench + fixed-K contract shape): no
-    # convergence delta is ever consulted, so the state carries only
-    # (vertex, [tp,] rank) and the per-step rebuild joins the PERSISTED
-    # vertex table (hash-clustered + sorted, zero exchange on that side)
-    # with the fresh contributions — the convergence path's per-step
-    # exchange+sort of the checkpointed state and its prev_rank column
-    # disappear.  Rank values are identical: same join rows, same
-    # formula, only the dataflow differs.
-    fixed_steps = tol < 0
+    # FIXED-STEP MODE (cold with tol < 0, the bench + fixed-K contract
+    # shape): no convergence delta is ever consulted, so the state
+    # carries only (vertex, [tp,] rank) and the per-step rebuild joins
+    # the PERSISTED vertex table (hash-clustered + sorted, zero exchange
+    # on that side) with the fresh contributions — the convergence
+    # path's per-step exchange+sort of the checkpointed state and its
+    # prev_rank column disappear.  Rank values are identical: same join
+    # rows, same formula, only the dataflow differs.  Warm-started runs
+    # always carry prev_rank: their callers read the last round's L1
+    # delta (the tail bound) even on a fixed-K run.
+    fixed_steps = tol < 0 and not warm
     if personalized:
         tp = F.when(F.col("is_src"), F.lit(1.0 / n_src)).otherwise(F.lit(0.0))
         static_vertices = vertices.select("vertex", "dangling", tp.alias("tp"))
-        init = static_vertices.select(
-            "vertex", "dangling", "tp", F.col("tp").alias("rank"),
-        )
+        rank0 = F.col("tp")
     else:
         static_vertices = vertices
-        init = static_vertices.select(
-            "vertex", "dangling", F.lit(1.0 / n).alias("rank"),
+        rank0 = F.lit(1.0 / n)
+    carry = ["vertex", "dangling", "tp"] if personalized else [
+        "vertex", "dangling"
+    ]
+    start = static_vertices
+    if warm:
+        start = start.join(
+            init.select("vertex", F.col("rank").cast("double").alias("_warm")),
+            "vertex",
+            "left",
         )
+        rank0 = F.coalesce("_warm", F.lit(0.0))
+    state0 = start.select(*carry, rank0.alias("rank"))
     if not fixed_steps:
-        init = init.withColumn("prev_rank", F.lit(float("nan")))
+        state0 = state0.withColumn("prev_rank", F.lit(float("nan")))
 
     # the dangling mass of state k-1 and the convergence delta of state k
     # are both collected FOR FREE via an Observation attached to each
@@ -283,40 +265,19 @@ def pagerank(
         # bench); a sort-merge join against the pre-sorted persisted
         # edge table only exchanges+sorts the small rank side, and at
         # web scale a V-row broadcast is impossible anyway.
-        if adjacency:
-            contribs = (
-                state.select(F.col("vertex").alias("src"), "rank")
-                .hint("merge")
-                .join(contrib_edges, "src")
-                .select(
-                    F.explode("dsts").alias("vertex"),
-                    # rank * (1/deg), NOT rank/deg: keeps the multiply
-                    # bit-identical with the per-edge path and the SQL
-                    # oracle's `rank * w`
-                    (F.col("rank") * (F.lit(1.0) / F.col("out_deg"))).alias(
-                        "contrib"
-                    ),
-                )
-                .groupBy("vertex")
-                .agg(F.sum("contrib").alias("in_sum"))
-            )
-        else:
-            contribs = (
-                state.select(F.col("vertex").alias("src"), "rank")
-                .hint("merge")
-                .join(contrib_edges, "src")
-                .groupBy(F.col("dst").alias("vertex"))
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("in_sum"))
-            )
+        contribs = (
+            state.select(F.col("vertex").alias("src"), "rank")
+            .hint("merge")
+            .join(contrib_edges, "src")
+            .groupBy(F.col("dst").alias("vertex"))
+            .agg(F.sum(F.col("rank") * F.col("w")).alias("in_sum"))
+        )
         rank_expr = (
             F.lit(base) * F.col("tp")
             + F.lit(alpha) * F.coalesce("in_sum", F.lit(0.0))
         ) if personalized else (
             F.lit(base) + F.lit(alpha) * F.coalesce("in_sum", F.lit(0.0))
         )
-        carry = ["vertex", "dangling", "tp"] if personalized else [
-            "vertex", "dangling"
-        ]
         if fixed_steps:
             # contribs is also V-scale — merge-join it against the
             # cached sorted vertex table rather than re-broadcasting a
@@ -337,24 +298,24 @@ def pagerank(
                 F.col("old_rank").alias("prev_rank"),
             )
         )
+        step_delta = F.abs(F.col("rank") - F.col("prev_rank"))
+        delta = F.sum(step_delta) if warm else F.max(step_delta)
         obs = Observation()
-        new_state = new_state.observe(
-            obs,
-            F.max(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta"),
-            dm_expr,
-        )
+        new_state = new_state.observe(obs, delta.alias("delta"), dm_expr)
         return new_state, obs, _observed_delta
 
     runner = SuperstepRunner(
         spark,
-        op="pagerank",
+        # warm runs commit under their own checkpoint subtree, so a
+        # resume never picks up a cold run's state (or vice versa)
+        op="pagerank_incremental" if warm else "pagerank",
         checkpoint_dir=checkpoint_dir,
         max_supersteps=max_supersteps,
         tol=tol,
         input_lineage=input_lineage,
     )
     result = runner.run(
-        init,
+        state0,
         step,
         None,
         edges_processed_per_step=n_edges,

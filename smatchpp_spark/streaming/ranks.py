@@ -6,9 +6,9 @@ graph state: per micro-batch, ``foreachBatch`` (exactly-once per
 ``batch_id`` under the SS checkpoint) appends the batch's edges to a
 batch-id-keyed accumulator and recomputes ranks on the graph-so-far
 with ``pagerank_incremental``, warm-started from the previous batch's
-ranks — so each micro-batch pays correction rounds proportional to how
-much the new edges actually perturb the ranking (rounds ∝ log‖δ₀‖₁),
-not a from-scratch power iteration.
+ranks — so each micro-batch pays power-iteration rounds proportional to
+how much the new edges actually perturb the ranking (rounds ∝
+log(‖δ₀‖₁/tol)), not a from-scratch run.
 
 Crash semantics: BOTH sinks are keyed by ``batch_id`` and overwritten
 on replay (edges under ``edges/batch=<id>``, ranks under
@@ -22,8 +22,8 @@ Scale shape: the accumulated edge table is the same static side the
 batch operator builds; at 10^12 edges the per-batch rebuild of the
 contribution table is the dominated cost and would move to an
 incremental (appended-partition) build — documented here, not hidden:
-the ranks math is already delta-shaped, the contrib build is the
-remaining O(E) pass per batch.
+the warm start cuts the rounds, but every round and the contrib build
+still pass over the whole accumulated edge set.
 """
 
 from __future__ import annotations

@@ -296,26 +296,6 @@ def test_metrics_and_lineage_recorded(spark):
     assert records[-1]["delta"] == 0.0
 
 
-def test_pagerank_adjacency_path_matches_per_edge(spark):
-    """The pre-grouped adjacency variant (hub-salted dst arrays + explode)
-    must produce ranks allclose the per-edge default on a skewed graph,
-    including with max_fanout small enough to force hub bucketing."""
-    from smatchpp_spark.operators.pagerank import pagerank
-
-    pairs = powerlaw_graph()
-    per_edge = pagerank(
-        _edges_df(spark, pairs), tol=-1.0, max_supersteps=5, adjacency=False
-    )
-    adj = pagerank(
-        _edges_df(spark, pairs), tol=-1.0, max_supersteps=5,
-        adjacency=True, max_fanout=8,
-    )
-    a = {r.vertex: r.rank for r in per_edge.ranks.collect()}
-    b = {r.vertex: r.rank for r in adj.ranks.collect()}
-    assert set(a) == set(b)
-    assert max(abs(a[v] - b[v]) for v in a) < 1e-12
-
-
 def test_two_phase_components_matches_oracle_and_hashmin(spark):
     from smatchpp_spark.operators.components import (
         connected_components,
@@ -541,9 +521,6 @@ def test_weighted_pagerank_vs_numpy(spark):
     gw = {r["vertex"]: r["rank"] for r in w1.ranks.collect()}
     assert max(abs(gu[v] - gw[v]) for v in gu) < 1e-12
 
-    with pytest.raises(ValueError):
-        pagerank(edges, weight_col="wt", adjacency=True)
-
 
 def test_triangle_count_approx_deterministic_and_unbiased(spark):
     """DOULION sampling: p=1 reproduces the exact counts; at p<1 the
@@ -648,11 +625,8 @@ def test_row_count_delta_reuses_prior_count(spark, monkeypatch):
 
 
 def test_pagerank_variant_compositions_vs_numpy(spark):
-    """The two untested compositions (VERDICT r3 #3): (a) personalized +
-    adjacency storage must match the per-edge personalized path exactly
-    (same dataflow, different static-side layout); (b) weighted +
-    personalized matches a numpy power iteration combining both
-    semantics."""
+    """Weighted + personalized matches a numpy power iteration combining
+    both semantics."""
     from smatchpp_spark.operators.pagerank import pagerank
 
     rng = np.random.RandomState(17)
@@ -662,20 +636,6 @@ def test_pagerank_variant_compositions_vs_numpy(spark):
     W = {e: float(rng.randint(1, 5)) for e in E}
     S = ["1", "4", "9"]
 
-    # (a) personalized + adjacency == personalized per-edge
-    edges = spark.createDataFrame(
-        [(str(a), str(b)) for a, b in E], "src string, dst string"
-    )
-    per_edge = pagerank(edges, alpha=0.85, tol=-1.0, max_supersteps=8, sources=S)
-    adj = pagerank(
-        edges, alpha=0.85, tol=-1.0, max_supersteps=8, sources=S, adjacency=True
-    )
-    g1 = {r["vertex"]: r["rank"] for r in per_edge.ranks.collect()}
-    g2 = {r["vertex"]: r["rank"] for r in adj.ranks.collect()}
-    assert set(g1) == set(g2)
-    assert max(abs(g1[v] - g2[v]) for v in g1) < 1e-12
-
-    # (b) weighted + personalized vs numpy
     wedges = spark.createDataFrame(
         [(str(a), str(b), W[(a, b)]) for a, b in E],
         "src string, dst string, wt double",

@@ -349,11 +349,6 @@ def main() -> None:
             weight_col="wt",
         ).ranks.agg(F.sum("rank")).collect())
 
-        from smatchpp_spark.operators.csr import pagerank_csr
-
-        timed("pagerank_csr", scale, lambda: pagerank_csr(
-            e_op, alpha=0.85, tol=-1.0, max_supersteps=PR_SUPERSTEPS
-        ).ranks.agg(F.sum("rank")).collect())
         timed("degrees", scale, lambda: degrees(e_op).count())
         timed("connected_components", scale, lambda: connected_components(
             inp["e_cust"]
@@ -931,11 +926,10 @@ def main() -> None:
         from smatchpp_spark.operators.incremental import pagerank_incremental
         from smatchpp_spark.operators.pagerank import pagerank
 
-        # warm-start correction rounds: the delta side of the per-round
-        # join is the ACTIVE support only — after the one full step,
-        # rounds cost O(touched volume), so expect well under the
-        # pagerank_10steps profile (the warm start itself is untimed:
-        # it models yesterday's stored ranks)
+        # warm-started pagerank: the pagerank superstep dataflow plus an
+        # L1 delta in the same observed aggregation — expect the
+        # pagerank_10steps per-round profile (the warm start itself is
+        # untimed: it models yesterday's stored ranks)
         _warm = pagerank(
             e_op, tol=-1.0, max_supersteps=5
         ).ranks.localCheckpoint(eager=True)
@@ -1349,11 +1343,9 @@ def main() -> None:
         "  count halves) then hash-min CC over ≤V−1 FOREST edges (not",
         "  the full edge set) — the Gower–Ross identity is the scale",
         "  mechanism; extra thresholds reuse the forest for free.",
-        "* **pagerank_incremental4** — warm-start correction rounds:",
-        "  round 1 is one full step, later rounds join only the",
-        "  delta<>0 active support against the static contrib side;",
-        "  a localized graph delta keeps that support seed-local (the",
-        "  dangling-delta caveat is in the module docstring).",
+        "* **pagerank_incremental4** — pagerank(init=warm ranks): the",
+        "  pagerank superstep, warm-started; per round it tracks the",
+        "  pagerank_10steps profile, and the warm start cuts rounds.",
         "* **fastrp_d8** — hash-seeded projection + per-hop D⁻¹A",
         "  multiply: the pagerank superstep with 8 accumulator columns",
         "  (state V×8 doubles, all sums map-side-combined); no",

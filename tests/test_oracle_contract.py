@@ -1,8 +1,11 @@
-"""DuckDB oracle gate for the core link-graph operators: each named
-``__spark_entry__.queries()`` entry runs on the session Spark fixture and
-must equal its ``oracle_sql()`` replay row for row (columns sorted by
-name, floats rounded to 9 dp — the same comparison as
-tools/check_contract.py, whose ``normalize`` is reused here).
+"""Contract gate for the scoring path and the core link-graph operators:
+each named ``__spark_entry__.queries()`` entry runs on the session Spark
+fixture and must equal its ``oracle_sql()`` replay in DuckDB row for row
+(columns sorted by name, floats rounded to 9 dp — the same comparison as
+tools/check_contract.py, whose ``normalize`` is reused here). The two
+full parse → standardize → align → score queries have no SQL oracle;
+their rows must hash to the archived ``tools/golden_hashes.json`` entry
+for the scale factor, as in tools/check_contract.py.
 
 Runs on the parquet tables under the ``sf_dir`` fixture
 (``SPARK_GRAFT_TEST_SF_DIR``); skips when they are absent."""
@@ -24,6 +27,13 @@ check_contract = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(check_contract)
 
 QUERIES = [
+    "relabel_vars",
+    "concept_as_root",
+    "dereify_triples",
+    "reify_attributes",
+    "reify_edges",
+    "micro_macro_scores",
+    "pairwise_scores",
     "pagerank_fixed",
     "pagerank_incremental",
     "connected_components",
@@ -32,6 +42,8 @@ QUERIES = [
     "triangle_counts",
     "graph_snapshot_diff",
 ]
+
+GOLDEN_QUERIES = ["amr_standardize_sizes", "smatch_micro_macro"]
 
 
 @pytest.fixture(scope="module")
@@ -69,3 +81,20 @@ def test_query_matches_duckdb_oracle(spark, sf_dir, duck, contract, name):
     want = check_contract.normalize(drows, dcols)
     diffs = [(a, b) for a, b in zip(got, want) if a != b]
     assert not diffs, f"{name}: {len(diffs)} of {len(got)} rows differ; first {diffs[0]}"
+
+
+@pytest.mark.parametrize("name", GOLDEN_QUERIES)
+def test_query_matches_golden_hash(spark, sf_dir, duck, contract, name):
+    import json
+
+    queries, oracles = contract
+    assert name not in oracles
+    sf_key = os.path.basename(sf_dir.rstrip("/"))
+    with open(check_contract.GOLDEN_PATH) as fh:
+        gold = json.load(fh).get(name, {}).get(sf_key)
+    if gold is None:
+        pytest.skip(f"no golden hash for {name} at {sf_key}")
+    sdf = queries[name](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    assert srows, f"{name}: empty result proves nothing"
+    assert check_contract._rows_hash(srows, sdf.columns) == gold

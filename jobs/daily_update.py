@@ -17,7 +17,7 @@ Each run:
      buys rounds);
   4. commits the new snapshot/labels/ranks under
      ``state-dir/run=<n>`` with _SUCCESS-gated reads, so a crashed run
-     never corrupts yesterday's state (the streaming/ranks.py layout).
+     never corrupts yesterday's state.
 
 First run (empty state dir) does cold CC + cold-equivalent PageRank
 and seeds the state.  Emits ONE JSON summary line (the jobs/

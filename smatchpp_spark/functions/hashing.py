@@ -1,4 +1,5 @@
-"""Hash helpers shared by dedup / fingerprint / similarity operators.
+"""Hash helpers shared by the hash-seeded operators (sampling, random
+draws, deterministic tie-breaks).
 
 Two tiers:
 
@@ -6,7 +7,7 @@ Two tiers:
   production default for 100 TB runs.
 * ``portable_hash64`` — first 15 hex chars of md5 → 60-bit non-negative
   int.  Bit-identical in Spark and DuckDB (and most engines), so every
-  hash-derived operator (minhash, simhash, LSH bands, fingerprints) can be
+  hash-derived operator (sampled draws, walks, tie-breaks) can be
   cross-checked by the driver's DuckDB oracle.  ~2-3× slower than xxhash64
   but still JVM-side and codegen-friendly.
 

@@ -1,7 +1,7 @@
 """Graph snapshot diff — the audit operator for evolving link graphs.
 
 The companion to incremental computation (operators/incremental.py,
-streaming/ranks.py): given two snapshots of an edge table (yesterday's
+jobs/daily_update.py): given two snapshots of an edge table (yesterday's
 crawl, today's crawl), classify every distinct edge as added / removed
 / kept and aggregate per-vertex degree churn.  This is what decides
 whether a delta is small enough for a warm-started recompute, and

@@ -7,12 +7,15 @@ full parse → standardize → align → score queries have no SQL oracle;
 their rows must hash to the archived ``tools/golden_hashes.json`` entry
 for the scale factor, as in tools/check_contract.py.
 
-Runs on the parquet tables under the ``sf_dir`` fixture
-(``SPARK_GRAFT_TEST_SF_DIR``); skips when they are absent."""
+The oracle cases run on the parquet tables under the ``sf_dir`` fixture
+(``SPARK_GRAFT_TEST_SF_DIR``) and skip when they are absent; the golden
+cases generate their own corpora and skip when no hash is archived for
+the ``sf_dir`` scale."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
 import pytest
@@ -84,9 +87,7 @@ def test_query_matches_duckdb_oracle(spark, sf_dir, duck, contract, name):
 
 
 @pytest.mark.parametrize("name", GOLDEN_QUERIES)
-def test_query_matches_golden_hash(spark, sf_dir, duck, contract, name):
-    import json
-
+def test_query_matches_golden_hash(spark, sf_dir, contract, name):
     queries, oracles = contract
     assert name not in oracles
     sf_key = os.path.basename(sf_dir.rstrip("/"))

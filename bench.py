@@ -50,6 +50,7 @@ def main() -> None:
     from smatchpp_spark.operators.pagerank import pagerank
     from smatchpp_spark.operators.standardize import amr_standardize
     from smatchpp_spark.operators.triangles import triangle_count
+    from smatchpp_spark.pipeline import dedup, similarity
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
@@ -128,6 +129,20 @@ def main() -> None:
 
         corpus = corpus_dataframe(spark, 2000, seed=42)
         return amr_standardize(parse_edges(corpus)).count()
+
+    @timed("doc_neardup")
+    def _nd():
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        return dedup.neardup_pairs_jaccard(
+            docs, threshold=0.5, num_hashes=8, band_size=2
+        ).count()
+
+    @timed("emb_topk")
+    def _topk():
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        return similarity.cosine_topk(
+            emb, emb.filter(F.col("vec_id") % 50 == 0), k=5
+        ).count()
 
     e_op.unpersist()
     total = round(sum(timings.values()), 3)

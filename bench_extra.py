@@ -74,6 +74,7 @@ def main() -> None:
     from smatchpp_spark.operators.pagerank import pagerank
     from smatchpp_spark.operators.standardize import amr_standardize
     from smatchpp_spark.operators.triangles import triangle_count
+    from smatchpp_spark.pipeline import dedup, similarity
     from smatchpp_spark.sources.penman import parse_edges
 
     # same untimed warmup as bench.py
@@ -113,6 +114,20 @@ def main() -> None:
         d = amr_standardize(parse_edges(corpus))
         return d, d.count()
 
+    def q_neardup():
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        d = dedup.neardup_pairs_jaccard(
+            docs, threshold=0.5, num_hashes=8, band_size=2
+        )
+        return d, d.count()
+
+    def q_topk():
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        d = similarity.cosine_topk(
+            emb, emb.filter(F.col("vec_id") % 50 == 0), k=5
+        )
+        return d, d.count()
+
     queries = {
         "pagerank_10steps": q_pagerank,
         "degrees": q_degrees,
@@ -120,6 +135,8 @@ def main() -> None:
         "label_propagation_5steps": q_lpa,
         "triangle_counts": q_tri,
         "parse_standardize_2k": q_parse,
+        "doc_neardup": q_neardup,
+        "emb_topk": q_topk,
     }
 
     timings: dict[str, float] = {}

@@ -4,7 +4,9 @@ Re-expresses the capabilities of flipz357/smatchpp (semantic-graph parsing,
 standardization, de/reification, pairwise alignment scoring, corpus
 statistics) as bulk DataFrame operators over a global edge table
 ``(graph_id, src, rel, dst)``, and adds the iterative link-graph operators
-(PageRank, connected components, label propagation, triangle counting).
+(PageRank, connected components, label propagation, triangle counting)
+plus large-scale training-data pipeline operators (dedup, similarity
+search, text analysis).
 
 Everything is DataFrame-first: Catalyst plans the physical execution; the
 only Python on the hot path is vectorized Arrow UDFs (``mapInPandas`` /

@@ -1,5 +1,4 @@
-"""Hash helpers shared by the hash-seeded operators (sampling, random
-draws, deterministic tie-breaks).
+"""Hash helpers shared by dedup / fingerprint / similarity operators.
 
 Two tiers:
 
@@ -7,7 +6,7 @@ Two tiers:
   production default for 100 TB runs.
 * ``portable_hash64`` — first 15 hex chars of md5 → 60-bit non-negative
   int.  Bit-identical in Spark and DuckDB (and most engines), so every
-  hash-derived operator (sampled draws, walks, tie-breaks) can be
+  hash-derived operator (minhash, simhash, LSH bands, fingerprints) can be
   cross-checked by the driver's DuckDB oracle.  ~2-3× slower than xxhash64
   but still JVM-side and codegen-friendly.
 

@@ -1,2 +1,2 @@
 """Bulk operators: rewrites, degrees, subgraphs, iterative link-graph ops,
-alignment/scoring kernels."""
+alignment/scoring kernels, dedup/similarity/text pipeline operators."""

@@ -26,8 +26,8 @@ bug and an oracle bug cannot cancel.
 ``single_linkage_k`` (cut to a target cluster count) drops the k−c₀
 heaviest forest edges by the total order (weight, a, b) — ties are
 broken deterministically, and the edges are driver-collected only when
-k is small, to ship back as plan literals; the threshold form never
-collects.
+k is small (the IVF-codebook literal-shipping pattern,
+pipeline/similarity.py); the threshold form never collects.
 
 Beyond the reference's operator set (its 20-node AMRs need no
 clustering); contract style follows operators/msf.py.

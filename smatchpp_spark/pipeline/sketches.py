@@ -204,7 +204,7 @@ def hll_register_table(
     iterates (operators/hyperball.py), aggregated once over a static
     key stream.  This table IS the mergeable sketch state: shard tables
     union + re-max to the merged sketch, and the aggregation is
-    streaming-legal as-is (bounded state — see streaming/sketches.py).
+    streaming-legal as-is (bounded state).
     """
     m = 1 << p
     bits = 60 if portable else 64

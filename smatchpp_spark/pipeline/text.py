@@ -674,11 +674,9 @@ def backoff_lm_scores(
     (the trusted corpus — CCNet trains on Wikipedia) scores every doc
     in ``docs`` (the crawl) — low log-probability per transition ≈
     low-quality / out-of-domain text.  Counts replace the trained KenLM
-    so everything stays deterministic and SQL-replayable.  Contrast
-    ``relevance.bigram_lm_scores``: that one is the SAME-corpus
-    add-alpha likelihood (self-consistency signal, no reference); this
-    one is reference-trained with explicit OOV backoff mass — the
-    filter that separates in-domain from out-of-domain text.
+    so everything stays deterministic and SQL-replayable.  The model
+    is reference-trained with explicit OOV backoff mass — the filter
+    that separates in-domain from out-of-domain text.
 
       P(w|v) = c(v,w) / c(v)                 if c(v,w) > 0
              = backoff · (c(w)+1)/(N+V+1)    otherwise (add-one unigram,

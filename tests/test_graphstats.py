@@ -967,48 +967,3 @@ def test_powerlaw_fit_recovers_exponent(spark):
 
     row = powerlaw_fit(df, d_min=d_min).collect()[0]
     assert abs(row["alpha"] - alpha) < 0.15
-
-
-def _py_spearman(xy):
-    def avg_ranks(vals):
-        s = sorted(vals)
-        first = {}
-        for i, v in enumerate(s):
-            first.setdefault(v, i)
-        cnt = {}
-        for v in vals:
-            cnt[v] = cnt.get(v, 0) + 1
-        return [first[v] + (cnt[v] + 1) / 2 for v in vals]
-
-    rx = avg_ranks([x for x, _ in xy])
-    ry = avg_ranks([y for _, y in xy])
-    n = len(xy)
-    mx, my = sum(rx) / n, sum(ry) / n
-    num = sum((a - mx) * (b - my) for a, b in zip(rx, ry))
-    dx = math.sqrt(sum((a - mx) ** 2 for a in rx))
-    dy = math.sqrt(sum((b - my) ** 2 for b in ry))
-    return 0.0 if dx == 0 or dy == 0 else num / (dx * dy)
-
-
-def _rho(spark, xy):
-    from smatchpp_spark.operators.graphstats import spearman_correlation
-
-    df = spark.createDataFrame(xy, "x long, y long")
-    row = spearman_correlation(df, "x", "y").collect()[0]
-    assert row["n"] == len(xy)
-    return row["spearman_rho"]
-
-
-def test_spearman_with_ties_vs_python(spark):
-    rng = random.Random(5)
-    xy = [(rng.randrange(8), rng.randrange(6)) for _ in range(300)]
-    assert math.isclose(_rho(spark, xy), _py_spearman(xy), abs_tol=1e-12)
-
-
-def test_spearman_extremes(spark):
-    mono = [(i, i * 10) for i in range(50)]
-    assert math.isclose(_rho(spark, mono), 1.0)
-    rev = [(i, -i) for i in range(50)]
-    assert math.isclose(_rho(spark, rev), -1.0)
-    const = [(i, 7) for i in range(50)]
-    assert _rho(spark, const) == 0.0

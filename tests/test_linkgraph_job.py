@@ -87,7 +87,7 @@ def test_pyfiles_zip_importable(tmp_path):
     code = (
         "import sys; sys.path.insert(0, %r); "
         "import smatchpp_spark, smatchpp_spark.operators.pagerank, "
-        "smatchpp_spark.engine, smatchpp_spark.operators.align; "
+        "smatchpp_spark.pipeline.dedup; "
         "assert 'smatchpp_spark.zip' in smatchpp_spark.__file__; "
         "print('zip-import-ok')" % zpath
     )

@@ -1,10 +1,9 @@
 """Tests for the training-data pipeline operators (text analysis, dedup,
-similarity, multimodal plumbing) against local pure-Python oracles."""
+similarity, sketches) against local pure-Python oracles."""
 
 from __future__ import annotations
 
 import hashlib
-import math
 import re
 
 import numpy as np
@@ -12,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from smatchpp_spark.functions.scores import macro_scores, micro_scores, pairwise_scores
-from smatchpp_spark.pipeline import dedup, multimodal, similarity, text
+from smatchpp_spark.pipeline import dedup, similarity, text
 
 DOCS = [
     (0, "The cat and the dog sat in the sun. It was warm and the day was long."),
@@ -218,28 +217,6 @@ def test_bucketed_topk_subset_of_bucket(spark):
         assert buckets[r["query_id"]] == buckets[r["neighbor_id"]]
 
 
-def test_multimodal_features(spark, docs):
-    assets = multimodal.synth_assets(spark, docs)
-    feats = multimodal.extract_features(assets)
-    rows = {r["asset_id"]: r for r in feats.collect()}
-    assert len(rows) == len(DOCS)
-    for doc_id, t in DOCS:
-        h = hashlib.sha256(t.encode()).digest()
-        expect = [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(8)]
-        assert list(rows[doc_id]["feature"]) == pytest.approx(expect)
-        assert rows[doc_id]["n_bytes"] == len(t.encode())
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"xx")
-    # fake=False on non-media payloads surfaces the decoder's
-    # NotImplementedError from the executor
-    with pytest.raises(Exception, match="NotImplementedError|unrecognized"):
-        multimodal.extract_features(assets, fake=False).collect()
-    frames = multimodal.sample_frames(assets, every_ms=1000)
-    vid = assets.filter(F.col("kind") == "video").collect()
-    expect_frames = sum(len(range(0, max(a["duration_ms"] - 1, 0) + 1, 1000)) for a in vid)
-    assert frames.count() == expect_frames
-
-
 def test_micro_macro_scores(spark):
     # reference README example IV semantics: stats (2,2,4,6) -> F1 40, P 50, R 33.33
     stats = spark.createDataFrame(
@@ -384,110 +361,6 @@ def test_probe_buckets_pair_flip_sequence(spark):
     assert all(0 <= b < 16 for b in out)
 
 
-def _make_ppm(img):
-    import numpy as np
-    h, w, _ = img.shape
-    return b"P6\n# comment\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(img).tobytes()
-
-
-def _make_pgm(gray):
-    import numpy as np
-    h, w = gray.shape
-    return b"P5 %d %d 255 " % (w, h) + np.ascontiguousarray(gray).tobytes()
-
-
-def _make_bmp(img, top_down=False):
-    """Minimal 24-bit BI_RGB BMP writer (BITMAPINFOHEADER)."""
-    import numpy as np
-    h, w, _ = img.shape
-    stride = (w * 3 + 3) & ~3
-    pad = stride - w * 3
-    rows = img if top_down else img[::-1]
-    body = b"".join(
-        bytes(row[:, [2, 1, 0]].astype(np.uint8).tobytes()) + b"\x00" * pad
-        for row in rows
-    )
-    hdr_h = -h if top_down else h
-    info = (
-        (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True)
-        + hdr_h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(body).to_bytes(4, "little")
-        + b"\x00" * 16
-    )
-    off = 14 + 40
-    file_hdr = b"BM" + (off + len(body)).to_bytes(4, "little") + b"\x00\x00\x00\x00" + off.to_bytes(4, "little")
-    return file_hdr + info + body
-
-
-def _make_wav(samples, rate=8000):
-    """Minimal 16-bit PCM mono RIFF/WAVE writer."""
-    import numpy as np
-    pcm = (np.clip(samples, -1, 1) * 32767).astype("<i2").tobytes()
-    fmt = (
-        (1).to_bytes(2, "little") + (1).to_bytes(2, "little")
-        + rate.to_bytes(4, "little") + (rate * 2).to_bytes(4, "little")
-        + (2).to_bytes(2, "little") + (16).to_bytes(2, "little")
-    )
-    chunks = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt \
-        + b"data" + len(pcm).to_bytes(4, "little") + pcm
-    return b"RIFF" + len(chunks).to_bytes(4, "little") + chunks
-
-
-def test_real_decode_image_roundtrip():
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    img = rng.randint(0, 256, (7, 5, 3), dtype=np.uint8)
-    assert np.array_equal(multimodal.decode_image(_make_ppm(img)), img)
-    assert np.array_equal(multimodal.decode_image(_make_bmp(img)), img)
-    assert np.array_equal(
-        multimodal.decode_image(_make_bmp(img, top_down=True)), img
-    )
-    gray = rng.randint(0, 256, (4, 6), dtype=np.uint8)
-    got = multimodal.decode_image(_make_pgm(gray))
-    assert np.array_equal(got, np.repeat(gray[:, :, None], 3, axis=2))
-    small = multimodal.resize_nearest(img, 3, 2)
-    assert small.shape == (2, 3, 3)
-    assert np.array_equal(small[0, 0], img[0, 0])
-
-
-def test_real_decode_wav_roundtrip():
-    import numpy as np
-
-    t = np.arange(800) / 8000.0
-    wave = 0.5 * np.sin(2 * np.pi * 440 * t)
-    rate, got = multimodal.decode_wav(_make_wav(wave))
-    assert rate == 8000
-    assert len(got) == 800
-    assert np.max(np.abs(got - wave)) < 1e-3  # 16-bit quantization
-
-
-def test_real_feature_extraction_through_spark(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(9)
-    img = rng.randint(0, 256, (8, 8, 3), dtype=np.uint8)
-    t = np.arange(1600) / 8000.0
-    wave = 0.25 * np.sin(2 * np.pi * 220 * t)
-    rows = [
-        (1, "image", bytearray(_make_ppm(img)), 8, 8, 0, "ppm"),
-        (2, "image", bytearray(_make_bmp(img)), 8, 8, 0, "bmp"),
-        (3, "audio", bytearray(_make_wav(wave)), 0, 0, 200, "pcm_s16le"),
-    ]
-    assets = spark.createDataFrame(rows, multimodal.ASSET_SCHEMA)
-    feats = {r["asset_id"]: r for r in multimodal.extract_features(assets, fake=False).collect()}
-    exp_img = multimodal.image_features(img)
-    assert list(feats[1]["feature"]) == pytest.approx(list(exp_img))
-    assert list(feats[2]["feature"]) == pytest.approx(list(exp_img))
-    exp_audio = multimodal.audio_features(*multimodal.decode_wav(_make_wav(wave)))
-    assert list(feats[3]["feature"]) == pytest.approx(list(exp_audio))
-    assert feats[3]["feature"][0] == pytest.approx(0.2)  # duration seconds
-
-
 def test_bpe_token_count_matches_re():
     import re
 
@@ -523,16 +396,6 @@ def test_embedding_neardup_finds_planted_pair(spark):
     v = base / np.linalg.norm(base, axis=1, keepdims=True)
     for (a, b), sim in pairs.items():
         assert v[a] @ v[b] >= 0.95 - 1e-6
-
-
-def test_decode_16bit_pgm():
-    # 2-byte big-endian samples per the netpbm spec when maxval > 255
-    gray16 = np.array([[0, 32768], [65535, 16384]], dtype=">u2")
-    payload = b"P5 2 2 65535 " + gray16.tobytes()
-    img = multimodal.decode_image(payload)
-    expect = (gray16.astype(np.float64) * (255.0 / 65535)).astype(np.uint8)
-    assert np.array_equal(img[:, :, 0], expect)
-    assert img.shape == (2, 2, 3)
 
 
 def test_ivf_topk_exact_at_full_probe_and_recall(spark):
@@ -774,71 +637,6 @@ def test_substring_dedup_matches_python_replay(spark):
     assert got == want
 
 
-def test_pack_sequences_vs_python_replay(spark):
-    """Bucketed bin-by-offset packing matches an exact python replay:
-    bucket hash, doc_id stream order, cumulative offsets, pack = offset
-    div budget; stats fill ratios follow."""
-    import hashlib
-    import random as _random
-
-    from smatchpp_spark.pipeline.packing import pack_sequences, pack_stats
-
-    rng = _random.Random(41)
-    rows = [
-        (i, " ".join(f"w{rng.randrange(50)}" for _ in range(rng.randint(1, 40))))
-        for i in range(200)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    max_tokens, n_buckets = 64, 4
-    out = pack_sequences(
-        docs, max_tokens=max_tokens, n_buckets=n_buckets, portable=True
-    ).collect()
-
-    def phash(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    by_bucket = {}
-    for i, text in rows:
-        b = phash(str(i)) % n_buckets
-        by_bucket.setdefault(b, []).append((i, len(text.split())))
-    want = {}
-    for b, ds in by_bucket.items():
-        off = 0
-        for i, n in sorted(ds):
-            want[i] = (n, b, off // max_tokens, off)
-            off += n
-    got = {r.doc_id: (r.n_tokens, r.bucket, r.pack, r.offset) for r in out}
-    assert got == want
-
-    # determinism under a different physical partitioning
-    again = pack_sequences(
-        docs.repartition(7), max_tokens=max_tokens, n_buckets=n_buckets,
-        portable=True,
-    ).collect()
-    assert sorted(map(tuple, again)) == sorted(map(tuple, out))
-
-    st = pack_stats(
-        pack_sequences(docs, max_tokens=max_tokens, n_buckets=n_buckets,
-                       portable=True),
-        max_tokens=max_tokens,
-    ).collect()
-    for r in st:
-        toks = sum(
-            n for i, (n, b, p, o) in want.items()
-            if b == r.bucket and p == r.pack
-        )
-        assert r.n_tokens == toks
-        assert r.fill_ratio == round(toks / max_tokens, 6)
-
-    # precomputed token counts override the whitespace count
-    pre = docs.withColumn("tc", F.lit(5))
-    fixed = pack_sequences(
-        pre, max_tokens=10, n_buckets=1, token_count_col="tc", portable=True
-    ).collect()
-    assert all(r.n_tokens == 5 for r in fixed)
-    assert {r.pack for r in fixed} == {i // 2 for i in range(len(fixed))}
-
-
 def test_decontaminate_planted_overlap(spark):
     """A training doc embedding an eval passage is flagged with the
     exact hit count; clean docs are absent; min_hits filters."""
@@ -919,67 +717,6 @@ def test_embedding_dedup_clusters_planted(spark):
             ), (cid, a)
 
 
-def test_domain_mixture_temperature_semantics(spark):
-    """alpha=1 keeps the natural mix (p = target_rate everywhere);
-    alpha=0.5 upweights rare domains; the draw is deterministic and the
-    realized rate tracks the expectation."""
-    from smatchpp_spark.pipeline import mixing
-
-    rows = [(i, "big" if i < 800 else ("mid" if i < 950 else "rare"))
-            for i in range(1000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-
-    nat = mixing.domain_mixture(df, alpha=1.0, target_rate=0.4)
-    ps = {r["domain"]: r["p_keep"] for r in nat.select("domain", "p_keep").distinct().collect()}
-    assert ps == {"big": 0.4, "mid": 0.4, "rare": 0.4}
-
-    flat = mixing.domain_mixture(df, alpha=0.5, target_rate=0.4)
-    ps = {r["domain"]: r["p_keep"] for r in flat.select("domain", "p_keep").distinct().collect()}
-    assert ps["rare"] > ps["mid"] > ps["big"]
-    # expected mix preserved in aggregate: kept count within 4 sigma
-    kept = flat.filter("keep").count()
-    assert abs(kept - 400) < 4 * (1000 * 0.25) ** 0.5
-
-    a = sorted(flat.collect(), key=lambda r: r["doc_id"])
-    b = sorted(mixing.domain_mixture(df, alpha=0.5, target_rate=0.4)
-               .collect(), key=lambda r: r["doc_id"])
-    assert a == b  # deterministic replay
-
-    # python replay of the keep decision (oracle parity contract)
-    probs = mixing.domain_keep_probs(
-        [("big", 800), ("mid", 150), ("rare", 50)], alpha=0.5,
-        target_rate=0.4)
-    import hashlib
-
-    for r in a[:100]:
-        h = int(hashlib.md5(f"{r['doc_id']}:7".encode()).hexdigest()[:15], 16)
-        u = float(h) / float(1 << 60)
-        assert r["keep"] == (u < probs[r["domain"]]), r
-
-
-def test_domain_mixture_caps_and_composes(spark):
-    """A tiny domain whose raw rate exceeds 1 caps at p=1 (all kept);
-    kept docs feed pack_sequences unchanged; empty input yields the
-    empty schema."""
-    from smatchpp_spark.pipeline import mixing, packing
-
-    rows = [(i, "big" if i < 995 else "tiny",
-             "tok " * (3 + i % 5)) for i in range(1000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    mix = mixing.domain_mixture(df, alpha=0.0 + 0.5, target_rate=0.5)
-    ps = {r["domain"]: r["p_keep"] for r in mix.select("domain", "p_keep").distinct().collect()}
-    assert ps["tiny"] == 1.0
-    assert mix.filter("domain = 'tiny' AND NOT keep").count() == 0
-
-    kept = df.join(mix.filter("keep").select("doc_id"), "doc_id", "left_semi")
-    packed = packing.pack_sequences(kept, max_tokens=64, n_buckets=4)
-    assert packed.count() > 0
-
-    empty = mixing.domain_mixture(df.limit(0))
-    assert empty.count() == 0
-    assert empty.columns == ["doc_id", "domain", "p_keep", "keep"]
-
-
 def _rep_replay(t: str) -> dict:
     """Pure-python replay of repetition_features for one doc."""
     from collections import Counter
@@ -1047,39 +784,6 @@ def test_repetition_features_vs_replay(spark):
     assert rows[3]["n_lines"] == 0 and rows[3]["dup_line_frac"] == 0.0
 
 
-def test_hash_split_replay_and_stability(spark):
-    from smatchpp_spark.pipeline import mixing
-
-    df = spark.createDataFrame([(i,) for i in range(500)], "doc_id long")
-    out = mixing.hash_split(df, {"train": 0.9, "val": 0.05, "test": 0.05}, seed=7)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert len(rows) == 500
-    bounds = [("train", 0.9), ("val", 0.9 + 0.05)]
-    n = {"train": 0, "val": 0, "test": 0}
-    for i in range(500):
-        u = int(hashlib.md5(f"{i}:7".encode()).hexdigest()[:15], 16) / float(1 << 60)
-        exp = "test"
-        for name, b in bounds:
-            if u < b:
-                exp = name
-                break
-        assert rows[i]["split"] == exp, (i, u, rows[i])
-        assert rows[i]["u"] == pytest.approx(round(u, 9), abs=0)
-        n[exp] += 1
-    # rough mass sanity on 500 uniform draws
-    assert n["train"] > 400 and n["val"] > 0 and n["test"] > 0
-    # re-running and repartitioning never migrates a doc
-    again = {
-        r["doc_id"]: r["split"]
-        for r in mixing.hash_split(
-            df.repartition(7), {"train": 0.9, "val": 0.05, "test": 0.05}, seed=7
-        ).collect()
-    }
-    assert again == {i: rows[i]["split"] for i in range(500)}
-    with pytest.raises(ValueError):
-        mixing.hash_split(df, {"a": 0.5, "b": 0.4})
-
-
 def test_line_dedup_removes_corpus_boilerplate(spark):
     docs = [
         (0, "COMMON HEADER\nunique alpha\ncommon footer"),
@@ -1126,126 +830,6 @@ def test_vocabulary_topk_and_coverage(spark):
     )
     r2 = text.vocabulary(df2, k=2).collect()
     assert [r["word"] for r in r2] == ["aa", "zz"]
-
-
-# ---------------------------------------------------------------------------
-# relevance: TF-IDF / BM25 / bigram LM vs pure-Python oracles
-
-
-def _py_terms(text):
-    return [w.lower() for w in text.strip().split() if w]
-
-
-def test_tfidf_topk_vs_python(spark):
-    from smatchpp_spark.pipeline import relevance
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    got = relevance.tfidf_topk(docs, k=3).collect()
-
-    n = len(DOCS)
-    tf = {}
-    df = {}
-    for did, txt in DOCS:
-        cnt = {}
-        for w in _py_terms(txt):
-            cnt[w] = cnt.get(w, 0) + 1
-        tf[did] = cnt
-        for w in cnt:
-            df[w] = df.get(w, 0) + 1
-    exp = {}
-    for did, cnt in tf.items():
-        scored = sorted(
-            (
-                (round(c * (math.log((n + 1) / (df[w] + 1)) + 1), 9), w, c)
-                for w, c in cnt.items()
-            ),
-            key=lambda t: (-t[0], t[1]),
-        )[:3]
-        exp[did] = [
-            (w, c, s, r + 1) for r, (s, w, c) in enumerate(scored)
-        ]
-    by_doc = {}
-    for r in got:
-        by_doc.setdefault(r["doc_id"], []).append(
-            (r["term"], r["tf"], r["score"], r["rank"])
-        )
-    for did in by_doc:
-        by_doc[did].sort(key=lambda t: t[3])
-    assert by_doc == {d: v for d, v in exp.items() if v}
-
-
-def test_bm25_search_vs_python(spark):
-    from smatchpp_spark.pipeline import relevance
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    q = ["cat", "numbers", "spark"]
-    got = [
-        (r["doc_id"], r["score"], r["n_matched"])
-        for r in relevance.bm25_search(docs, q, top_n=5).collect()
-    ]
-
-    k1, b = 1.2, 0.75
-    n = len(DOCS)
-    dls = {d: len(_py_terms(t)) for d, t in DOCS}
-    avgdl = sum(dls.values()) / n
-    tf = {}
-    for did, txt in DOCS:
-        cnt = {}
-        for w in _py_terms(txt):
-            if w in q:
-                cnt[w] = cnt.get(w, 0) + 1
-        if cnt:
-            tf[did] = cnt
-    df = {}
-    for cnt in tf.values():
-        for w in cnt:
-            df[w] = df.get(w, 0) + 1
-    exp = []
-    for did, cnt in tf.items():
-        s = 0.0
-        for w, c in cnt.items():
-            idf = math.log((n - df[w] + 0.5) / (df[w] + 0.5) + 1)
-            s += idf * c * (k1 + 1) / (c + k1 * (1 - b + b * dls[did] / avgdl))
-        exp.append((did, round(s, 9), len(cnt)))
-    exp.sort(key=lambda t: (-t[1], t[0]))
-    assert got == exp[:5]
-
-
-def test_bigram_lm_scores_vs_python(spark):
-    from smatchpp_spark.pipeline import relevance
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    alpha = 0.5
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["avg_logp"])
-        for r in relevance.bigram_lm_scores(docs, alpha=alpha).collect()
-    }
-
-    bg = {}
-    vocab = set()
-    doc_bgs = {}
-    for did, txt in DOCS:
-        toks = _py_terms(txt)
-        vocab.update(toks)
-        pairs = list(zip(toks, toks[1:]))
-        doc_bgs[did] = pairs
-        for p in pairs:
-            bg[p] = bg.get(p, 0) + 1
-    left = {}
-    for (w1, _), c in bg.items():
-        left[w1] = left.get(w1, 0) + c
-    v = len(vocab)
-    for did, txt in DOCS:
-        pairs = doc_bgs[did]
-        if not pairs:
-            assert got[did] == (0, None), did
-            continue
-        lp = sum(
-            math.log((bg[p] + alpha) / (left[p[0]] + alpha * v)) for p in pairs
-        ) / len(pairs)
-        n_bg, avg = got[did]
-        assert n_bg == len(pairs)
-        assert avg == pytest.approx(round(lp, 6), abs=2e-6), did
 
 
 def test_gopher_filter_rules(spark):
@@ -1401,68 +985,6 @@ def test_c4_filter_rules(spark):
                 and "terms of use" not in low and "cookie" not in low):
             kept.append(l)
     assert got[0]["clean_text"] == "\n".join(kept)
-
-
-def test_weighted_sample_vs_python(spark):
-    import math
-
-    from smatchpp_spark.pipeline import mixing
-
-    rows = [(i, f"d{i % 3}", float(1 + (i * 7) % 13)) for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, domain string, w double")
-
-    def py_key(i):
-        u = oracle_hash64(f"{i}:7") / float(1 << 60)
-        u = max(u, 2.0 ** -60)
-        return math.log(u) / dict((r[0], r[2]) for r in rows)[i]
-
-    got = [
-        (r["doc_id"], r["weight"], r["sample_key"])
-        for r in mixing.weighted_sample(df, k=10, weight_col="w").collect()
-    ]
-    keys = sorted(((py_key(i), i) for i, _, _ in rows), reverse=True)[:10]
-    want_ids = [i for _, i in keys]
-    assert [g[0] for g in got] == want_ids
-    for did, w, sk in got:
-        assert sk == pytest.approx(round(py_key(did), 9), abs=1e-9)
-
-    # per-stratum: exactly 10 per domain (60 rows, 3 domains, 20 each)
-    per = mixing.weighted_sample(df, k=10, weight_col="w", by="domain").collect()
-    from collections import Counter
-
-    cnt = Counter(r["domain"] for r in per)
-    assert cnt == {"d0": 10, "d1": 10, "d2": 10}
-    # per-domain selection matches the python replay too
-    for dom in cnt:
-        want = sorted(
-            ((py_key(i), i) for i, d, _ in rows if d == dom), reverse=True
-        )[:10]
-        got_d = sorted(r["doc_id"] for r in per if r["domain"] == dom)
-        assert got_d == sorted(i for _, i in want)
-
-
-def test_weighted_sample_weight_bias(spark):
-    """statistical sanity: an item with 50x the weight of the rest is
-    selected across most seeds."""
-    from smatchpp_spark.pipeline import mixing
-
-    rows = [(i, 50.0 if i == 0 else 1.0) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, w double")
-    hits = 0
-    for seed in range(8):
-        ids = {r["doc_id"] for r in
-               mixing.weighted_sample(df, k=5, weight_col="w", seed=seed).collect()}
-        hits += 0 in ids
-    assert hits >= 7  # P(miss) per seed ≈ (1 - 50/89)^5-ish — tiny
-
-    with pytest.raises(ValueError, match="positive"):
-        mixing.weighted_sample(df, k=0, weight_col="w")
-    # zero/negative weights are excluded, never sampled
-    dfz = spark.createDataFrame(
-        [(0, 0.0), (1, -2.0), (2, 1.0)], "doc_id long, w double"
-    )
-    got = mixing.weighted_sample(dfz, k=3, weight_col="w").collect()
-    assert [r["doc_id"] for r in got] == [2]
 
 
 def test_count_min_sketch_vs_python(spark):
@@ -1630,201 +1152,6 @@ def test_hll_distinct_accuracy_and_replay(spark):
     assert abs(r2["estimate"] - 10) < 4
 
 
-def test_ccnet_quality_buckets(spark):
-    from smatchpp_spark.pipeline.relevance import ccnet_quality_buckets
-
-    boiler = "copyright footer text"
-    rng = __import__("random").Random(23)
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
-    rows = []
-    for i in range(12):
-        body = " ".join(rng.choice(words) for _ in range(30))
-        rows.append((i, body + "\n" + boiler))
-    rows.append((100, "single"))  # < 2 tokens after cleaning -> empty
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in ccnet_quality_buckets(docs, min_count=3).collect()}
-
-    # boilerplate removed from every doc that had it
-    for i in range(12):
-        assert out[i]["n_dropped"] == 1, i
-    assert out[100]["bucket"] == "empty" and out[100]["keep"] is False
-
-    scored = [out[i] for i in range(12)]
-    heads = [r for r in scored if r["bucket"] == "head"]
-    mids = [r for r in scored if r["bucket"] == "middle"]
-    tails = [r for r in scored if r["bucket"] == "tail"]
-    assert len(heads) + len(mids) + len(tails) == 12
-    assert heads and mids and tails
-    # ordering invariant: head >= middle >= tail on avg_logp
-    assert min(r["avg_logp"] for r in heads) >= max(r["avg_logp"] for r in mids)
-    assert min(r["avg_logp"] for r in mids) >= max(r["avg_logp"] for r in tails)
-    # CCNet keeps head+middle
-    for r in scored:
-        assert r["keep"] == (r["bucket"] in ("head", "middle"))
-
-
-# ---- PII scrub ----
-
-
-def test_pii_scrub_counts_and_redaction(spark):
-    from smatchpp_spark.pipeline.pii import pii_scrub, pii_stats
-
-    docs = spark.createDataFrame(
-        [
-            (1, "reach me at jane.doe+spam@mail.example.org or bob@x.io ."),
-            (2, "server at 192.168.0.1 and 10.0.255.3, port 8080"),
-            (3, "call +1 (555) 010-4242 today"),
-            (4, "mixed: a@b.co from 8.8.8.8 dial 555-123-4567 now"),
-            (5, "clean text with no identifiers at all"),
-            (6, ""),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in pii_scrub(docs).collect()}
-    assert (got[1]["n_emails"], got[1]["n_ips"], got[1]["n_phones"]) == (2, 0, 0)
-    assert got[1]["redacted"] == "reach me at <EMAIL> or <EMAIL> ."
-    assert (got[2]["n_emails"], got[2]["n_ips"]) == (0, 2)
-    assert "<IP>" in got[2]["redacted"] and "192" not in got[2]["redacted"]
-    assert got[3]["n_phones"] == 1
-    assert got[3]["redacted"] == "call <PHONE> today"
-    assert (got[4]["n_emails"], got[4]["n_ips"], got[4]["n_phones"]) == (1, 1, 1)
-    assert got[4]["n_pii"] == 3
-    assert got[5]["redacted"] == "clean text with no identifiers at all"
-    assert got[5]["n_pii"] == 0
-    assert got[6]["n_pii"] == 0
-
-    # sequential order: the dotted IP is consumed by the IP pass, so
-    # the phone pass cannot bite into it
-    row = {r["doc_id"]: r for r in pii_scrub(
-        spark.createDataFrame([(9, "at 10.20.30.40 end")], "doc_id long, text string")
-    ).collect()}[9]
-    assert row["n_ips"] == 1 and row["n_phones"] == 0
-
-    stats = pii_stats(docs).collect()[0]
-    assert stats["n_docs"] == 6
-    assert stats["docs_with_pii"] == 4
-    assert stats["total_emails"] == 3
-    assert stats["total_ips"] == 3
-    assert stats["total_phones"] == 2
-
-
-def test_pii_scrub_no_python_udfs(spark):
-    """the scrub must stay a JVM-side projection (no BatchEvalPython /
-    mapInPandas in the plan)."""
-    from smatchpp_spark.pipeline.pii import pii_scrub
-
-    docs = spark.createDataFrame([(1, "x@y.zz")], "doc_id long, text string")
-    plan = pii_scrub(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "MapInPandas" not in plan
-
-
-# ---- DSIR importance resampling ----
-
-
-def _py_dsir(source_rows, target_rows, n_buckets, alpha):
-    """python replay of dsir_importance with the portable hash."""
-    import math
-
-    def grams(text):
-        toks = [w.lower() for w in text.strip().split()] if text.strip() else []
-        return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-    def buckets(rows):
-        c = {}
-        for _i, text in rows:
-            for g in grams(text):
-                b = oracle_hash64(g) % n_buckets
-                c[b] = c.get(b, 0) + 1
-        return c
-
-    tc, sc = buckets(target_rows), buckets(source_rows)
-    tt, st = sum(tc.values()), sum(sc.values())
-    ab = alpha * n_buckets
-
-    def lam(b):
-        return math.log((tc.get(b, 0) + alpha) / (tt + ab)) - math.log(
-            (sc.get(b, 0) + alpha) / (st + ab)
-        )
-
-    out = {}
-    for i, text in source_rows:
-        gs = grams(text)
-        out[i] = (len(gs), sum(lam(oracle_hash64(g) % n_buckets) for g in gs))
-    return out
-
-
-def test_dsir_importance_vs_python(spark):
-    from smatchpp_spark.pipeline.mixing import dsir_importance, dsir_select
-
-    source_rows = [
-        (0, "the cat sat on the mat"),
-        (1, "spark shuffles data across the cluster"),
-        (2, "der hund lief durch den park"),
-        (3, "die katze schlief in der sonne"),
-        (4, "distributed joins shuffle on keys"),
-        (5, ""),
-        (6, "der park war still"),
-    ]
-    target_rows = [
-        (100, "der hund und die katze"),
-        (101, "die sonne schien im park"),
-    ]
-    src = spark.createDataFrame(source_rows, "doc_id long, text string")
-    tgt = spark.createDataFrame(target_rows, "doc_id long, text string")
-    nb, al = 64, 1.0
-    got = {
-        r["doc_id"]: (r["n_grams"], r["log_weight"])
-        for r in dsir_importance(
-            src, tgt, n_buckets=nb, alpha=al, portable=True
-        ).collect()
-    }
-    want = _py_dsir(source_rows, target_rows, nb, al)
-    assert set(got) == set(want)
-    for i, (ng, lw) in want.items():
-        assert got[i][0] == ng, i
-        assert got[i][1] == pytest.approx(lw, abs=1e-9), i
-    # german source docs must outscore english ones under a german target
-    en = max(got[0][1], got[1][1], got[4][1])
-    de = min(got[2][1], got[3][1], got[6][1])
-    assert de > en
-    # empty doc: zero grams, zero weight
-    assert got[5] == (0, 0.0)
-
-    # gumbel selection replay: same keys, same top-k
-    import math
-
-    k = 3
-    sel = dsir_select(
-        src, tgt, k=k, n_buckets=nb, alpha=al, seed=7, portable=True
-    ).collect()
-    keys = {}
-    for i, (ng, lw) in want.items():
-        u = max(
-            int(hashlib.md5(f"{i}:7".encode()).hexdigest()[:15], 16)
-            / float(1 << 60),
-            2.0 ** -60,
-        )
-        keys[i] = lw - math.log(-math.log(u))
-    want_ids = [i for i, _ in sorted(keys.items(), key=lambda kv: (-kv[1], kv[0]))[:k]]
-    assert [r["doc_id"] for r in sel] == want_ids
-    for r in sel:
-        assert r["gumbel_key"] == pytest.approx(keys[r["doc_id"]], abs=1e-5)
-
-
-def test_dsir_bad_args(spark):
-    from smatchpp_spark.pipeline.mixing import dsir_importance, dsir_select
-
-    d = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="n_buckets"):
-        dsir_importance(d, d, n_buckets=0)
-    with pytest.raises(ValueError, match="alpha"):
-        dsir_importance(d, d, alpha=0.0)
-    with pytest.raises(ValueError, match="k must be positive"):
-        dsir_select(d, d, k=0)
-
-
 # ---- corpus-level source similarity ----
 
 
@@ -1874,112 +1201,3 @@ def test_source_similarity_vs_python(spark):
     with pytest.raises(ValueError, match="num_hashes"):
         source_similarity(docs, num_hashes=0)
 
-
-def test_chunk_documents_windows_and_tail(spark):
-    from smatchpp_spark.pipeline.packing import chunk_documents
-
-    docs = spark.createDataFrame(
-        [
-            (1, "t0 t1 t2 t3 t4 t5 t6"),   # 7 tokens
-            (2, "a b"),                      # shorter than the window
-            (3, "   "),                      # empty -> no chunks
-        ],
-        "doc_id long, text string",
-    )
-    rows = chunk_documents(docs, window=4, stride=2).collect()
-    got = {
-        (r["doc_id"], r["chunk_idx"]): (r["n_tokens"], r["chunk_text"])
-        for r in rows
-    }
-    # doc 1: n=7 -> n_chunks = 1 + ceil(3/2) = 3
-    assert got[(1, 0)] == (4, "t0 t1 t2 t3")
-    assert got[(1, 1)] == (4, "t2 t3 t4 t5")
-    assert got[(1, 2)] == (3, "t4 t5 t6")
-    assert got[(2, 0)] == (2, "a b")
-    assert {k[0] for k in got} == {1, 2}
-    # every token appears in >= 1 chunk; stride==window -> disjoint
-    dis = chunk_documents(docs, window=3, stride=3).collect()
-    texts = [r["chunk_text"] for r in dis if r["doc_id"] == 1]
-    assert " ".join(texts) == "t0 t1 t2 t3 t4 t5 t6"
-
-
-def test_chunk_documents_guards(spark):
-    import pytest as _pytest
-
-    from smatchpp_spark.pipeline.packing import chunk_documents
-
-    docs = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    with _pytest.raises(ValueError):
-        chunk_documents(docs, window=0)
-    with _pytest.raises(ValueError):
-        chunk_documents(docs, window=4, stride=0)
-
-
-def test_unimax_allocation(spark):
-    """Waterfilling: small domains bind at max_epochs, the rest share
-    the leftover equally; allocations sum to the budget (python replay
-    on a hand-sized corpus)."""
-    from smatchpp_spark.pipeline.mixing import unimax_allocation
-
-    rows = (
-        [(i, "one two three", "aa") for i in range(2)]        # 6 tokens
-        + [(10 + i, "a b c d e", "bb") for i in range(20)]    # 100 tokens
-        + [(100 + i, "x y z w q", "cc") for i in range(20)]   # 100 tokens
-    )
-    docs = spark.createDataFrame(
-        [(d, t, lang) for d, t, lang in rows],
-        "doc_id long, text string, lang string",
-    )
-    out = {
-        r.domain: r
-        for r in unimax_allocation(
-            docs, budget_tokens=100, max_epochs=2
-        ).collect()
-    }
-    # capacities: aa 12, bb 200, cc 200.  aa binds (12*3 <= 100);
-    # theta = (100-12)/2 = 44 for bb and cc
-    assert out["aa"].capacity == 12 and out["aa"].allocation == 12.0
-    assert out["aa"].epochs == 2.0
-    assert out["bb"].allocation == out["cc"].allocation == 44.0
-    assert abs(sum(r.allocation for r in out.values()) - 100.0) < 1e-9
-    assert out["bb"].epochs == 0.44
-
-    # budget above total capacity: everything binds, no division
-    full = {
-        r.domain: r.allocation
-        for r in unimax_allocation(
-            docs, budget_tokens=10_000, max_epochs=2
-        ).collect()
-    }
-    assert full == {"aa": 12.0, "bb": 200.0, "cc": 200.0}
-
-    # prefix property: with capacities 12/200/200 and budget 13, NO
-    # domain binds (12*3 > 13) — everyone shares the level 13/3
-    none_bind = {
-        r.domain: r.allocation
-        for r in unimax_allocation(
-            docs, budget_tokens=13, max_epochs=2
-        ).collect()
-    }
-    assert all(abs(v - 13.0 / 3.0) < 1e-12 for v in none_bind.values())
-
-    # the non-monotone trap the maximal-prefix gate exists for:
-    # capacities 16 and 20, budget 20 — the FIRST fails (16*2 > 20)
-    # but the second's raw test (20*1 + 0 <= 20) would spuriously pass
-    # without the gate; correct answer: nobody binds, theta = 10 each
-    trap = spark.createDataFrame(
-        [(1, "a b c d e f g h", "aa"), (2, "p q r s t u v w x y", "bb")],
-        "doc_id long, text string, lang string",
-    )
-    tr = {
-        r.domain: r.allocation
-        for r in unimax_allocation(
-            trap, budget_tokens=20, max_epochs=2
-        ).collect()
-    }
-    assert tr == {"aa": 10.0, "bb": 10.0}
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="budget"):
-        unimax_allocation(docs, budget_tokens=-1)

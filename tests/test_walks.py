@@ -1,4 +1,4 @@
-"""Random-walk generation vs pure-python replays."""
+"""Random-walk generation + dedup clustering vs pure-python replays."""
 
 from __future__ import annotations
 
@@ -93,6 +93,41 @@ def test_random_walks_edges_are_real(spark):
             assert (x, y) in eset, (r.walk_id, r.path)
 
 
+def test_duplicate_clusters(spark):
+    """duplicate_clusters: near-identical docs land in one cluster with
+    the minimum id canonical; unique docs are absent."""
+    from smatchpp_spark.pipeline import dedup
+
+    base = (
+        "the quick brown fox jumps over the lazy dog and runs far away "
+        "into the deep green forest tonight"
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base + " extra"),
+            (3, base.replace("quick", "quick very")),
+            (10, "completely different text about spark dataframes and "
+                 "shuffle partitions in a distributed engine"),
+            (11, "completely different text about spark dataframes and "
+                 "shuffle partitions in a distributed engine today"),
+            (20, "a unique snowflake document with nothing in common "
+                 "with any other row present here at all whatsoever"),
+        ],
+        "doc_id long, text string",
+    )
+    out = dedup.duplicate_clusters(
+        docs, threshold=0.4, num_hashes=8, band_size=2
+    ).collect()
+    by_doc = {r.doc_id: (r.cluster_id, r.is_canonical) for r in out}
+    assert 20 not in by_doc  # unique doc keeps itself, absent from output
+    assert by_doc[1] == (1, True)
+    assert by_doc[2] == (1, False)
+    assert by_doc[3] == (1, False)
+    assert by_doc[10] == (10, True)
+    assert by_doc[11] == (10, False)
+
+
 def test_walk_param_validation(spark):
     """walks_per_vertex=0 must raise, not silently emit '#0' and '#-1'
     walks (F.sequence(0, -1) auto-steps descending)."""
@@ -157,6 +192,25 @@ def test_salted_hub_neighbor_index(spark):
 
 def _edges_df_str(spark, pairs):
     return spark.createDataFrame(list(pairs), "src string, dst string")
+
+
+def test_duplicate_clusters_unconverged_raises(spark):
+    """A CC round cap too small for the pair-graph diameter must raise
+    (truncated hash-min labels would split clusters and let duplicates
+    survive the keep-lowest policy silently)."""
+    from smatchpp_spark.pipeline import dedup
+
+    base = (
+        "the quick brown fox jumps over the lazy dog and runs far away "
+        "into the deep green forest tonight"
+    )
+    docs = spark.createDataFrame(
+        [(1, base), (2, base + " extra")], "doc_id long, text string"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.duplicate_clusters(
+            docs, threshold=0.4, num_hashes=8, band_size=2, max_rounds=0
+        )
 
 
 def test_random_walks_checkpoint_resume_identical(spark, tmp_path):

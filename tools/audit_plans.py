@@ -24,6 +24,33 @@ CHECKS = {
         ("HashAggregate",
          "per-bucket counts combine map-side before the offset scan"),
     ],
+    "doc_lm_scores": [
+        ("ReadSchema: struct<doc_id:bigint,text:string>",
+         "LM training + scoring read 2 of 5 document columns"),
+        ("HashAggregate",
+         "unigram/bigram counts and the per-(doc,v,w) pre-combine all "
+         "aggregate map-side before their shuffles"),
+    ],
+    "doc_dedup_against": [
+        ("LeftSemi",
+         "the corpus-side mega-bucket guard is a semi-join — oversized "
+         "buckets never reach the band join"),
+        ("HashAggregate",
+         "band-bucket sizes and the best-match argmax combine map-side"),
+    ],
+    "doc_repetition": [
+        ("ReadSchema: struct<doc_id:bigint,text:string>",
+         "ONE scan of 2/5 document columns feeds lines + both gram sizes "
+         "(tagged-struct concat — not a union of projections)"),
+        ("BroadcastHashJoin LeftOuter",
+         "per-doc feature table broadcasts back onto the id spine"),
+    ],
+    "doc_line_dedup": [
+        ("ReadSchema: struct<text:string>",
+         "the corpus-wide boilerplate count side reads ONLY text"),
+        ("HashAggregate",
+         "line counts combine map-side before the shuffle"),
+    ],
 
     "degrees": [
         ("ReadSchema: struct<l_orderkey:bigint>",
@@ -31,16 +58,43 @@ CHECKS = {
          "11 lineitem columns"),
         ("codegen id", "hot path inside whole-stage codegen"),
     ],
+    "emb_cosine_topk": [
+        ("BroadcastExchange", "query side broadcast — no shuffle of the corpus side"),
+        ("PushedFilters: [IsNotNull(vec_id)]",
+         "predicate pushdown reaches the parquet scan"),
+    ],
     "reentrancies": [
         ("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_suppkey:bigint,l_linenumber:int>",
          "triple-table derivation prunes to the 4-5 source columns it needs"),
         ("codegen id", "joins + conditional projections stay in codegen"),
+    ],
+    "doc_exact_dedup": [
+        ("ReadSchema: struct<doc_id:bigint,text:string>",
+         "2 of 5 document columns scanned"),
+        ("HashAggregate", "map-side partial aggregation absorbs duplicates"),
     ],
     "edge_relabel": [
         ("BroadcastExchange",
          "the (concept, rel → new_rel) rules dim broadcasts — the edge "
          "table never reshuffles for the rules lookup"),
         ("codegen id", "relabel projection stays in codegen"),
+    ],
+    "emb_hyperplane_topk": [
+        ("HashJoin",
+         "candidate generation is an equi-join on the bucket key "
+         "(broadcast here because the probe side is tiny at this sf; "
+         "shuffled-hash/sort-merge on the bucket key at scale — never "
+         "all-pairs)"),
+        ("PushedFilters: [IsNotNull(vec_id)]",
+         "query-side filter reaches the parquet scan"),
+    ],
+    "emb_ivf_topk": [
+        ("BroadcastExchange",
+         "the exploded (query × nprobe cells) side broadcasts — the "
+         "corpus computes its cell inside the scan projection and never "
+         "shuffles for candidate generation"),
+        ("PushedFilters: [IsNotNull(vec_id)]",
+         "predicate pushdown reaches the parquet scan"),
     ],
     "bootstrap_ci": [
         ("BroadcastExchange",
@@ -85,6 +139,16 @@ CHECKS = {
          "partials combine map-side, a single row reaches the driver"),
         ("codegen id", "moment arithmetic inside whole-stage codegen"),
     ],
+    "doc_substring_dedup": [
+        ("ReadSchema: struct<doc_id:bigint,text:string>",
+         "2 of 5 document columns reach the gram posexplode"),
+        ("HashAggregate",
+         "distinct-doc gram counts combine map-side on the uniform "
+         "gram-hash key"),
+        ("Window",
+         "the run-merge window partitions BY DOCUMENT — its sort is "
+         "bounded by one document's gram count, never corpus size"),
+    ],
     "linkpred_ppr": [
         ("Window",
          "per-seed top-k is one window partitioned by seed (ball-sized "
@@ -93,6 +157,19 @@ CHECKS = {
          "score projection and exclusion join stay in codegen; the PPR "
          "state itself is localCheckpoint-staged per step (see "
          "operators/linkpred.py)"),
+    ],
+    "doc_gopher_filter": [
+        ("ReadSchema: struct<doc_id:bigint,text:string>",
+         "all six Gopher rules ride ONE scan of 2/5 document columns"),
+        ("codegen id",
+         "the whole rule projection is a stateless codegen span — no "
+         "shuffle, no join"),
+    ],
+    "doc_c4_filter": [
+        ("ReadSchema: struct<doc_id:bigint,text:string>",
+         "line retention + page rules + clean_text rejoin in ONE scan "
+         "projection"),
+        ("codegen id", "pure projection stays in whole-stage codegen"),
     ],
     # butterfly_census itself returns a pre-reduced 1-row frame (the
     # wedge sums / pair counts run inside the operator); the per-vertex
@@ -105,6 +182,21 @@ CHECKS = {
         ("HashAggregate",
          "pair and per-vertex butterfly counts combine map-side "
          "(hub-safe)"),
+    ],
+    "doc_simhash_neardup": [
+        ("HashAggregate",
+         "per-pair shared-block counting combines map-side; candidates "
+         "come from the (block_idx, block_val) equi-join, never all-pairs"),
+        ("codegen id",
+         "the per-bit vote and block split stay in whole-stage codegen"),
+    ],
+    "doc_cms_wordcounts": [
+        ("BroadcastExchange",
+         "the ≤ depth×width sketch broadcasts to the probe side — "
+         "estimates never shuffle the sketch"),
+        ("HashAggregate",
+         "cell counts combine map-side: the shuffle is bounded by "
+         "depth×width per partition regardless of corpus size"),
     ],
     "community_conductance": [
         ("HashAggregate",
@@ -162,6 +254,20 @@ CHECKS = {
         ("HashAggregate",
          "all census identities are map-side-combinable aggregations "
          "over the oriented-join outputs"),
+    ],
+    "emb_pq_topk": [
+        ("BroadcastExchange",
+         "the query side (with its subspace-0 cell) broadcasts — the "
+         "corpus encodes its PQ codes inside the scan projection and "
+         "never shuffles for candidate generation"),
+        ("PushedFilters: [IsNotNull(vec_id)]",
+         "predicate pushdown reaches the parquet scan"),
+    ],
+    "doc_span_self_dedup": [
+        ("ReadSchema: struct<doc_id:bigint,text:string>",
+         "2 of 5 document columns scanned for gram + token explodes"),
+        ("HashAggregate",
+         "per-(doc, gram) first-position agg combines map-side"),
     ],
     "centrality_rank_correlation": [
         ("Window",

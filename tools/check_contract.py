@@ -17,7 +17,10 @@ import duckdb
 # import __spark_entry__ and the package from the checkout this file is in
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "region nation customer supplier part orders lineitem".split()
+TABLES = (
+    "region nation customer supplier part orders lineitem events "
+    "documents embeddings"
+).split()
 
 
 def normalize(rows, cols):

@@ -2,10 +2,16 @@
 reference's ``Smatchpp`` bindings (bindings.py:8-159) and CLI
 (__main__.py:4-214).
 
-Pipeline: corpus table(s) → parse → standardize → pairwise align+score →
-micro / macro / pairwise aggregation.  Every stage is a DataFrame
-transform; the only Python kernels are the Penman parser batches and the
-per-pair alignment kernel.
+Pipeline: corpus table(s) → parse + standardize → pairwise align+score →
+micro / macro / pairwise aggregation.  Parse and standardize are one
+``mapInPandas`` stage: each row's content is parsed and its graph run
+through the per-graph standardizer
+(``operators.standardize.graph_standardizer``) in the same Arrow batch,
+so the edge table reaches alignment without a shuffle.  The per-pair
+alignment kernel (one ``groupBy(pair_id).applyInPandas``) is the only
+other Python stage; ``score_corpus`` computes the per-pair stats once,
+behind a lazy ``localCheckpoint``, and derives every score frame from
+them.
 
 Pairing: the reference pairs two files positionally (__main__.py:112-115).
 Positional row pairing is undefined in a distributed table, so pairs are
@@ -28,16 +34,18 @@ from smatchpp_spark.functions.scores import (
     pairwise_scores,
 )
 from smatchpp_spark.operators.align import AlignConfig, align_and_score
-from smatchpp_spark.operators.standardize import (
-    amr_standardize,
-    generic_standardize,
-)
-from smatchpp_spark.sources.penman import parse_edges
+from smatchpp_spark.operators.standardize import graph_standardizer, per_graph
+from smatchpp_spark.sources.penman import goodmami_parse_edges, parse_edges
+from smatchpp_spark.sources.tsv import parse_tsv_edges
 
-STANDARDIZERS = {
-    "amr": amr_standardize,
-    "generic": generic_standardize,
-    "none": lambda df: df,
+# content interpretation (reference -input_format / GraphReaderFactory,
+# model_factory.py:60-85); every reader takes a per-graph ``standardize``
+READERS = {
+    "penman": parse_edges,
+    "tsv": parse_tsv_edges,
+    # optional third-party wrapper (data_helpers.py:255-275): raises the
+    # reference's install hint when the penman library is absent
+    "goodmami": goodmami_parse_edges,
 }
 
 
@@ -59,9 +67,9 @@ class EngineConfig:
     # Pass smatchpp_spark.functions.amr_rules.semantic_edge_rules() for the
     # bundled-table behavior, or rules inverted from a full frame file.
     edge_rules: dict | None = None
-    # content interpretation (reference -input_format / GraphReaderFactory,
-    # model_factory.py): "penman" parses Penman blocks, "tsv" parses
-    # src<TAB>tgt<TAB>rel triple blocks (data_helpers.py:243-252)
+    # content interpretation, a READERS key: "penman" parses Penman blocks,
+    # "tsv" parses src<TAB>tgt<TAB>rel triple blocks
+    # (data_helpers.py:243-252), "goodmami" uses the penman library
     input_format: str = "penman"
     # reference --remove_duplicates: set-dedup triples after standardization
     remove_duplicates: bool = False
@@ -81,23 +89,27 @@ class SmatchppSpark:
 
     def __init__(self, config: EngineConfig | None = None):
         self.config = config or EngineConfig()
-        std = STANDARDIZERS.get(self.config.standardizer)
-        if std is None:
-            raise ValueError(f"unknown standardizer {self.config.standardizer!r}")
-        self._standardize = std
-
-    def _parse(self, corpus: DataFrame, content_col: str, id_col: str | None = None) -> DataFrame:
-        if self.config.input_format == "tsv":
-            from smatchpp_spark.sources.tsv import parse_tsv_edges
-
-            return parse_tsv_edges(corpus, content_col, id_col=id_col)
-        if self.config.input_format != "penman":
+        # raises on an unknown standardizer
+        self._graph_fn = graph_standardizer(
+            self.config.standardizer, self.config.remove_duplicates
+        )
+        if self.config.input_format not in READERS:
             raise ValueError(f"unknown input_format {self.config.input_format!r}")
-        return parse_edges(corpus, content_col, id_col=id_col)
+
+    def _parse(self, corpus: DataFrame, content_col: str, id_col: str | None = None,
+               standardize=None) -> DataFrame:
+        return READERS[self.config.input_format](
+            corpus, content_col, id_col=id_col, standardize=standardize
+        )
 
     def edges(self, corpus: DataFrame, content_col: str = "content") -> DataFrame:
-        """corpus → standardized global edge table."""
-        return self._standardize(self._parse(corpus, content_col))
+        """corpus → standardized global edge table keyed by sha256(content).
+        Identical contents share one graph id, so the standardizer runs
+        per graph after a shuffle on that key, not inside the parse."""
+        edges = self._parse(corpus, content_col)
+        if self.config.standardizer == "none":
+            return edges
+        return per_graph(edges, graph_standardizer(self.config.standardizer))
 
     def match_stats(
         self,
@@ -119,16 +131,12 @@ class SmatchppSpark:
     def _keyed_edges(
         self, corpus: DataFrame, pair_col: str, content_col: str
     ) -> DataFrame:
-        """Parse + standardize keyed directly by the pair id (one graph
-        per pair side, so the pair id IS the graph key; sha256 keying
-        would collapse identical content across different pairs)."""
-        edges = self._parse(corpus, content_col, id_col=pair_col)
-        out = self._standardize(edges)
-        if self.config.remove_duplicates:
-            from smatchpp_spark.operators.standardize import remove_duplicates
-
-            out = remove_duplicates(out)
-        return out
+        """Parse + standardize in one ``mapInPandas``, keyed directly by the
+        pair id (one graph per pair side, so the pair id IS the graph key;
+        sha256 keying would collapse identical content across different
+        pairs)."""
+        return self._parse(corpus, content_col, id_col=pair_col,
+                           standardize=self._graph_fn)
 
     def score_corpus(
         self,
@@ -137,7 +145,10 @@ class SmatchppSpark:
         pair_col: str = "pair_id",
         content_col: str = "content",
     ) -> dict[str, DataFrame]:
-        stats = self.match_stats(corpus_a, corpus_b, pair_col, content_col)
+        # every frame below derives from these stats: align runs once
+        stats = self.match_stats(
+            corpus_a, corpus_b, pair_col, content_col
+        ).localCheckpoint(eager=False)
         out: dict[str, DataFrame] = {"pairs": stats}
         if self.config.score_type in ("micro", "micromacro"):
             out["micro"] = micro_scores(stats)

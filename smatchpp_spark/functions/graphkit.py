@@ -18,6 +18,8 @@ A triple is ``(src, rel, dst)`` of strings.  The root is explicated as
 
 from __future__ import annotations
 
+import re
+
 Triple = tuple[str, str, str]
 
 ROOT_NODE = "ROOT_OF_GRAPH"
@@ -182,11 +184,19 @@ def parse_penman(text: str, explicate_root: bool = True) -> list[Triple]:
     return triples
 
 
-def parse_tsv(text: str) -> list[Triple]:
-    """TSV graph block: one triple per line, file column order is src, tgt, rel."""
+_TSV_FIELDS = re.compile(r"\s+", re.ASCII)
+
+
+def parse_tsv(text: str | None) -> list[Triple]:
+    """TSV graph block: one triple per line, file column order is src, tgt,
+    rel.  Lines split on ``\\n`` and fields on runs of ASCII whitespace,
+    as Spark's ``split`` does (a leading blank gives an empty first
+    field); a line with fewer than three fields raises ``IndexError``."""
+    if text is None:
+        return []
     out = []
     for line in text.split("\n"):
-        cols = line.split()
+        cols = _TSV_FIELDS.split(line)
         out.append((cols[0], cols[2], cols[1]))
     return out
 

@@ -1,26 +1,39 @@
-"""Graph standardization passes as DataFrame rewrites.
+"""Graph standardization passes.
 
-Each pass is an equivalence-preserving transform over the global edge
-table ``(graph_id, pos, src, rel, dst)``; together they reproduce the
-reference standardizer pipelines:
+Every pass of the two standardizer pipelines is graph-local (the
+reference standardizes one graph at a time), so each is a pure-Python
+function over one graph's rows ``(pos, src, rel, dst)``:
 
-  * ``generic_standardize`` — lower → dequote → relabel_vars → deinvert
+  * ``generic`` — lower → dequote → relabel_vars → deinvert
     (reference formalism/generic/tools.py:15-57)
-  * ``amr_standardize`` — lower → dequote → relabel_vars → domain2mod →
-    deinvert → concept_as_root → dereify → dedup
+  * ``amr`` — lower → dequote → relabel_vars → domain2mod → deinvert →
+    concept_as_root → dereify → dedup
     (reference formalism/amr/tools.py:179-193)
 
-All passes are pure column expressions, window functions, and joins —
-whole-stage-codegen friendly, no Python on the executors.  Per-graph
-lookup tables (variable→concept, constants) are expressed as joins on
-``graph_id`` so Catalyst shuffles once on the graph key and AQE handles
-size decisions.
+``graph_standardizer`` composes them into the per-graph kernel the engine
+runs inside its parse ``mapInPandas``, so parse and standardize are one
+narrow stage over Arrow batches with no shuffle.  The public DataFrame
+passes are thin wrappers over the same functions: row-local passes map
+batches, graph-local ones run one ``groupBy(graph_id).applyInPandas``.
+Rows a pass adds take positions after the graph's largest ``pos``; a null
+label stays null and never names a variable, as in the SQL joins these
+passes replaced.
+
+The passes outside the two pipelines (``variables``,
+``relabel_edges_by_concept``, ``norm_logical_ops``, ``reify_attributes``,
+``reify_rules_transform``, ``unlabel_*``, ``subgraph_*``) are column
+expressions and joins over the global edge table.
 """
 
 from __future__ import annotations
 
+import re
+from collections.abc import Callable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from smatchpp_spark.functions.amr_rules import DEREIFY_RULES
 
@@ -29,52 +42,269 @@ ROOT_REL = ":root"
 
 _EDGE_COLS = ["graph_id", "pos", "src", "rel", "dst"]
 
+Row = tuple  # (pos, src, rel, dst)
+Rows = list[Row]
 
-def _edges(df: DataFrame) -> DataFrame:
-    return df.select(*_EDGE_COLS)
+
+# --------------------------------------------------------------------------
+# per-graph passes: rows -> rows
+# --------------------------------------------------------------------------
+
+_QUOTES = str.maketrans("", "", "\"'")
+_INVERSE = re.compile(r"(-of)+$")
+_DOMAIN = {":domain": ":mod-of", ":domain-of": ":mod"}
 
 
-def _stage(df: DataFrame) -> DataFrame:
-    """Lineage barrier between passes that reference their input several
-    times (relabel joins 4 derivations of it, dereify 6).  Without it the
-    chained pipeline duplicates the whole upstream plan per reference —
-    multiplicative plan growth, measured 3x wall on the full AMR chain.
-    Lazy localCheckpoint = compute once, reuse; the batch-superstep
-    analog of SuperstepRunner's per-step truncation (at cluster scale an
-    intermediate table write serves the same role)."""
-    return df.localCheckpoint(eager=False)
+def lower_rows(rows: Rows) -> Rows:
+    """Lowercase src/rel/dst (reference graph_transforms.py:13-16)."""
+    low = lambda x: None if x is None else x.lower()  # noqa: E731
+    return [(p, low(s), low(r), low(d)) for p, s, r, d in rows]
+
+
+def dequote_rows(rows: Rows) -> Rows:
+    """Strip double and single quotes (graph_transforms.py:19-29)."""
+    deq = lambda x: None if x is None else x.translate(_QUOTES)  # noqa: E731
+    return [(p, deq(s), deq(r), deq(d)) for p, s, r, d in rows]
+
+
+def domain2mod_rows(rows: Rows) -> Rows:
+    """:domain ↔ :mod-of relabel (graph_transforms.py:101-111)."""
+    return [(p, s, _DOMAIN.get(r, r), d) for p, s, r, d in rows]
+
+
+def deinvert_rows(rows: Rows) -> Rows:
+    """(s, r-of…of, t) → strip the trailing -of chain; swap endpoints when
+    the chain length is odd (graph_transforms.py:76-98)."""
+    out = []
+    for p, s, r, d in rows:
+        if r is not None:
+            stripped = _INVERSE.sub("", r)
+            if (len(r) - len(stripped)) // 3 % 2:
+                s, d = d, s
+            r = stripped
+        out.append((p, s, r, d))
+    return out
+
+
+def dedup_rows(rows: Rows) -> Rows:
+    """Set-dedup triples, keeping the smallest pos of each duplicate group
+    (graph_transforms.py:8-10)."""
+    first: dict[tuple, int] = {}
+    for p, s, r, d in rows:
+        key = (s, r, d)
+        if key not in first or p < first[key]:
+            first[key] = p
+    return [(p, s, r, d) for (s, r, d), p in first.items()]
+
+
+def _variables(rows: Rows) -> dict:
+    """var → (first_pos, concept) (util.py:13-19): the first :instance
+    occurrence fixes the naming order, the last fixes the concept."""
+    table: dict = {}
+    for p, s, r, d in rows:
+        if r != INSTANCE or s is None:
+            continue
+        first, last, concept = table.get(s, (p, p, d))
+        table[s] = (min(first, p), max(last, p), d if p >= last else concept)
+    return {v: (first, concept) for v, (first, _, concept) in table.items()}
+
+
+def relabel_vars_rows(rows: Rows) -> Rows:
+    """Rename variables to ``<first-concept-char><n>``
+    (graph_transforms.py:32-73), numbered per first character in the order
+    of each variable's first :instance triple; a name that is a constant
+    of the graph (util.py:22-37) gets 'x' appended until it is free."""
+    table = _variables(rows)
+    consts = {d for _, _, r, d in rows if r == INSTANCE}
+    for _, s, r, d in rows:
+        if r is not None and r != INSTANCE:
+            consts.update(e for e in (s, d) if e not in table)
+    by_base: dict[str, list] = {}
+    for var, (first, concept) in table.items():
+        if concept is not None:
+            by_base.setdefault(concept[:1], []).append((first, var))
+    rename = {}
+    for base, members in by_base.items():
+        for k, (_, var) in enumerate(sorted(members)):
+            name = base if k == 0 else f"{base}{k}"
+            while name in consts:
+                name += "x"
+            rename[var] = name
+    return [
+        (p, rename.get(s, s), r, d if r == INSTANCE else rename.get(d, d))
+        for p, s, r, d in rows
+    ]
+
+
+def concept_as_root_rows(rows: Rows) -> Rows:
+    """First :root triple (ROOT, :root, x) → (x, :root, concept_of_x)
+    (graph_transforms.py:114-131); a non-variable root target is left
+    untouched rather than failing."""
+    roots = [p for p, _, r, _ in rows if r == ROOT_REL]
+    if not roots:
+        return rows
+    first = min(roots)
+    table = _variables(rows)
+    out = []
+    for p, s, r, d in rows:
+        concept = table[d][1] if p == first and d in table else None
+        out.append((p, d, r, concept) if concept is not None else (p, s, r, d))
+    return out
+
+
+def dereify_rows(rows: Rows, rules: dict | None = None) -> Rows:
+    """Rule-based dereification: (z,:instance,C),(z,a1,x),(z,a2,y) → (x,rel,y)
+    (graph_transforms.py:277-385).
+
+    z is eligible when C has a rule, nothing points at z (that covers the
+    root), and its non-instance out-edges are exactly one a1 and one a2.
+    All eligible variables rewrite at once, as the reference scans a frozen
+    snapshot: the first :instance triple and the out-edges of z go, and the
+    new triples follow the graph's largest pos in the order of their a1
+    edge."""
+    rules = DEREIFY_RULES if rules is None else rules
+    table = _variables(rows)
+    targets = {d for _, _, _, d in rows}
+    cands = {
+        v: rules[c] for v, (_, c) in table.items() if c in rules and v not in targets
+    }
+    if not cands:
+        return rows
+    outs: dict = {v: [] for v in cands}
+    for p, s, r, d in rows:
+        if s in cands and r is not None and r != INSTANCE:
+            outs[s].append((p, r, d))
+    eligible = []
+    for v, (new_rel, a1, a2) in cands.items():
+        e1 = [(p, d) for p, r, d in outs[v] if r == a1]
+        e2 = [d for _, r, d in outs[v] if r == a2]
+        other = [r for _, r, _ in outs[v] if r not in (a1, a2)]
+        if len(e1) == 1 and len(e2) == 1 and not other:
+            eligible.append((e1[0][0], v, e1[0][1], new_rel, e2[0]))
+    if not eligible:
+        return rows
+    gone = {table[v][0] for _, v, _, _, _ in eligible}
+    gone.update(p for _, v, _, _, _ in eligible for p, _, _ in outs[v])
+    top = max(p for p, _, _, _ in rows)
+    kept = [row for row in rows if row[0] not in gone]
+    return kept + [
+        (top + k, x, new_rel, y)
+        for k, (_, _, x, new_rel, y) in enumerate(sorted(eligible), 1)
+    ]
+
+
+PIPELINES: dict[str, tuple[Callable[[Rows], Rows], ...]] = {
+    "none": (),
+    "generic": (lower_rows, dequote_rows, relabel_vars_rows, deinvert_rows),
+    "amr": (
+        lower_rows, dequote_rows, relabel_vars_rows, domain2mod_rows,
+        deinvert_rows, concept_as_root_rows, dereify_rows, dedup_rows,
+    ),
+}
+
+
+def graph_standardizer(
+    name: str, remove_duplicates: bool = False
+) -> Callable[[Rows], Rows]:
+    """The per-graph standardizer ``name`` (``amr``, ``generic`` or
+    ``none``), with a final set-dedup when ``remove_duplicates``."""
+    if name not in PIPELINES:
+        raise ValueError(f"unknown standardizer {name!r}")
+    passes = PIPELINES[name] + ((dedup_rows,) if remove_duplicates else ())
+
+    def run(rows: Rows) -> Rows:
+        for step in passes:
+            rows = step(rows)
+        return rows
+
+    return run
+
+
+# --------------------------------------------------------------------------
+# DataFrame wrappers
+# --------------------------------------------------------------------------
+
+
+def _edges(df: DataFrame) -> tuple[DataFrame, T.StructType]:
+    df = df.select(*_EDGE_COLS)
+    schema = T.StructType([T.StructField(f.name, f.dataType) for f in df.schema])
+    return df, schema
+
+
+def _rows(pdf: pd.DataFrame) -> Rows:
+    return list(zip(pdf["pos"], pdf["src"], pdf["rel"], pdf["dst"]))
+
+
+def _frame(graph_id, rows: Rows) -> pd.DataFrame:
+    out = pd.DataFrame(rows, columns=_EDGE_COLS[1:])
+    out.insert(0, "graph_id", graph_id)
+    return out
+
+
+def per_graph(edges: DataFrame, fn: Callable[[Rows], Rows]) -> DataFrame:
+    """Run a per-graph pass over an edge table: one shuffle on graph_id."""
+    edges, schema = _edges(edges)
+
+    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _frame(pdf["graph_id"].iloc[0], fn(_rows(pdf)))
+
+    return edges.groupBy("graph_id").applyInPandas(apply, schema)
+
+
+def _per_row(edges: DataFrame, fn: Callable[[Rows], Rows]) -> DataFrame:
+    """Run a row-local pass over an edge table, batch by batch."""
+    edges, schema = _edges(edges)
+
+    def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _frame(pdf["graph_id"].to_numpy(), fn(_rows(pdf)))
+
+    return edges.mapInPandas(apply, schema)
 
 
 def lower_all_labels(edges: DataFrame) -> DataFrame:
-    """Lowercase src/rel/dst (reference graph_transforms.py:13-16)."""
-    return edges.select(
-        "graph_id",
-        "pos",
-        F.lower("src").alias("src"),
-        F.lower("rel").alias("rel"),
-        F.lower("dst").alias("dst"),
-    )
+    return _per_row(edges, lower_rows)
 
 
 def remove_quotes(edges: DataFrame) -> DataFrame:
-    """Strip double and single quotes (graph_transforms.py:19-29)."""
-    dequote = lambda c: F.translate(c, "\"'", "")  # noqa: E731
-    return edges.select(
-        "graph_id",
-        "pos",
-        dequote("src").alias("src"),
-        dequote("rel").alias("rel"),
-        dequote("dst").alias("dst"),
-    )
+    return _per_row(edges, dequote_rows)
+
+
+def domain2mod(edges: DataFrame) -> DataFrame:
+    return _per_row(edges, domain2mod_rows)
+
+
+def deinvert_edges(edges: DataFrame) -> DataFrame:
+    return _per_row(edges, deinvert_rows)
 
 
 def remove_duplicates(edges: DataFrame) -> DataFrame:
-    """Set-dedup triples per graph, keeping the smallest pos of each
-    duplicate group so downstream order stays deterministic
-    (graph_transforms.py:8-10)."""
-    return edges.groupBy("graph_id", "src", "rel", "dst").agg(
-        F.min("pos").alias("pos")
-    ).select(*_EDGE_COLS)
+    return per_graph(edges, dedup_rows)
+
+
+def relabel_vars(edges: DataFrame) -> DataFrame:
+    return per_graph(edges, relabel_vars_rows)
+
+
+def concept_as_root(edges: DataFrame) -> DataFrame:
+    return per_graph(edges, concept_as_root_rows)
+
+
+def dereify(edges: DataFrame, rules: dict[str, tuple[str, str, str]] | None = None) -> DataFrame:
+    return per_graph(edges, lambda rows: dereify_rows(rows, rules))
+
+
+def generic_standardize(edges: DataFrame) -> DataFrame:
+    return per_graph(edges, graph_standardizer("generic"))
+
+
+def amr_standardize(edges: DataFrame) -> DataFrame:
+    return per_graph(edges, graph_standardizer("amr"))
+
+
+# --------------------------------------------------------------------------
+# passes outside the standardizer pipelines
+# --------------------------------------------------------------------------
 
 
 def variables(edges: DataFrame) -> DataFrame:
@@ -86,110 +316,6 @@ def variables(edges: DataFrame) -> DataFrame:
         .agg(
             F.min("pos").alias("first_pos"),
             F.max_by("dst", "pos").alias("concept"),
-        )
-    )
-
-
-def constants(edges: DataFrame) -> DataFrame:
-    """Per-graph constant set (util.py:22-37): non-variable endpoints of
-    non-instance triples, plus all concepts."""
-    var_tbl = variables(edges).select("graph_id", "var")
-    non_inst = edges.filter(F.col("rel") != INSTANCE)
-    ends = non_inst.select("graph_id", F.col("src").alias("name")).unionByName(
-        non_inst.select("graph_id", F.col("dst").alias("name"))
-    )
-    non_var_ends = ends.join(
-        var_tbl.withColumnRenamed("var", "name"), ["graph_id", "name"], "left_anti"
-    )
-    concepts = edges.filter(F.col("rel") == INSTANCE).select(
-        "graph_id", F.col("dst").alias("name")
-    )
-    return non_var_ends.unionByName(concepts).distinct()
-
-
-def relabel_vars(edges: DataFrame) -> DataFrame:
-    """Rename variables to ``<first-concept-char><n>`` (graph_transforms.py:32-73).
-
-    Naming order is the first-occurrence order of each variable's
-    :instance triple (= the reference's dict iteration order), expressed
-    as a row_number window per (graph, first-char).  Collisions with the
-    constant set get 'x' appended until free (reference loop); resolved
-    here in closed form with ONE join: a constant c blocks candidate
-    ``name + 'x'*k`` iff ``rtrim_x(c) == rtrim_x(name)`` and
-    ``len(c) >= len(name)`` (k = len difference), so the final suffix
-    length is the smallest non-negative integer missing from the blocked
-    set — a sorted-array gap fold, no driver-side fixpoint probing.
-    """
-    var_tbl = variables(edges)
-    base = F.substring("concept", 1, 1)
-    w = Window.partitionBy("graph_id", "base").orderBy("first_pos")
-    named = (
-        var_tbl.withColumn("base", base)
-        .withColumn("rank", F.row_number().over(w) - 1)
-        .withColumn(
-            "new_var",
-            F.when(F.col("rank") == 0, F.col("base")).otherwise(
-                F.concat(F.col("base"), F.col("rank").cast("string"))
-            ),
-        )
-        .select("graph_id", "var", "new_var")
-    )
-
-    rtrim_x = lambda c: F.regexp_replace(c, "x+$", "")  # noqa: E731
-    const_tbl = constants(edges).select(
-        "graph_id",
-        rtrim_x(F.col("name")).alias("stem"),
-        F.length("name").alias("clen"),
-    )
-    blocked = (
-        named.withColumn("stem", rtrim_x(F.col("new_var")))
-        .join(const_tbl, ["graph_id", "stem"])
-        .filter(F.col("clen") >= F.length("new_var"))
-        .groupBy("graph_id", "var")
-        .agg(
-            F.array_sort(
-                F.collect_set(F.col("clen") - F.length("new_var"))
-            ).alias("ks")
-        )
-        .withColumn(
-            "n_x",
-            F.aggregate(
-                "ks",
-                F.lit(0),
-                lambda acc, k: F.when(k == acc, acc + 1).otherwise(acc),
-            ),
-        )
-        .select("graph_id", "var", "n_x")
-    )
-    named = (
-        named.join(blocked, ["graph_id", "var"], "left")
-        .select(
-            "graph_id",
-            "var",
-            F.concat(
-                "new_var", F.repeat(F.lit("x"), F.coalesce("n_x", F.lit(0)))
-            ).alias("new_var"),
-        )
-    )
-
-    src_map = named.withColumnRenamed("var", "src").withColumnRenamed(
-        "new_var", "new_src"
-    )
-    dst_map = named.withColumnRenamed("var", "dst").withColumnRenamed(
-        "new_var", "new_dst"
-    )
-    return (
-        edges.join(src_map, ["graph_id", "src"], "left")
-        .join(dst_map, ["graph_id", "dst"], "left")
-        .select(
-            "graph_id",
-            "pos",
-            F.coalesce("new_src", "src").alias("src"),
-            "rel",
-            # :instance targets are concepts, never remapped
-            F.when(F.col("rel") == INSTANCE, F.col("dst"))
-            .otherwise(F.coalesce("new_dst", "dst"))
-            .alias("dst"),
         )
     )
 
@@ -235,65 +361,6 @@ def relabel_edges_by_concept(
             "src",
             F.coalesce("new_rel", "rel").alias("rel"),
             "dst",
-        )
-    )
-
-
-def domain2mod(edges: DataFrame) -> DataFrame:
-    """:domain ↔ :mod-of relabel (graph_transforms.py:101-111)."""
-    return edges.withColumn(
-        "rel",
-        F.when(F.col("rel") == ":domain", F.lit(":mod-of"))
-        .when(F.col("rel") == ":domain-of", F.lit(":mod"))
-        .otherwise(F.col("rel")),
-    )
-
-
-def deinvert_edges(edges: DataFrame) -> DataFrame:
-    """(s, r-of…of, t) → strip trailing -of chain; swap endpoints when the
-    chain length is odd (graph_transforms.py:76-98)."""
-    stripped = F.regexp_replace("rel", "(-of)+$", "")
-    n_of = (F.length("rel") - F.length(stripped)) / 3
-    odd = n_of.cast("int") % 2 == 1
-    return edges.select(
-        "graph_id",
-        "pos",
-        F.when(odd, F.col("dst")).otherwise(F.col("src")).alias("src"),
-        stripped.alias("rel"),
-        F.when(odd, F.col("src")).otherwise(F.col("dst")).alias("dst"),
-    )
-
-
-def concept_as_root(edges: DataFrame) -> DataFrame:
-    """First :root triple (ROOT, :root, x) → (x, :root, concept_of_x)
-    (graph_transforms.py:114-131); non-variable root targets are left
-    untouched rather than failing the whole job."""
-    w = Window.partitionBy("graph_id").orderBy("pos")
-    roots = (
-        edges.filter(F.col("rel") == ROOT_REL)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("graph_id", "pos")
-        .withColumn("is_first_root", F.lit(True))
-    )
-    var_tbl = variables(edges).select(
-        "graph_id", F.col("var").alias("dst"), "concept"
-    )
-    return (
-        edges.join(roots, ["graph_id", "pos"], "left")
-        .join(var_tbl, ["graph_id", "dst"], "left")
-        .select(
-            "graph_id",
-            "pos",
-            F.when(F.col("is_first_root") & F.col("concept").isNotNull(), F.col("dst"))
-            .otherwise(F.col("src"))
-            .alias("src"),
-            "rel",
-            F.when(
-                F.col("is_first_root") & F.col("concept").isNotNull(), F.col("concept")
-            )
-            .otherwise(F.col("dst"))
-            .alias("dst"),
         )
     )
 
@@ -371,109 +438,6 @@ def reify_attributes(edges: DataFrame) -> DataFrame:
     return kept.unionByName(rewired).unionByName(new_inst)
 
 
-def dereify(edges: DataFrame, rules: dict[str, tuple[str, str, str]] | None = None) -> DataFrame:
-    """Rule-based dereification: (z,:instance,C),(z,a1,x),(z,a2,y) → (x,rel,y)
-    (graph_transforms.py:277-385).
-
-    Eligibility per variable z, computed with one conditional aggregation
-    over its outgoing edges plus anti-joins for "no incoming edge":
-      * concept C is in the rule table,
-      * zero incoming edges (and z is not the root),
-      * exactly one a1-out, one a2-out, no other non-instance out-edges.
-    All eligible variables rewrite simultaneously (the reference scans a
-    frozen snapshot; a dereified var's targets are never themselves
-    eligible because the a-edges are incoming edges for them).
-    """
-    if rules is None:
-        rules = DEREIFY_RULES
-    spark = edges.sparkSession
-    rules_df = F.broadcast(
-        spark.createDataFrame(
-            [(c, r, a1, a2) for c, (r, a1, a2) in rules.items()],
-            "concept string, new_rel string, arg1 string, arg2 string",
-        )
-    )
-
-    var_tbl = variables(edges)  # (graph_id, var, first_pos, concept)
-    candidates = var_tbl.join(rules_df, "concept")
-
-    # no incoming edges at all (covers :root targets too)
-    incoming = edges.select("graph_id", F.col("dst").alias("var")).distinct()
-    candidates = candidates.join(incoming, ["graph_id", "var"], "left_anti")
-
-    out = edges.filter(F.col("rel") != INSTANCE).select(
-        "graph_id", F.col("src").alias("var"), "rel", "dst", "pos"
-    )
-    agg = (
-        out.join(
-            candidates.select("graph_id", "var", "new_rel", "arg1", "arg2"),
-            ["graph_id", "var"],
-        )
-        .groupBy("graph_id", "var", "new_rel")
-        .agg(
-            F.sum(F.when(F.col("rel") == F.col("arg1"), 1).otherwise(0)).alias("n1"),
-            F.sum(F.when(F.col("rel") == F.col("arg2"), 1).otherwise(0)).alias("n2"),
-            F.sum(
-                F.when(
-                    (F.col("rel") != F.col("arg1")) & (F.col("rel") != F.col("arg2")),
-                    1,
-                ).otherwise(0)
-            ).alias("n_other"),
-            F.max_by(
-                F.when(F.col("rel") == F.col("arg1"), F.col("dst")),
-                F.when(F.col("rel") == F.col("arg1"), F.col("pos")),
-            ).alias("x"),
-            F.max_by(
-                F.when(F.col("rel") == F.col("arg2"), F.col("dst")),
-                F.when(F.col("rel") == F.col("arg2"), F.col("pos")),
-            ).alias("y"),
-            F.min(
-                F.when(F.col("rel") == F.col("arg1"), F.col("pos"))
-            ).alias("a1_pos"),
-        )
-        .filter((F.col("n1") == 1) & (F.col("n2") == 1) & (F.col("n_other") == 0))
-    )
-
-    eligible = agg.select("graph_id", "var", "new_rel", "x", "y", "a1_pos")
-
-    # drop the three structure triples of each eligible var: its outgoing
-    # a1/a2 edges (all of them — there is exactly one each) and the first
-    # :instance triple (the reference deletes the first instance index).
-    first_inst = (
-        edges.filter(F.col("rel") == INSTANCE)
-        .groupBy("graph_id", F.col("src").alias("var"))
-        .agg(F.min("pos").alias("pos"))
-        .join(eligible.select("graph_id", "var"), ["graph_id", "var"], "left_semi")
-        .select("graph_id", "pos")
-    )
-    out_edges_of_eligible = (
-        edges.filter(F.col("rel") != INSTANCE)
-        .join(
-            eligible.select("graph_id", F.col("var").alias("src")),
-            ["graph_id", "src"],
-            "left_semi",
-        )
-        .select("graph_id", "pos")
-    )
-    to_delete = first_inst.unionByName(out_edges_of_eligible)
-    kept = edges.join(to_delete, ["graph_id", "pos"], "left_anti")
-
-    maxpos = edges.groupBy("graph_id").agg(F.max("pos").alias("max_pos"))
-    w = Window.partitionBy("graph_id").orderBy("a1_pos")
-    new_edges = (
-        eligible.join(maxpos, "graph_id")
-        .withColumn("k", F.row_number().over(w))
-        .select(
-            "graph_id",
-            (F.col("max_pos") + F.col("k")).alias("pos"),
-            F.col("x").alias("src"),
-            F.col("new_rel").alias("rel"),
-            F.col("y").alias("dst"),
-        )
-    )
-    return kept.unionByName(new_edges)
-
-
 def reify_rules_transform(
     edges: DataFrame, rules: dict[str, tuple[str, str, str]] | None = None
 ) -> DataFrame:
@@ -549,24 +513,3 @@ def subgraph_lexicalized(edges: DataFrame) -> DataFrame:
     return subgraph_instance(edges).filter(
         F.lower("dst").rlike(".*-[0-9]+")
     )
-
-
-def generic_standardize(edges: DataFrame) -> DataFrame:
-    """lower → dequote → relabel_vars → deinvert (generic/tools.py:15-57)."""
-    out = remove_quotes(lower_all_labels(edges))
-    out = relabel_vars(_stage(out))
-    out = deinvert_edges(out)
-    return _edges(out)
-
-
-def amr_standardize(edges: DataFrame) -> DataFrame:
-    """The full AMR pipeline (formalism/amr/tools.py:179-193); pass order
-    is semantics-bearing.  Multi-reference passes (relabel,
-    concept_as_root, dereify) get a staged input — see _stage."""
-    out = remove_quotes(lower_all_labels(edges))
-    out = relabel_vars(_stage(out))
-    out = deinvert_edges(domain2mod(out))
-    out = concept_as_root(_stage(out))
-    out = dereify(_stage(out))
-    out = remove_duplicates(out)
-    return _edges(out)

@@ -5,7 +5,8 @@ global edge table ``(graph_id, pos, src, rel, dst)``.  The parse is a
 single ``mapInPandas`` pass (Arrow batches; pure-Python state machine per
 row inside the batch, reference semantics at data_helpers.py:25-180) — no
 shuffle, scales linearly with executors, and Catalyst prunes ``content``
-away from every downstream plan.
+away from every downstream plan.  The engine hands the reader a per-graph
+standardizer, which runs on each parsed graph inside the same batch.
 
 Writer: edge table → ``(graph_id, penman)`` via ``groupBy(graph_id)``
 ``applyInPandas`` (one graph always fits one group; reference semantics at
@@ -22,7 +23,7 @@ arbitrary partitioning.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -40,13 +41,18 @@ def with_graph_id(corpus: DataFrame, content_col: str = "content") -> DataFrame:
     )
 
 
-def parse_edges(
+def parse_with(
     corpus: DataFrame,
-    content_col: str = "content",
-    explicate_root: bool = True,
-    id_col: str | None = None,
+    content_col: str,
+    id_col: str | None,
+    read: Callable[[str], list],
+    standardize: Callable[[list], list] | None = None,
 ) -> DataFrame:
-    """Parse the corpus into the global edge table.
+    """Corpus → edge table in one ``mapInPandas``: ``read`` turns one
+    content string into its triples, numbered by ``pos`` in emission
+    order; ``standardize``, when given, then rewrites that graph's
+    ``(pos, src, rel, dst)`` rows inside the same batch
+    (``operators.standardize.graph_standardizer``).
 
     Only ``(graph_id, content)`` enter the Python worker; all other corpus
     columns are pruned at the scan.  ``graph_id`` defaults to the
@@ -72,7 +78,10 @@ def parse_edges(
             rels: list[str] = []
             dsts: list[str] = []
             for gid, content in zip(pdf["graph_id"], pdf["content"]):
-                for pos, (s, r, t) in enumerate(parse_penman(content, explicate_root)):
+                rows = [(pos, s, r, t) for pos, (s, r, t) in enumerate(read(content))]
+                if standardize is not None:
+                    rows = standardize(rows)
+                for pos, s, r, t in rows:
                     gids.append(gid)
                     poss.append(pos)
                     srcs.append(s)
@@ -83,6 +92,20 @@ def parse_edges(
             )
 
     return slim.mapInPandas(parse_batches, EDGES_SCHEMA)
+
+
+def parse_edges(
+    corpus: DataFrame,
+    content_col: str = "content",
+    explicate_root: bool = True,
+    id_col: str | None = None,
+    standardize: Callable[[list], list] | None = None,
+) -> DataFrame:
+    """Parse a Penman corpus into the global edge table (``parse_with``)."""
+    return parse_with(
+        corpus, content_col, id_col,
+        lambda content: parse_penman(content, explicate_root), standardize,
+    )
 
 
 def read_penman_corpus(spark, path: str) -> DataFrame:
@@ -161,6 +184,7 @@ def goodmami_parse_edges(
     content_col: str = "content",
     explicate_root: bool = True,
     id_col: str | None = None,
+    standardize: Callable[[list], list] | None = None,
 ) -> DataFrame:
     """Edge-table parse via goodmami's third-party ``penman`` library —
     the reference's optional GoodmamiPenmanReader (data_helpers.py:255-275)
@@ -168,8 +192,8 @@ def goodmami_parse_edges(
     ``("ROOT_OF_GRAPH", ":root", top)`` prepended when ``explicate_root``.
 
     Import-guarded: raises the reference's install hint when the library
-    is absent (it is optional there too).  The import happens inside the
-    Arrow batch kernel so executors fail with the same message as the
+    is absent (it is optional there too).  The import happens again inside
+    the Arrow batch kernel so executors fail with the same message as the
     driver probe.
     """
     try:
@@ -180,35 +204,9 @@ def goodmami_parse_edges(
             "https://github.com/goodmami/penman"
         ) from e
 
-    if id_col is None:
-        slim = with_graph_id(corpus, content_col).select(
-            "graph_id", F.col(content_col).alias("content")
-        )
-    else:
-        slim = corpus.select(
-            F.col(id_col).cast("string").alias("graph_id"),
-            F.col(content_col).alias("content"),
-        )
-
-    def parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read(content: str) -> list[tuple]:
         import penman as gmpm
 
-        for pdf in batches:
-            gids: list[str] = []
-            poss: list[int] = []
-            srcs: list[str] = []
-            rels: list[str] = []
-            dsts: list[str] = []
-            for gid, content in zip(pdf["graph_id"], pdf["content"]):
-                triples = _goodmami_graph_triples(gmpm, content, explicate_root)
-                for pos, (s, r, t) in enumerate(triples):
-                    gids.append(gid)
-                    poss.append(pos)
-                    srcs.append(s)
-                    rels.append(r)
-                    dsts.append(t)
-            yield pd.DataFrame(
-                {"graph_id": gids, "pos": poss, "src": srcs, "rel": rels, "dst": dsts}
-            )
+        return _goodmami_graph_triples(gmpm, content, explicate_root)
 
-    return slim.mapInPandas(parse_batches, EDGES_SCHEMA)
+    return parse_with(corpus, content_col, id_col, read, standardize)

@@ -1,40 +1,34 @@
 """TSV graph reader/writer (reference data_helpers.py:243-252, 440-445).
 
 The TSV file column order is ``src<TAB>tgt<TAB>rel`` — note the swap when
-mapping to the edge-table layout ``(src, rel, dst)``.  Both directions are
-pure column expressions: no Python runs at all.
+mapping to the edge-table layout ``(src, rel, dst)``.  The reader is the
+same one-``mapInPandas`` parse as the Penman reader
+(``sources.penman.parse_with``) over ``graphkit.parse_tsv``; the writer is
+pure column expressions.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smatchpp_spark.functions.graphkit import parse_tsv
+from smatchpp_spark.sources.penman import parse_with
+
 
 def parse_tsv_edges(
-    corpus: DataFrame, content_col: str = "content", id_col: str | None = None
+    corpus: DataFrame,
+    content_col: str = "content",
+    id_col: str | None = None,
+    standardize: Callable[[list], list] | None = None,
 ) -> DataFrame:
-    """Corpus rows holding TSV graph blocks → edge table, JVM-side only.
+    """Corpus rows holding TSV graph blocks → edge table.
 
     ``graph_id`` defaults to sha256(content) (the row invariant); pass
     ``id_col`` to key by an existing column instead (e.g. a pair id)."""
-    key = (
-        F.sha2(F.encode(F.col(content_col), "UTF-8"), 256)
-        if id_col is None
-        else F.col(id_col).cast("string")
-    )
-    with_id = corpus.select(
-        key.alias("graph_id"),
-        F.posexplode(F.split(F.col(content_col), "\n")).alias("pos", "line"),
-    )
-    cols = F.split(F.col("line"), r"\s+")
-    return with_id.select(
-        "graph_id",
-        F.col("pos").cast("long").alias("pos"),
-        cols.getItem(0).alias("src"),
-        cols.getItem(2).alias("rel"),  # file order is src tgt rel
-        cols.getItem(1).alias("dst"),
-    )
+    return parse_with(corpus, content_col, id_col, parse_tsv, standardize)
 
 
 def write_tsv(edges: DataFrame) -> DataFrame:

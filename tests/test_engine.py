@@ -1,5 +1,7 @@
 """End-to-end engine facade tests: corpus → parse → standardize → align →
-aggregate, cross-checked against the reference driven the same way."""
+aggregate.  ``test_score_corpus_matches_reference`` cross-checks against
+the reference driven the same way and skips where it is not importable;
+every other test runs on the engine alone."""
 
 from __future__ import annotations
 
@@ -11,11 +13,6 @@ from pyspark.sql import functions as F
 from smatchpp_spark.corpus import generate_penman
 from smatchpp_spark.engine import EngineConfig, SmatchppSpark
 from smatchpp_spark.operators.align import AlignConfig
-
-ref = pytest.importorskip("smatchpp.data_helpers", reason="reference not importable")
-from smatchpp import data_helpers, preprocess, score, solvers  # noqa: E402
-from smatchpp import align as ref_align  # noqa: E402
-from smatchpp.formalism.generic import tools as generic_tools  # noqa: E402
 
 
 def _corpus_pairs(n: int):
@@ -32,6 +29,10 @@ def _corpus_pairs(n: int):
 
 
 def ref_micro_macro(pairs):
+    from smatchpp import align as ref_align
+    from smatchpp import data_helpers, preprocess, score, solvers
+    from smatchpp.formalism.generic import tools as generic_tools
+
     reader = data_helpers.PenmanReader()
     std = generic_tools.GenericStandardizer()
     prep = preprocess.BasicGraphPairPreparer()
@@ -60,6 +61,7 @@ def ref_micro_macro(pairs):
 
 
 def test_score_corpus_matches_reference(spark):
+    pytest.importorskip("smatchpp.data_helpers", reason="reference not importable")
     pairs = _corpus_pairs(12)
     ca = spark.createDataFrame(
         [(i, a) for i, (a, _) in enumerate(pairs)], "pair_id long, content string"
@@ -116,6 +118,36 @@ def test_duplicate_content_across_pairs_does_not_collapse(spark):
     assert by_pair[1]["matchsum_x"] < by_pair[1]["xlen"]
 
 
+def test_tsv_input_scores_like_penman(spark):
+    """The tsv reader runs the same fused parse + standardize stage: the
+    same graphs written as TSV blocks give the same per-pair stats (on
+    graphs whose labels hold no whitespace, which TSV cannot carry)."""
+    from smatchpp_spark.functions.graphkit import parse_penman, triples_to_tsv
+
+    def tsv_safe(g):
+        return not any(ch.isspace() for t in parse_penman(g) for x in t for ch in x)
+
+    pairs = [p for p in _corpus_pairs(12) if tsv_safe(p[0]) and tsv_safe(p[1])]
+    assert len(pairs) >= 4
+
+    def corpora(fmt):
+        as_fmt = (lambda g: g) if fmt == "penman" else (
+            lambda g: triples_to_tsv(parse_penman(g)))
+        return [
+            spark.createDataFrame(
+                [(i, as_fmt(p[side])) for i, p in enumerate(pairs)],
+                "pair_id long, content string",
+            )
+            for side in (0, 1)
+        ]
+
+    def stats(fmt):
+        engine = SmatchppSpark(EngineConfig(standardizer="amr", input_format=fmt))
+        return sorted(tuple(r) for r in engine.score_corpus(*corpora(fmt))["pairs"].collect())
+
+    assert stats("tsv") == stats("penman")
+
+
 def test_bootstrap_ci_bounds(spark):
     pairs = _corpus_pairs(8)
     ca = spark.createDataFrame(
@@ -164,42 +196,28 @@ def test_bootstrap_deterministic_across_partitionings(spark):
         assert 0.0 <= cis[0]["lo"] <= cis[0]["hi"] <= 100.0
 
 
-def test_registry_factories(spark):
-    """uri registry parity with reference model_factory: same names, same
-    NotImplementedError contract, components behave."""
-    import pytest as _pytest
-
-    from smatchpp_spark import registry
+def test_engine_resolves_its_components(spark):
+    """The standardizer and the reader are engine options: unknown names
+    raise at construction, ``none`` passes the parse through, and every
+    known reader (``goodmami`` included) is an ``input_format``."""
     from smatchpp_spark.sources.penman import parse_edges
+
+    with pytest.raises(ValueError, match="standardizer"):
+        SmatchppSpark(EngineConfig(standardizer="ucca"))
+    with pytest.raises(ValueError, match="input_format"):
+        SmatchppSpark(EngineConfig(input_format="xml"))
+    for fmt in ("penman", "tsv", "goodmami"):
+        SmatchppSpark(EngineConfig(input_format=fmt))
 
     corpus = spark.createDataFrame(
         [("0", "(a / ant :mod (b / big))")], "gid string, content string"
     )
-    edges = parse_edges(corpus, id_col="gid")
-
-    std = registry.StandardizerFactory.get_standardizer("amr")
-    assert std(edges).count() > 0
-    assert registry.StandardizerFactory.get_standardizer(None)(edges) is edges
-    with _pytest.raises(NotImplementedError):
-        registry.StandardizerFactory.get_standardizer("ucca")
-
-    reader = registry.GraphReaderFactory.get_reader("penman")
-    assert reader(corpus, id_col="gid").count() == edges.count()
-    with _pytest.raises(NameError):
-        registry.GraphReaderFactory.get_reader("xml")
-
-    extract = registry.SubgraphExtractorFactory.get_extractor("amr")
-    assert extract(edges).count() > 0
-    with _pytest.raises(NotImplementedError):
-        registry.SubgraphExtractorFactory.get_extractor("generic")
-
-    assert registry.SolverFactory.get_solver("ilp") == "bnb"
-    assert registry.SolverFactory.get_solver("hillclimber") == "hillclimber"
-    # lp resolves: the LAP relaxation bound + repaired-alignment rescore
-    # on the hillclimber path meet the reference LP contract
-    assert registry.SolverFactory.get_solver("lp") == "hillclimber"
-    with _pytest.raises(NotImplementedError):
-        registry.SolverFactory.get_solver("rilp")
+    parsed = parse_edges(corpus, id_col="gid")
+    rows = lambda df: sorted(df.select("graph_id", "pos", "src", "rel", "dst").collect())  # noqa: E731
+    none = SmatchppSpark(EngineConfig(standardizer="none"))
+    assert rows(none._keyed_edges(corpus, "gid", "content")) == rows(parsed)
+    amr = SmatchppSpark(EngineConfig(standardizer="amr"))
+    assert amr._keyed_edges(corpus, "gid", "content").count() > 0
 
 
 def test_score_dimensions_bootstrap_ci(spark):

@@ -137,15 +137,16 @@ def test_graph_id_is_sha256_content_invariant(spark):
 
 
 def test_goodmami_reader_guard_or_parity(spark):
-    """Registry resolves the 'goodmami' uri; with the third-party penman
-    library absent (this container) the call raises the reference's
+    """The engine accepts ``input_format="goodmami"``; with the
+    third-party penman library absent the parse raises the reference's
     install hint (data_helpers.py:255-275); when present, output parity
     with our parser is asserted on clean graphs."""
     import pytest as _pytest
 
-    from smatchpp_spark.registry import GraphReaderFactory
+    from smatchpp_spark.engine import EngineConfig, SmatchppSpark
 
-    reader = GraphReaderFactory.get_reader("goodmami")
+    engine = SmatchppSpark(EngineConfig(input_format="goodmami", standardizer="none"))
+    reader = engine.edges
     corpus = spark.createDataFrame(
         [("(a / ant :mod (s / small))",)], "content string"
     )

@@ -83,6 +83,22 @@ def _canonical_undirected(edges: DataFrame, weight_col: str | None) -> DataFrame
     )
 
 
+def _without_size_estimate(df: DataFrame) -> DataFrame:
+    """``df``'s rows over its already-truncated RDD, minus the size
+    estimate a localCheckpoint inherits from the plan that built it.
+
+    Each sweep's plan reads the state several times through joins, and
+    Catalyst's size-only estimator multiplies the children's sizes at a
+    join; the checkpoint carries that product into the next sweep, so
+    the estimate's digit count multiplies every sweep and planning time
+    with it (level-2 sweeps of a 32-vertex graph: 2 s each at first,
+    108 s by the eighth, all of it BigInt arithmetic).  Without the
+    inherited estimate every sweep plans from the default size."""
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(df._jdf.rdd(), df._jdf.schema())
+    return DataFrame(jdf, spark)
+
+
 def _parity(col, t: int, portable: bool):
     # portable mode hashes the STRING form so a SQL oracle (md5 needs a
     # string) replays the gating bit-for-bit on any vertex id type
@@ -143,7 +159,9 @@ def _level_pass(
     init = kdf.select(F.col("v").alias("vertex"), F.col("v").alias("lbl"))
 
     def step(state: DataFrame, t: int) -> DataFrame:
-        st = state.select(F.col("vertex").alias("v"), "lbl")
+        st = _without_size_estimate(state).select(
+            F.col("vertex").alias("v"), "lbl"
+        )
         # KNOWN TRADE-OFF: tot/vc/cur below each feed two consumers, so
         # Catalyst re-plans the vote-join dataflow up to ~3x per sweep
         # (exchanges of identical subtrees DO get reused; the aggs above

@@ -19,6 +19,7 @@ Any rewrite of those passes must reproduce them exactly.  To re-record
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -47,12 +48,11 @@ def _passes():
     }
 
 
-def _rows_sha(df) -> str:
-    rows = sorted(
-        json.dumps([r["graph_id"], r["pos"], r["src"], r["rel"], r["dst"]])
-        for r in df.select("graph_id", "pos", "src", "rel", "dst").collect()
-    )
-    return hashlib.sha256("\n".join(rows).encode("utf-8")).hexdigest()
+COLS = ("graph_id", "pos", "src", "rel", "dst")
+
+
+def _rows_sha(lines: list[str]) -> str:
+    return hashlib.sha256("\n".join(sorted(lines)).encode("utf-8")).hexdigest()
 
 
 def _parsed(spark, seed: int):
@@ -72,8 +72,19 @@ def _pair_corpus(spark, seed: int):
 
 
 def pass_hashes(spark, seed: int) -> dict[str, str]:
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
     edges = _parsed(spark, seed)
-    return {name: _rows_sha(fn(edges)) for name, fn in _passes().items()}
+    # every pass's rows, tagged with its name, in one job
+    frames = [
+        fn(edges).select(F.lit(name).alias("_pass"), *COLS)
+        for name, fn in _passes().items()
+    ]
+    lines: dict[str, list[str]] = {name: [] for name in _passes()}
+    for r in functools.reduce(DataFrame.unionByName, frames).collect():
+        lines[r["_pass"]].append(json.dumps([r[c] for c in COLS]))
+    return {name: _rows_sha(rows) for name, rows in lines.items()}
 
 
 def corpus_scores(spark, standardizer: str, seed_a: int, seed_b: int) -> dict:

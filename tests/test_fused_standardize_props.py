@@ -7,10 +7,13 @@ unbalanced Penman."""
 
 from __future__ import annotations
 
+import functools
 import random
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from smatchpp_spark.corpus import generate_penman
 from smatchpp_spark.engine import EngineConfig, SmatchppSpark
@@ -44,12 +47,12 @@ def contents(draw) -> str:
     return text
 
 
-def _rows(df) -> list:
+COLS = ("graph_id", "pos", "src", "rel", "dst")
+
+
+def _sorted(rows) -> list:
     key = lambda r: tuple((v is None, "" if v is None else str(v)) for v in r)  # noqa: E731
-    return sorted(
-        (tuple(r) for r in df.select("graph_id", "pos", "src", "rel", "dst").collect()),
-        key=key,
-    )
+    return sorted(rows, key=key)
 
 
 @settings(max_examples=4, deadline=None, derandomize=True, database=None)
@@ -59,11 +62,25 @@ def test_fused_path_equals_wrapper_path(spark, texts):
         list(enumerate(texts)), "pair_id long, content string"
     )
     parsed = parse_edges(corpus, "content", id_col="pair_id")
-    for name, wrapper in WRAPPERS.items():
-        for dedup in (False, True):
-            engine = SmatchppSpark(EngineConfig(standardizer=name, remove_duplicates=dedup))
-            fused = engine._keyed_edges(corpus, "pair_id", "content")
-            expect = wrapper(parsed)
-            if dedup:
-                expect = remove_duplicates(expect)
-            assert _rows(fused) == _rows(expect), (name, dedup, texts)
+    # both sides of every (standardizer, dedup) case, tagged and collected
+    # in one job: the cases are compared one by one below
+    cases = [(name, dedup) for name in WRAPPERS for dedup in (False, True)]
+    frames = []
+    for i, case in enumerate(cases):
+        name, dedup = case
+        engine = SmatchppSpark(EngineConfig(standardizer=name, remove_duplicates=dedup))
+        fused = engine._keyed_edges(corpus, "pair_id", "content")
+        expect = WRAPPERS[name](parsed)
+        if dedup:
+            expect = remove_duplicates(expect)
+        # the union below would widen mismatched types; keep them equal
+        assert fused.select(*COLS).dtypes == expect.select(*COLS).dtypes, case
+        for side, df in ((0, fused), (1, expect)):
+            frames.append(df.select(F.lit(i).alias("_case"), F.lit(side).alias("_side"), *COLS))
+    got: dict = {}
+    for r in functools.reduce(DataFrame.unionByName, frames).collect():
+        got.setdefault((r["_case"], r["_side"]), []).append(tuple(r[c] for c in COLS))
+    for i, case in enumerate(cases):
+        fused_rows = _sorted(got.get((i, 0), []))
+        expect_rows = _sorted(got.get((i, 1), []))
+        assert fused_rows == expect_rows, (*case, texts)

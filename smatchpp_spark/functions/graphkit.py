@@ -191,14 +191,12 @@ def parse_tsv(text: str | None) -> list[Triple]:
     """TSV graph block: one triple per line, file column order is src, tgt,
     rel.  Lines split on ``\\n`` and fields on runs of ASCII whitespace,
     as Spark's ``split`` does (a leading blank gives an empty first
-    field); a line with fewer than three fields raises ``IndexError``."""
+    field).  A line with fewer than three fields (a blank line, the empty
+    tail of a trailing newline) is skipped rather than failing the block."""
     if text is None:
         return []
-    out = []
-    for line in text.split("\n"):
-        cols = _TSV_FIELDS.split(line)
-        out.append((cols[0], cols[2], cols[1]))
-    return out
+    fields = (_TSV_FIELDS.split(line) for line in text.split("\n"))
+    return [(c[0], c[2], c[1]) for c in fields if len(c) >= 3]
 
 
 def triples_to_tsv(triples: list[Triple]) -> str:

@@ -25,9 +25,9 @@ function of (graph, dims, s, weights) — bit-replayable in any engine,
 which is what the DuckDB oracle does (the sssp.py unrolling contract).
 
 Determinism note: embeddings are hash-of-vertex-id seeded, so they are
-NOT rename-invariant (use operators/wl.py fingerprints for that); they
-ARE partitioning- and engine-invariant for fixed ids, which is the
-contract that matters for reproducible pipelines.
+NOT rename-invariant; they ARE partitioning- and engine-invariant for
+fixed ids, which is the contract that matters for reproducible
+pipelines.
 """
 
 from __future__ import annotations

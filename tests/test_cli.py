@@ -14,9 +14,6 @@ import pytest
 from smatchpp_spark.corpus import generate_penman
 from smatchpp_spark.sources.penman import read_penman_corpus
 
-ref = pytest.importorskip("smatchpp.data_helpers", reason="reference not importable")
-from smatchpp import data_helpers  # noqa: E402
-
 
 def _write_corpus(tmp_path, graphs, name):
     blocks = []
@@ -29,6 +26,9 @@ def _write_corpus(tmp_path, graphs, name):
 
 
 def test_read_penman_corpus_matches_reference(spark, tmp_path):
+    data_helpers = pytest.importorskip(
+        "smatchpp.data_helpers", reason="reference not importable"
+    )
     graphs = []
     for i in range(40):
         rng = random.Random(f"cli:{i}")
@@ -92,7 +92,8 @@ def test_cli_tsv_input_and_text_output(spark, tmp_path, monkeypatch, capsys):
 
     rows = [
         (0, "a\tb\t:instance\na\tc\t:arg0\nc\td\t:instance"),
-        (1, "x\ty\t:instance\nx\tz\t:arg1"),
+        # a block written with a final newline
+        (1, "x\ty\t:instance\nx\tz\t:arg1\n"),
     ]
     df = spark.createDataFrame(rows, "pair_id long, content string")
     pq = str(tmp_path / "tsv_corpus")
@@ -121,6 +122,9 @@ def test_cli_tsv_input_and_text_output(spark, tmp_path, monkeypatch, capsys):
 def test_read_penman_corpus_multi_split_order(spark, tmp_path):
     """The distributed reader must preserve file order for pair ids even
     when the file splits into multiple input partitions."""
+    data_helpers = pytest.importorskip(
+        "smatchpp.data_helpers", reason="reference not importable"
+    )
     graphs = []
     for i in range(300):
         rng = random.Random(f"split:{i}")
@@ -186,6 +190,9 @@ def test_read_penman_corpus_keeps_interior_empty_blocks(spark, tmp_path):
     interior empty blocks (3+ consecutive newlines) are KEPT and consume
     a pair_id — positional pairing stays aligned with the reference —
     while a trailing empty block is trimmed like the reference's."""
+    data_helpers = pytest.importorskip(
+        "smatchpp.data_helpers", reason="reference not importable"
+    )
     text = "(a / ant)\n\n\n\n(b / bee)\n\n(c / cat)\n\n"
     path = tmp_path / "gappy.amr"
     path.write_text(text)

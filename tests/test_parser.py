@@ -50,6 +50,14 @@ def test_tsv_roundtrip():
     assert parse_tsv(triples_to_tsv(triples)) == triples
 
 
+def test_tsv_skips_lines_with_fewer_than_three_fields():
+    block = "a\talpha\t:instance\na\tb\t:mod"
+    triples = [("a", ":instance", "alpha"), ("a", ":mod", "b")]
+    assert parse_tsv(block + "\n") == parse_tsv(block) == triples
+    assert parse_tsv(block.replace("\n", "\n\n")) == triples
+    assert parse_tsv(block.replace("\n", "\nb\tc\n")) == triples
+
+
 def test_penman_writer_roundtrip_parses_back():
     # writer output must re-parse to the same triple multiset (order-free)
     import re

@@ -1,4 +1,4 @@
-"""δ-temporal triangles and label mixing/assortativity vs brute force."""
+"""Label mixing and assortativity vs brute force."""
 
 from __future__ import annotations
 
@@ -10,70 +10,6 @@ from smatchpp_spark.operators.graphstats import (
     label_assortativity,
     label_mixing_matrix,
 )
-from smatchpp_spark.operators.temporal import temporal_triangles
-
-
-# ---- temporal triangles ----------------------------------------------------
-
-def _cdf(spark, contacts):
-    return spark.createDataFrame(
-        [(f"v{a}", f"v{b}", t) for a, b, t in contacts],
-        "src string, dst string, t long",
-    )
-
-
-def _py_temporal(contacts, delta):
-    by_pair = {}
-    for a, b, t in contacts:
-        if a == b:
-            continue
-        by_pair.setdefault((f"v{min(a,b)}", f"v{max(a,b)}"), set()).add(t)
-    adj = {}
-    for (a, b) in by_pair:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    tris = {
-        tuple(sorted((a, b, x)))
-        for (a, b) in by_pair
-        for x in adj[a] & adj[b]
-    }
-    realized = 0
-    for t in tris:
-        pairs = list(itertools.combinations(t, 2))
-        times = [sorted(by_pair[p]) for p in pairs]
-        ok = any(
-            max(c) - min(c) <= delta
-            for c in itertools.product(*times)
-        )
-        realized += ok
-    return len(tris), realized
-
-
-def test_temporal_triangles_vs_python(spark):
-    rng = random.Random(31)
-    contacts = {
-        (rng.randrange(9), rng.randrange(9), rng.randrange(0, 40))
-        for _ in range(80)
-    }
-    for delta in (0, 5, 100):
-        row = temporal_triangles(_cdf(spark, contacts), delta=delta).collect()[0]
-        want_static, want_real = _py_temporal(contacts, delta)
-        assert row["static_triangles"] == want_static, delta
-        assert row["temporal_triangles"] == want_real, delta
-        assert row["delta"] == delta
-
-
-def test_temporal_triangles_window_edge(spark):
-    # triangle with contacts exactly delta apart is realized; one more
-    # time unit is not — and a second contact on one edge can rescue it
-    base = [(0, 1, 10), (1, 2, 15), (0, 2, 20)]
-    r = temporal_triangles(_cdf(spark, base), delta=10).collect()[0]
-    assert (r["static_triangles"], r["temporal_triangles"]) == (1, 1)
-    r = temporal_triangles(_cdf(spark, base), delta=9).collect()[0]
-    assert (r["static_triangles"], r["temporal_triangles"]) == (1, 0)
-    rescued = base + [(0, 2, 16)]
-    r = temporal_triangles(_cdf(spark, rescued), delta=9).collect()[0]
-    assert (r["static_triangles"], r["temporal_triangles"]) == (1, 1)
 
 
 # ---- label mixing / assortativity ------------------------------------------

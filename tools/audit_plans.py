@@ -171,18 +171,6 @@ CHECKS = {
          "projection"),
         ("codegen id", "pure projection stays in whole-stage codegen"),
     ],
-    # butterfly_census itself returns a pre-reduced 1-row frame (the
-    # wedge sums / pair counts run inside the operator); the per-vertex
-    # variant exposes the real distributed plan
-    "butterflies_per_part": [
-        ("Scan ExistingRDD",
-         "the distinct edge table is localCheckpoint-materialized ONCE "
-         "and both self-join sides read the checkpoint (the minhash "
-         "projection-collapse guard), so no branch recomputes the scan"),
-        ("HashAggregate",
-         "pair and per-vertex butterfly counts combine map-side "
-         "(hub-safe)"),
-    ],
     "doc_simhash_neardup": [
         ("HashAggregate",
          "per-pair shared-block counting combines map-side; candidates "
@@ -204,21 +192,6 @@ CHECKS = {
         ("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint>",
          "co-purchase edge derivation prunes to the 2 key columns"),
     ],
-    "graph_one_mode": [
-        ("Scan ExistingRDD",
-         "the deduped 2-column edge set is localCheckpointed once and "
-         "both self-join sides read the checkpoint blocks (the upstream "
-         "lineitem scan pruned to 2 key columns before materializing)"),
-        ("HashAggregate",
-         "pair counts + Newman credit sums combine map-side after the "
-         "pivot self-join"),
-    ],
-    "triad_census": [
-        ("HashAggregate",
-         "dyad direction bits and mask counts combine map-side"),
-        ("BroadcastHashJoin",
-         "the 64-row mask->type lookup broadcasts"),
-    ],
     "graph_richclub": [
         ("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint>",
          "edge derivation reads 2 of 11 lineitem columns"),
@@ -237,23 +210,6 @@ CHECKS = {
         ("TakeOrderedAndProject",
          "global top-k runs as take-ordered — no full sort "
          "materialization of the pair table"),
-    ],
-    "four_clique_counts": [
-        ("Scan ExistingRDD",
-         "the operator returns its eagerly-checkpointed per-vertex table "
-         "(the 3-join clique plan is deliberately truncated — it feeds "
-         "both the total and the per-vertex output); the UPSTREAM "
-         "dataflow (2-column scan, oriented joins, one explode pass, "
-         "map-side corner combine) is audited via graphlet_census, "
-         "which runs the identical un-checkpointed plan"),
-    ],
-    "graphlet_census": [
-        ("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint>",
-         "every primitive (degrees, triangles, CN wedges, 4-cliques) "
-         "derives from the same 2-column scan"),
-        ("HashAggregate",
-         "all census identities are map-side-combinable aggregations "
-         "over the oriented-join outputs"),
     ],
     "emb_pq_topk": [
         ("BroadcastExchange",

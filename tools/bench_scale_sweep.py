@@ -202,8 +202,7 @@ def main() -> None:
         )
         stats10 = c if stats10 is None else stats10.unionByName(c)
 
-    # %19-sparsified co-purchase graph (the clique_percolation contract
-    # input shape)
+    # %19-sparsified co-purchase graph
     li19 = (
         spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         .select("l_orderkey", "l_partkey")
@@ -595,7 +594,6 @@ def main() -> None:
         ).coreness.count())
 
         # ---- round-7 operators ----
-        from smatchpp_spark.operators.butterflies import butterfly_count
         from smatchpp_spark.operators.components import bipartite_check
         from smatchpp_spark.operators.graphstats import (
             community_conductance,
@@ -607,9 +605,6 @@ def main() -> None:
         from smatchpp_spark.pipeline.sketches import count_min_sketch
         from smatchpp_spark.pipeline.text import c4_filter, gopher_filter, tokens
 
-        timed("butterfly_census", scale, lambda: butterfly_count(
-            e_op, left_col="src", right_col="dst"
-        ).collect())
         timed("salsa_5steps", scale, lambda: salsa(
             e_op, max_supersteps=5, tol=-1.0
         ).scores.count())
@@ -661,29 +656,13 @@ def main() -> None:
         ).count())
 
         # ---- round-7 late additions ----
-        from smatchpp_spark.operators.butterflies import one_mode_projection
         from smatchpp_spark.operators.hits import katz_centrality
-        from smatchpp_spark.operators.triads import triad_census
 
-        timed("graph_one_mode_newman", scale, lambda: one_mode_projection(
-            e_op, side="right", left_col="src", right_col="dst",
-            weighting="newman", min_common=2,
-        ).count())
         timed("katz_5steps", scale, lambda: katz_centrality(
             inp["e_co"], alpha=0.05, beta=1.0, max_supersteps=5, tol=-1.0
         ).scores.count())
-        # hub guard keeps the wedge path bounded on the dense co-graph:
-        # cap 64, not 256 — at 256 the 1x census alone is ~280 s
-        # (Σ min(d,cap)² wedges) and the 10x run OOMed a 12 GiB driver;
-        # the guard is the documented scale mechanism, so the sweep
-        # measures the guarded operator at an affordable cap (identical
-        # work definition at both scales)
-        timed("triad_census_co", scale, lambda: triad_census(
-            inp["e_co"], max_center_degree=64
-        ).count())
 
         from smatchpp_spark.operators.graphstats import powerlaw_fit
-        from smatchpp_spark.operators.temporal import temporal_earliest_arrival
         from smatchpp_spark.sources.rmat import rmat_edges
 
         timed("graph_powerlaw", scale, lambda: powerlaw_fit(
@@ -694,26 +673,6 @@ def main() -> None:
         timed("rmat_generate", scale, lambda: rmat_edges(
             spark, scale=20, n_edges=500_000 * scale, seed=1
         ).agg(F.count(F.lit(1)), F.max("src")).collect())
-        # fixed 4 temporal relaxation rounds; timestamps derived from
-        # edge-id hash so both scales share the work definition
-        _tedges = e_op.select(
-            "src", "dst",
-            F.pmod(F.xxhash64("src", "dst"), F.lit(1000)).alias("t"),
-        )
-        _tseeds = e_op.select(F.col("src").alias("vertex")).distinct().limit(64)
-        timed("temporal_arrival_4rounds", scale, lambda: temporal_earliest_arrival(
-            _tedges, _tseeds, max_supersteps=4, directed=False
-        ).arrivals.count())
-
-        from smatchpp_spark.operators.labelspread import harmonic_label_spread
-
-        _sseeds = e_op.select(F.col("src").alias("vertex")).distinct()
-        timed("harmonic_spread_4rounds", scale, lambda: harmonic_label_spread(
-            e_op,
-            _sseeds.filter(F.xxhash64("vertex") % 64 == 0),
-            _sseeds.filter(F.xxhash64("vertex") % 64 == 1),
-            max_supersteps=4, tol=-1.0,
-        ).scores.count())
 
         from smatchpp_spark.operators.dag import topological_layers
         from smatchpp_spark.operators.graphstats import rich_club
@@ -743,17 +702,6 @@ def main() -> None:
         # unhubbed rows instead of the hub's quadratic growth ----
         from smatchpp_spark.operators.sparsify import edge_embeddedness
 
-        timed("butterfly_census_hubbed", scale, lambda: butterfly_count(
-            inp["e_op_hub"], left_col="src", right_col="dst",
-            max_pivot_degree=64,
-        ).collect())
-        timed("graph_one_mode_hubbed", scale, lambda: one_mode_projection(
-            inp["e_op_hub"], side="right", left_col="src", right_col="dst",
-            weighting="newman", min_common=2, max_pivot_degree=64,
-        ).count())
-        timed("triad_census_hubbed", scale, lambda: triad_census(
-            inp["e_co_hub"], max_center_degree=64,
-        ).count())
         timed("cocitation_hubbed", scale, lambda: cocitation_scores(
             inp["e_op_hub"], mode="cocitation", normalize="cosine",
             min_score=2.0, max_pivot_degree=64,
@@ -808,18 +756,6 @@ def main() -> None:
         timed("doc_bpe_4merges", scale, lambda: bpe_merges(
             inp["docs"], n_merges=4
         ).count())
-
-        from smatchpp_spark.operators.wl import wl_refinement
-
-        # pagerank-superstep profile per round (join + map-side-
-        # combined modular sum); graph corpus from the parse table
-        _wl_tr = inp["e_co"].select(
-            F.pmod(F.xxhash64("src"), F.lit(50)).cast("string").alias("graph_id"),
-            "src", F.lit("e").alias("rel"), "dst",
-        )
-        timed("wl_2rounds", scale, lambda: wl_refinement(
-            _wl_tr, rounds=2
-        ).fingerprints.count())
 
         from smatchpp_spark.operators.push import ppr_push
 
@@ -971,11 +907,6 @@ def main() -> None:
               ).features.count())
 
         # -- round-7 late additions ---------------------------------------
-        from smatchpp_spark.operators.cliques import (
-            clique_percolation,
-            four_clique_count,
-        )
-        from smatchpp_spark.operators.graphlets import graphlet_census
         from smatchpp_spark.operators.graphstats import (
             centrality_rank_correlation,
         )
@@ -983,21 +914,8 @@ def main() -> None:
         from smatchpp_spark.pipeline.similarity import pq_codebooks, pq_topk
         from smatchpp_spark.pipeline.text import span_self_dedup
 
-        # oriented extend + two verify joins; candidate volume tracks
-        # Σ_triangles d_out — the same √(2m) bound as triangles, so the
-        # exponent should track triangle_counts
-        timed("four_cliques", scale, lambda: four_clique_count(
-            inp["e_co"]).total)
-        # census = triangles + 4-cliques + CN order-max wedges + degree
-        # aggregations; the CN rule keeps hub wedges un-enumerated
-        timed("graphlet_census", scale, lambda: graphlet_census(
-            inp["e_co"]).collect())
         timed("centrality_rank_corr", scale, lambda:
               centrality_rank_correlation(inp["e_co"]).collect())
-        # percolation on the %19-sparsified graph (the contract input):
-        # star-graph build + two-phase CC to the fixpoint
-        timed("clique_percolation", scale, lambda: clique_percolation(
-            inp["e_co19"]).membership.count())
         timed("emb_pq_topk", scale, lambda: pq_topk(
             inp["emb"], emb_queries,
             pq_codebooks(inp["emb"], m=4, n_codes=16), k=5,
@@ -1011,7 +929,6 @@ def main() -> None:
             label_assortativity,
         )
         from smatchpp_spark.operators.simrank import simrank_scores
-        from smatchpp_spark.operators.temporal import temporal_triangles
 
         # labels keyed off the vertex id suffix so replicated copies
         # keep the same K labels (matrix stays K², stubs scale 10x)
@@ -1025,13 +942,6 @@ def main() -> None:
         )
         timed("graph_label_assortativity", scale, lambda:
               label_assortativity(inp["e_co"], lab).collect())
-        # contacts = co-purchase edges timed by a hash-derived day so the
-        # 10x copies keep per-pair contact multiplicity
-        contacts = inp["e_co"].withColumn(
-            "t", F.pmod(F.xxhash64("src", "dst"), F.lit(365)).cast("long")
-        )
-        timed("temporal_triangles_d30", scale, lambda: temporal_triangles(
-            contacts, delta=30).collect())
         # pair set fixed (the 1x query pairs); corpus/walk cost scales
         # with the graph the reverse walks traverse
         sr_keys = (
@@ -1224,31 +1134,21 @@ def main() -> None:
         "  triangle_counts, so its exponent tracks the triangle row (~0.93",
         "  at this density): O(m^1.5) work, orientation-bounded, documented",
         "  there; fixed 2 peeling rounds keep the work definition identical.",
-        "* **butterfly_census / graph_one_mode_newman** — both ride the",
-        "  same-side pair self-join; output bounded by the cheaper-side",
-        "  Σ C(d,2) (census picks the pivot side; the projection's",
-        "  min_common filter prunes before any downstream join).",
-        "* **triad_census_co** — wedge generation is the conductance-",
-        "  pivot self-join with the max_center_degree=256 guard; the",
-        "  012/102/003 counts are dyad arithmetic and never enumerate.",
         "* **rmat_generate** — zero-shuffle scan projection over",
         "  spark.range; work = requested edges, exponent ~1.0 BY",
         "  CONSTRUCTION (the row demonstrates generator throughput, not",
         "  an algorithmic profile).",
-        "* **temporal_arrival_4rounds / harmonic_spread_4rounds /",
-        "  katz_5steps** — fixed round budgets (identical work definition",
-        "  both scales); all are single join+agg supersteps over",
+        "* **katz_5steps** — fixed round budget (identical work",
+        "  definition both scales); a single join+agg superstep over",
         "  vertex-keyed state, the sssp/pagerank dataflow.",
         "* **graph_powerlaw** — one scan + map-side combined",
         "  aggregation; expect ~linear with a large fixed floor.",
         "* **trustrank_5steps** — two fixed-budget PR chains + one",
         "  vertex join; tracks the pagerank_10steps shuffle-floor",
         "  profile at half the steps per chain.",
-        "* **cocitation_cap64 / triad_census_co** — capped-pivot wedge",
-        "  joins; the hub guard IS the scale mechanism (triad at cap",
-        "  256 cost ~280 s at 1x and OOMed the 12 GiB driver at 10x —",
-        "  the sweep pins cap 64 at both scales for an identical,",
-        "  affordable work definition).",
+        "* **cocitation_cap64** — capped-pivot wedge join; the hub",
+        "  guard IS the scale mechanism (the sweep pins cap 64 at both",
+        "  scales for an identical, affordable work definition).",
         "* **dag_layers_6rounds / closeness_d4 / bowtie_d6** — fixed",
         "  round budgets; Kahn peeling is two vertex-keyed joins per",
         "  round over a shrinking active set, closeness rides the",
@@ -1266,10 +1166,6 @@ def main() -> None:
         "  word table, which barely grows when the corpus is 10",
         "  duplicated copies — hence the ~flat wall (exponent ~0.04),",
         "  exactly the word-frequency-table design argument.",
-        "* **wl_2rounds** — per round one edges⋈colors join + one",
-        "  map-side-combined modular-sum agg (the pagerank superstep",
-        "  profile); the multiset hash combines commutatively, so hub",
-        "  fan-in never builds a per-vertex sorted array.",
         "* **egonet_features** — degree agg + the degree-oriented wedge",
         "  corner counts (ego_edges = deg + triangles identity); bounded",
         "  by Σd_lo² exactly like triangle_counts, one extra vertex join.",

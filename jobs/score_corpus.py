@@ -94,12 +94,7 @@ def _print_optimality_epilogue(pairs_df) -> None:
 
     if pairs_df is None or "upper_bound" not in pairs_df.columns:
         return
-    pdf = pairs_df
-    if "score_dim" in pdf.columns:
-        # fine-grained dims replicate the solve's bounds per aspect row;
-        # the solver-status contract is per alignment, i.e. the main dim
-        pdf = pdf.filter(F.col("score_dim") == "main")
-    row = pdf.agg(
+    row = pairs_df.agg(
         F.sum("lower_bound").alias("lb"),
         F.sum("upper_bound").alias("ub"),
         F.sum(

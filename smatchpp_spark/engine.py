@@ -33,7 +33,11 @@ from smatchpp_spark.functions.scores import (
     micro_scores,
     pairwise_scores,
 )
-from smatchpp_spark.operators.align import AlignConfig, align_and_score
+from smatchpp_spark.operators.align import (
+    AlignConfig,
+    align_and_score,
+    align_and_score_dimensions,
+)
 from smatchpp_spark.operators.standardize import graph_standardizer, per_graph
 from smatchpp_spark.sources.penman import goodmami_parse_edges, parse_edges
 from smatchpp_spark.sources.tsv import parse_tsv_edges
@@ -187,61 +191,18 @@ class SmatchppSpark:
         ``all-onealign``: one whole-graph alignment per pair, every
         aspect subgraph scored under it (plus the ``main`` dim).
         ``all-multialign``: each aspect subgraph pair is prepared and
-        aligned independently — expressed by re-keying the aspect-tagged
-        edge tables on ``pair#aspect`` and running the same pairwise
-        kernel, so the aspect axis rides the same shuffle as the pair
-        axis.  Non-``main`` dims drop pairs whose 4-vector is all zero
-        before aggregation (eval_statistics.py:164-169).
+        aligned independently.  Both run inside the per-pair alignment
+        kernel (``align_and_score_dimensions``), over the same single
+        shuffle as ``match_stats``.  Non-``main`` dims drop pairs whose
+        4-vector is all zero before aggregation
+        (eval_statistics.py:164-169).
         """
-        from smatchpp_spark.operators.align import align_and_score
-        from smatchpp_spark.operators.aspect_scoring import (
-            alignment_table,
-            score_aspects_onealign,
-        )
-        from smatchpp_spark.operators.subgraphs import extract_all_aspects
-
         ea = self._keyed_edges(corpus_a, pair_col, content_col)
         eb = self._keyed_edges(corpus_b, pair_col, content_col)
-
-        if dimension == "all-onealign":
-            main = align_and_score(
-                ea, eb, pair_col="graph_id", cfg=self.config.align,
-                return_alignment=True,
-            ).localCheckpoint(eager=False)
-            alignment = alignment_table(main)
-            dims = score_aspects_onealign(
-                ea, eb, alignment, edge_rules=self.config.edge_rules
-            )
-            stats = dims.unionByName(
-                main.select(
-                    "pair_id",
-                    F.lit("main").alias("score_dim"),
-                    "matchsum_x", "matchsum_y", "xlen", "ylen",
-                )
-            )
-        elif dimension == "all-multialign":
-            asp_a = extract_all_aspects(
-                ea, edge_rules=self.config.edge_rules
-            ).withColumn("pk", F.concat("graph_id", F.lit("#"), "aspect"))
-            asp_b = extract_all_aspects(
-                eb, edge_rules=self.config.edge_rules
-            ).withColumn("pk", F.concat("graph_id", F.lit("#"), "aspect"))
-            raw = align_and_score(asp_a, asp_b, pair_col="pk", cfg=self.config.align)
-            # decompose on the LAST '#': aspect names never contain '#',
-            # user pair ids may
-            aspect = F.substring_index("pair_id", "#", -1)
-            stats = raw.select(
-                F.expr(
-                    "substring(pair_id, 1, "
-                    "length(pair_id) - length(substring_index(pair_id, '#', -1)) - 1)"
-                ).alias("pair_id"),
-                aspect.alias("score_dim"),
-                "matchsum_x", "matchsum_y", "xlen", "ylen",
-            )
-        else:
-            raise ValueError(f"unknown dimension {dimension!r}")
-
-        stats = stats.localCheckpoint(eager=False)
+        stats = align_and_score_dimensions(
+            ea, eb, dimension, pair_col="graph_id", cfg=self.config.align,
+            edge_rules=self.config.edge_rules,
+        ).localCheckpoint(eager=False)
         nonzero = drop_empty_pairs(stats.filter(F.col("score_dim") != "main")).unionByName(
             stats.filter(F.col("score_dim") == "main")
         )

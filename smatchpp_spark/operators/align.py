@@ -1,10 +1,12 @@
 """Pairwise graph alignment + Smatch scoring.
 
 The corpus-level operator is embarrassingly parallel across graph pairs:
-``cogroup(pair_id).applyInPandas`` ships each pair's triples into an
-Arrow-batched Python kernel (numpy/dicts inside, vectorized across the
-batch's pairs), replacing the reference's sequential corpus loop
-(bindings.py:118-130).  Everything per-pair reimplements the reference
+one ``groupBy(pair_id).applyInPandas`` ships each pair's triples into an
+Arrow-batched Python kernel (numpy/dicts inside), replacing the
+reference's sequential corpus loop (bindings.py:118-130).  The per-aspect
+score dimensions (bindings.py:81-110) run in the same kernel over the
+same shuffle, with ``operators.subgraphs.aspect_subgraphs`` extracting
+each graph's aspects.  Everything per-pair reimplements the reference
 semantics from scratch:
 
   * pair preparation / variable affixing  — preprocess.py:27-87
@@ -15,12 +17,13 @@ semantics from scratch:
   * scoring given alignment               — score.py:81-197
 
 Solver differences (documented, deliberate):
-  * ``bnb`` (the ``auto`` default for V ≤ 12) is a best-child-first
-    branch-and-bound with admissible row-max bounds and a hillclimber
-    warm start — a certified global optimum with a true (lb, ub) status,
-    the contract the reference only gets from its (offline-unavailable)
-    ILP (solvers.py:417-454); on node-budget exhaustion it degrades to
-    the incumbent plus an honest upper bound.
+  * ``bnb`` (the ``auto`` default for V ≤ ``AlignConfig.bnb_max_v`` = 25)
+    is a best-child-first branch-and-bound with admissible row-max
+    bounds and a hillclimber warm start — a certified global optimum
+    with a true (lb, ub) status, the contract the reference only gets
+    from its (offline-unavailable) ILP (solvers.py:417-454); on
+    node-budget exhaustion it degrades to the incumbent plus an honest
+    upper bound.
   * ``exhaustive`` enumerates all alignments for small V — the
     brute-force certificate ``bnb`` is property-tested against.
   * ``hillclimber`` is a seeded steepest-ascent with random restarts:
@@ -37,7 +40,6 @@ Scores are exact-equality matches (IDTripleMatcher, score.py:9-15);
 from __future__ import annotations
 
 import itertools
-import json
 import random
 import zlib
 from collections import Counter
@@ -47,6 +49,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from smatchpp_spark.functions.scores import STAT_COLS
+from smatchpp_spark.operators.subgraphs import aspect_subgraphs
 
 INSTANCE = ":instance"
 
@@ -698,35 +703,27 @@ def solve_hillclimb(
     return best, best_score, float(ub)
 
 
-def map_triples(
-    triples: list[Triple], align: np.ndarray, var_index: dict[str, int]
-) -> list[Triple]:
-    """Substitute graph-1 variables by their aligned graph-2 variable
-    names (score.py:81-141); unaligned vars keep their name."""
-    index_var2 = {i: v for v, i in var_index.items() if v.startswith("bb_")}
-    sub: dict[str, str] = {}
-    for s, r, t in triples:
-        for node in (s, t):
-            i = var_index.get(node)
-            if i is not None and node.startswith("aa_"):
-                partner = index_var2.get(int(align[i]))
-                sub[node] = partner if partner else node
+def map_triples(triples: list[Triple], var_map: dict[str, str]) -> list[Triple]:
+    """Substitute aligned graph-1 variables ``aa_<a>`` by their graph-2
+    partners ``bb_<var_map[a]>`` (score.py:81-141); unaligned vars keep
+    their name."""
+    sub = {"aa_" + a: "bb_" + b for a, b in var_map.items()}
     return [(sub.get(s, s), r, sub.get(t, t)) for s, r, t in triples]
 
 
 def score_given_alignment(
     triples1: list[Triple],
     triples2: list[Triple],
-    align: np.ndarray,
-    var_index: dict[str, int],
+    var_map: dict[str, str],
     concept_sim: dict[tuple[str, str], float] | None = None,
 ) -> tuple[float, float, int, int]:
-    """The match 4-vector (score.py:181-197): substitute, multiset-match
-    with duplicate caps, both directions.  With a graded matcher the
-    matchsum is the reference's greedy max over candidates
-    (score.py:143-179); with the exact matcher that reduces to the fast
-    multiset-intersection path."""
-    mapped = map_triples(triples1, align, var_index)
+    """The match 4-vector (score.py:181-197) under the raw var map of an
+    alignment (``alignment_var_map``): substitute, multiset-match with
+    duplicate caps, both directions.  With a graded matcher the matchsum
+    is the reference's greedy max over candidates (score.py:143-179);
+    with the exact matcher that reduces to the fast multiset-intersection
+    path."""
+    mapped = map_triples(triples1, var_map)
     c1, c2 = Counter(mapped), Counter(triples2)
     if not concept_sim:
         msum_x = sum(min(n, c2[tr]) for tr, n in c1.items() if tr in c2)
@@ -813,26 +810,21 @@ def alignment_var_map(align: np.ndarray, var_index: dict[str, int]) -> dict[str,
     return out
 
 
-def process_pair(
+def align_pair(
     triples1: list[Triple],
     triples2: list[Triple],
-    cfg: AlignConfig | None = None,
+    cfg: AlignConfig,
     pair_seed: int = 0,
-) -> dict:
-    """Full per-pair pipeline: prepare → match dicts → solve → score
-    (reference bindings.py:66-115)."""
-    cfg = cfg or AlignConfig()
+) -> tuple[
+    list[Triple], list[Triple], set[str], set[str], dict[str, str], float, float
+]:
+    """Prepare → match dicts → solve (reference bindings.py:66-115): the
+    prepared triples and variables, the raw var map of the alignment and
+    the solver's (lb, ub)."""
     t1, t2, v1, v2 = prepare_pair(triples1, triples2, cfg.compress)
     if not v1 or not v2:
         # no alignable variables: score directly on equality
-        msum_x, msum_y, xlen, ylen = score_given_alignment(
-            t1, t2, np.array([], dtype=int), {}
-        )
-        return dict(
-            matchsum_x=msum_x, matchsum_y=msum_y, xlen=xlen, ylen=ylen,
-            lower_bound=0.0, upper_bound=0.0, n_vars_a=len(v1), n_vars_b=len(v2),
-            alignment="{}",
-        )
+        return t1, t2, v1, v2, {}, 0.0, 0.0
     var_index = build_var_index(v1, v2)
     unary, binary = build_match_dicts(
         t1, t2, v1, v2, var_index, cfg.concept_weight, cfg.concept_sim
@@ -870,15 +862,100 @@ def process_pair(
     assert len(align) == V and len(set(int(a) for a in align)) == V
     assert all(0 <= int(a) < V for a in align)
     assert lb <= ub + 1e-9, (lb, ub)
+    return t1, t2, v1, v2, alignment_var_map(align, var_index), float(lb), float(ub)
+
+
+def process_pair(
+    triples1: list[Triple],
+    triples2: list[Triple],
+    cfg: AlignConfig | None = None,
+    pair_seed: int = 0,
+) -> dict:
+    """Full per-pair pipeline: prepare → match dicts → solve → score
+    (reference bindings.py:66-115)."""
+    cfg = cfg or AlignConfig()
+    t1, t2, v1, v2, var_map, lb, ub = align_pair(triples1, triples2, cfg, pair_seed)
     msum_x, msum_y, xlen, ylen = score_given_alignment(
-        t1, t2, align, var_index, cfg.concept_sim
+        t1, t2, var_map, cfg.concept_sim
     )
     return dict(
         matchsum_x=msum_x, matchsum_y=msum_y, xlen=xlen, ylen=ylen,
-        lower_bound=float(lb), upper_bound=float(ub),
-        n_vars_a=len(v1), n_vars_b=len(v2),
-        alignment=json.dumps(alignment_var_map(align, var_index), sort_keys=True),
+        lower_bound=lb, upper_bound=ub, n_vars_a=len(v1), n_vars_b=len(v2),
     )
+
+
+DIMENSIONS = ("all-onealign", "all-multialign")
+
+
+def _triples(rows: list) -> list[Triple]:
+    return [row[1:] for row in rows]
+
+
+def _affix_rows(rows: list, affix: str) -> list:
+    """``affix_vars`` over ``(pos, src, rel, dst)`` rows."""
+    triples = _triples(rows)
+    affixed, _ = affix_vars(triples, set(var_concept_dict(triples)), affix)
+    return [(row[0], *t) for row, t in zip(rows, affixed)]
+
+
+def score_aspects(
+    rows1: list, rows2: list, var_map: dict[str, str], edge_rules: dict | None = None
+) -> list[tuple]:
+    """``(aspect, matchsum_x, matchsum_y, xlen, ylen)`` of one pair under
+    one whole-graph alignment, given as its raw var map (the
+    ``all-onealign`` dimension, bindings.py:81-94).
+
+    Stage order follows the reference, which extracts from *prepared*
+    graphs: affix the uncompressed ``(pos, src, rel, dst)`` rows first —
+    so a variable named like a concept-group member never seeds an
+    aspect — then extract, substitute and multiset-match exactly."""
+    asp1 = aspect_subgraphs(_affix_rows(rows1, "aa_"), edge_rules)
+    asp2 = aspect_subgraphs(_affix_rows(rows2, "bb_"), edge_rules)
+    return [
+        (
+            aspect,
+            *score_given_alignment(
+                _triples(asp1.get(aspect, [])), _triples(asp2.get(aspect, [])), var_map
+            ),
+        )
+        for aspect in sorted(asp1.keys() | asp2.keys())
+    ]
+
+
+def process_pair_dimensions(
+    rows1: list,
+    rows2: list,
+    dimension: str,
+    cfg: AlignConfig | None = None,
+    pair_id: str = "",
+    edge_rules: dict | None = None,
+) -> list[tuple]:
+    """``(score_dim, matchsum_x, matchsum_y, xlen, ylen)`` rows of one pair
+    from its two graphs' ``(pos, src, rel, dst)`` rows (bindings.py:81-110).
+
+    ``all-onealign``: solve the whole graphs once and emit ``main``, then
+    score every aspect under that alignment (``score_aspects``).
+    ``all-multialign``: prepare and align each aspect pair on its own,
+    seeded by ``pair_id#aspect``; there is no ``main`` row."""
+    cfg = cfg or AlignConfig()
+    if dimension == "all-onealign":
+        t1, t2, _, _, var_map, _, _ = align_pair(
+            _triples(rows1), _triples(rows2), cfg, stable_pair_seed(pair_id)
+        )
+        main = score_given_alignment(t1, t2, var_map, cfg.concept_sim)
+        return [("main", *main), *score_aspects(rows1, rows2, var_map, edge_rules)]
+    if dimension != "all-multialign":
+        raise ValueError(f"unknown dimension {dimension!r}")
+    asp1 = aspect_subgraphs(rows1, edge_rules)
+    asp2 = aspect_subgraphs(rows2, edge_rules)
+    out = []
+    for aspect in sorted(asp1.keys() | asp2.keys()):
+        stats = process_pair(
+            _triples(asp1.get(aspect, [])), _triples(asp2.get(aspect, [])), cfg,
+            pair_seed=stable_pair_seed(f"{pair_id}#{aspect}"),
+        )
+        out.append((aspect, *(stats[c] for c in STAT_COLS)))
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -890,31 +967,17 @@ PAIR_STATS_SCHEMA = (
     "ylen long, lower_bound double, upper_bound double, "
     "n_vars_a int, n_vars_b int"
 )
-PAIR_STATS_ALIGN_SCHEMA = PAIR_STATS_SCHEMA + ", alignment string"
+DIM_STATS_SCHEMA = (
+    "pair_id string, score_dim string, matchsum_x double, matchsum_y double, "
+    "xlen long, ylen long"
+)
 
 
-def align_and_score(
-    edges_a: DataFrame,
-    edges_b: DataFrame,
-    pair_col: str = "graph_id",
-    cfg: AlignConfig | None = None,
-    return_alignment: bool = False,
-) -> DataFrame:
-    """Corpus-scale pairwise alignment: one row of match statistics per
-    pair.
-
-    Physical shape: the two edge tables are tagged with a side column and
-    unioned, then ONE ``groupBy(pair_id).applyInPandas`` shuffles each
-    pair's triples into an Arrow batch and runs the numpy kernel — a
-    single exchange (a cogroup would shuffle both sides separately, and
+def _by_pair(edges_a: DataFrame, edges_b: DataFrame, pair_col: str):
+    """Both edge tables tagged with a side column, unioned and grouped by
+    pair: ONE exchange (a cogroup would shuffle both sides separately, and
     trips Spark's ambiguous-self-join check when both sides derive from
-    the same table, the common case).  The embarrassingly parallel axis
-    is pairs, exactly where the reference loops sequentially
-    (bindings.py:118-130).  Skew note: one pair = one task at minimum
-    granularity; a pathologically giant pair dominates its own task but
-    never a whole executor's queue (AQE rebalances the rest).
-    """
-    cfg = cfg or AlignConfig()
+    the same table, the common case)."""
 
     def side(df: DataFrame, tag: int) -> DataFrame:
         return df.select(
@@ -923,19 +986,68 @@ def align_and_score(
             F.lit(tag).alias("side"),
         )
 
-    tagged = side(edges_a, 0).unionByName(side(edges_b, 1))
+    return side(edges_a, 0).unionByName(side(edges_b, 1)).groupBy("pair_id")
+
+
+def _side_rows(pdf: pd.DataFrame, tag: int) -> list:
+    part = pdf[pdf["side"] == tag].sort_values("pos")
+    return list(zip(part["pos"], part["src"], part["rel"], part["dst"]))
+
+
+def align_and_score(
+    edges_a: DataFrame,
+    edges_b: DataFrame,
+    pair_col: str = "graph_id",
+    cfg: AlignConfig | None = None,
+) -> DataFrame:
+    """Corpus-scale pairwise alignment: one row of match statistics per
+    pair.
+
+    Physical shape: ONE ``groupBy(pair_id).applyInPandas`` shuffles each
+    pair's triples into an Arrow batch and runs the numpy kernel.  The
+    embarrassingly parallel axis is pairs, exactly where the reference
+    loops sequentially (bindings.py:118-130).  Skew note: one pair = one
+    task at minimum granularity; a pathologically giant pair dominates
+    its own task but never a whole executor's queue (AQE rebalances the
+    rest).
+    """
+    cfg = cfg or AlignConfig()
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pair_id = pdf["pair_id"].iloc[0]
-        pdf_a = pdf[pdf["side"] == 0].sort_values("pos")
-        pdf_b = pdf[pdf["side"] == 1].sort_values("pos")
-        t1 = list(zip(pdf_a["src"], pdf_a["rel"], pdf_a["dst"]))
-        t2 = list(zip(pdf_b["src"], pdf_b["rel"], pdf_b["dst"]))
+        t1, t2 = (_triples(_side_rows(pdf, tag)) for tag in (0, 1))
         row = process_pair(t1, t2, cfg, pair_seed=stable_pair_seed(pair_id))
         row["pair_id"] = pair_id
-        if not return_alignment:
-            row.pop("alignment", None)
         return pd.DataFrame([row])
 
-    schema = PAIR_STATS_ALIGN_SCHEMA if return_alignment else PAIR_STATS_SCHEMA
-    return tagged.groupBy("pair_id").applyInPandas(kernel, schema)
+    return _by_pair(edges_a, edges_b, pair_col).applyInPandas(kernel, PAIR_STATS_SCHEMA)
+
+
+def align_and_score_dimensions(
+    edges_a: DataFrame,
+    edges_b: DataFrame,
+    dimension: str,
+    pair_col: str = "graph_id",
+    cfg: AlignConfig | None = None,
+    edge_rules: dict | None = None,
+) -> DataFrame:
+    """Per-aspect scoring: one ``(pair_id, score_dim)`` row of match
+    statistics per pair and dimension (``process_pair_dimensions``), over
+    the same single ``groupBy(pair_id).applyInPandas`` as
+    ``align_and_score``."""
+    if dimension not in DIMENSIONS:
+        raise ValueError(f"unknown dimension {dimension!r}")
+    cfg = cfg or AlignConfig()
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pair_id = pdf["pair_id"].iloc[0]
+        rows = process_pair_dimensions(
+            _side_rows(pdf, 0), _side_rows(pdf, 1), dimension, cfg, pair_id,
+            edge_rules,
+        )
+        return pd.DataFrame(
+            [(pair_id, *row) for row in rows],
+            columns=["pair_id", "score_dim", *STAT_COLS],
+        )
+
+    return _by_pair(edges_a, edges_b, pair_col).applyInPandas(kernel, DIM_STATS_SCHEMA)

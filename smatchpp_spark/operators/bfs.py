@@ -1,8 +1,9 @@
 """Multi-source BFS distances over the edge table.
 
 Hop distance from a seed set — the crawl-depth / influence-radius
-primitive of web-graph work (and the iterate-join cousin of the k-hop
-subgraph extractor, subgraphs.py).  Beyond the reference's operator set,
+primitive of web-graph work; the per-graph k-hop context of aspect
+extraction is the same frontier rule inside one graph
+(``subgraphs.aspect_subgraphs``).  Beyond the reference's operator set,
 same contract style.
 
 Frontier algorithm: only the wave discovered in round r expands in round

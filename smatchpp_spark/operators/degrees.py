@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smatchpp_spark.operators.standardize import per_graph
+from smatchpp_spark.operators.subgraphs import reentrancy_rows
+
 
 def out_degrees(edges: DataFrame, src: str = "src") -> DataFrame:
     return edges.groupBy(F.col(src).alias("vertex")).agg(
@@ -59,27 +62,6 @@ def graph_degrees(edges: DataFrame) -> DataFrame:
 
 
 def reentrancies(edges: DataFrame) -> DataFrame:
-    """Non-instance triples whose target is a variable with in-degree > 1.
-
-    Joins per-graph in-degree and the variable table back to the edges —
-    two broadcast-able small sides at per-graph granularity, expressed as
-    plain equi-joins so Catalyst picks the physical strategy.
-    """
-    variables = edges.filter(F.col("rel") == ":instance").select(
-        "graph_id", F.col("src").alias("node")
-    ).distinct()
-    indeg = (
-        edges.groupBy("graph_id", F.col("dst").alias("node"))
-        .agg(F.count(F.lit(1)).alias("in_deg"))
-        .filter(F.col("in_deg") > 1)
-    )
-    reentrant_vars = indeg.join(variables, ["graph_id", "node"], "left_semi")
-    return (
-        edges.filter(F.col("rel") != ":instance")
-        .join(
-            reentrant_vars.withColumnRenamed("node", "dst"),
-            ["graph_id", "dst"],
-            "left_semi",
-        )
-        .select("graph_id", "pos", "src", "rel", "dst")
-    )
+    """Non-instance triples whose target is a variable with in-degree > 1
+    (``subgraphs.reentrancy_rows``): one shuffle on graph_id."""
+    return per_graph(edges, reentrancy_rows)

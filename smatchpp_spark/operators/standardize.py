@@ -19,10 +19,12 @@ Rows a pass adds take positions after the graph's largest ``pos``; a null
 label stays null and never names a variable, as in the SQL joins these
 passes replaced.
 
-The passes outside the two pipelines (``variables``,
-``relabel_edges_by_concept``, ``norm_logical_ops``, ``reify_attributes``,
-``reify_rules_transform``, ``unlabel_*``, ``subgraph_*``) are column
-expressions and joins over the global edge table.
+``relabel_edges_rows`` runs outside the two pipelines: aspect extraction
+applies it per graph, and ``relabel_edges_by_concept`` wraps it.  The
+other passes outside the pipelines (``variables``, ``norm_logical_ops``,
+``reify_attributes``, ``reify_rules_transform``, ``unlabel_*``,
+``subgraph_*``) are column expressions and joins over the global edge
+table.
 """
 
 from __future__ import annotations
@@ -193,6 +195,22 @@ def dereify_rows(rows: Rows, rules: dict | None = None) -> Rows:
     ]
 
 
+def relabel_edges_rows(rows: Rows, rules: dict[str, dict[str, str]]) -> Rows:
+    """Node-label-conditioned edge relabeling
+    (reference SyntacticEdgeRelabelingTransformer, graph_transforms.py:192-222):
+    ``(x, r, y)`` becomes ``(x, rules[concept(x)][r], y)`` when the source's
+    last-written concept has a rule for ``r``, else the row is unchanged.
+
+    The reference builds ``rules`` from PropBank frame argument descriptions
+    (``invert_frame_table``, formalism/amr/tools.py:118-128) and applies the
+    pass before aspect subgraph extraction (tools.py:226-232) so core roles
+    like ``control-01 :arg2`` surface as explicit roles (``:instrument``)."""
+    concept = {v: c for v, (_, c) in _variables(rows).items()}
+    return [
+        (p, s, rules.get(concept.get(s), {}).get(r, r), d) for p, s, r, d in rows
+    ]
+
+
 PIPELINES: dict[str, tuple[Callable[[Rows], Rows], ...]] = {
     "none": (),
     "generic": (lower_rows, dequote_rows, relabel_vars_rows, deinvert_rows),
@@ -323,46 +341,11 @@ def variables(edges: DataFrame) -> DataFrame:
 def relabel_edges_by_concept(
     edges: DataFrame, rules: dict[str, dict[str, str]] | None
 ) -> DataFrame:
-    """Node-label-conditioned edge relabeling
-    (reference SyntacticEdgeRelabelingTransformer, graph_transforms.py:192-222):
-    ``(x, r, y)`` becomes ``(x, rules[concept(x)][r], y)`` when the source's
-    concept has a rule for ``r``, else the triple is unchanged.
-
-    The reference builds ``rules`` from PropBank frame argument descriptions
-    (``invert_frame_table``, formalism/amr/tools.py:118-128) and applies the
-    pass before aspect subgraph extraction (tools.py:226-232) so core roles
-    like ``control-01 :arg2`` surface as explicit roles (``:instrument``).
-
-    Spark shape: the rule table is a tiny broadcast dim (concept, rel →
-    new_rel); the var→concept lookup is the same per-graph equi-join every
-    other pass uses.  One broadcast hash join + one shuffle-free projection —
-    no Python on executors.
-    """
+    """Node-label-conditioned edge relabeling (``relabel_edges_rows``)
+    over an edge table: one shuffle on graph_id."""
     if not rules:
         return edges
-    spark = edges.sparkSession
-    rule_rows = [
-        (concept, rel, new_rel)
-        for concept, rel_map in rules.items()
-        for rel, new_rel in rel_map.items()
-    ]
-    rules_df = F.broadcast(
-        spark.createDataFrame(rule_rows, "concept string, rel string, new_rel string")
-    )
-    var_tbl = variables(edges).select(
-        "graph_id", F.col("var").alias("src"), "concept"
-    )
-    return (
-        edges.join(var_tbl, ["graph_id", "src"], "left")
-        .join(rules_df, ["concept", "rel"], "left")
-        .select(
-            "graph_id",
-            "pos",
-            "src",
-            F.coalesce("new_rel", "rel").alias("rel"),
-            "dst",
-        )
-    )
+    return per_graph(edges, lambda rows: relabel_edges_rows(rows, rules))
 
 
 def norm_logical_ops(edges: DataFrame) -> DataFrame:

@@ -1,342 +1,137 @@
-"""Aspect subgraph extraction over the global edge table — the
-fine-grained "semantic dimension" machinery of the reference
-(subgraph_extraction.py:60-264), recast as joins that run over every
-graph in the corpus at once.
+"""Aspect subgraph extraction — the fine-grained "semantic dimension"
+machinery of the reference (subgraph_extraction.py:60-264), one graph at
+a time like the reference.
 
-Key property exploited throughout: every triple an aspect subgraph can
-contain is a row of the ORIGINAL edge table (seeds, k-hop context,
-parents, predicates, and re-attached :instance triples are all existing
-rows), so extraction is pure row SELECTION — semi-joins + unions keyed by
-``(graph_id, pos)`` with one final dedup.  No new data is synthesized, no
-Python runs on executors.
-
-Scale shape: each stage is an equi-join on ``(graph_id, node)``; the
-bounded k-hop loop (range ≤ 2 in the shipped aspect table) is the
-iterate-join template shared with BFS/CC (SURVEY §2.4).  All 18 aspects
-can be extracted in one pass with an ``aspect`` tag column (union of
-per-aspect selections — Catalyst shares the scan).
+``aspect_subgraphs`` maps one graph's ``(pos, src, rel, dst)`` rows to
+``{aspect: rows}``.  Every triple an aspect subgraph can contain is a row
+of the graph (seeds, k-hop context, parents, predicates and re-attached
+:instance triples all are), so extraction selects row positions:
+identical triples at different positions both stay.  The per-pair
+scoring kernel (``operators.align.process_pair_dimensions``) calls it
+inside its ``applyInPandas``; ``extract_all_aspects`` runs it over an
+edge table.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from smatchpp_spark.functions.amr_rules import CONCEPT_GROUPS, GRAPH_ASPECTS
-
-INSTANCE = ":instance"
-ROOT_REL = ":root"
-_KEY = ["graph_id", "pos"]
-_COLS = ["graph_id", "pos", "src", "rel", "dst"]
-
-
-def _rows(edges: DataFrame, keys: DataFrame) -> DataFrame:
-    """Select original edge rows by (graph_id, pos) key set."""
-    return edges.join(keys.select(*_KEY).distinct(), _KEY, "left_semi")
+from smatchpp_spark.operators.standardize import (
+    INSTANCE,
+    ROOT_REL,
+    Rows,
+    relabel_edges_rows,
+)
 
 
-def aspect_seeds(
-    edges: DataFrame,
-    aspect: str,
-    aspects: dict | None = None,
-    concept_groups: dict | None = None,
-) -> DataFrame:
-    """Seed triples of an aspect: rel ∈ associated_rel, plus every triple
-    touching a variable whose concept is in the aspect's concept group
-    (subgraph_extraction.py:187-198)."""
-    aspects = aspects or GRAPH_ASPECTS
-    concept_groups = concept_groups or CONCEPT_GROUPS
-    rules = aspects[aspect]
-    seed = edges.filter(F.col("rel").isin(rules["associated_rel"] or ["\x00never"]))
-    group_name = rules.get("associated_concept_group")
-    if group_name and group_name in concept_groups:
-        members = concept_groups[group_name]
-        vs = (
-            edges.filter(F.col("dst").isin(members))
-            .select("graph_id", F.col("src").alias("node"))
-            .distinct()
-        )
-        touching = edges.join(
-            vs.withColumnRenamed("node", "src"), ["graph_id", "src"], "left_semi"
-        ).unionByName(
-            edges.join(
-                vs.withColumnRenamed("node", "dst"), ["graph_id", "dst"], "left_semi"
-            )
-        )
-        seed = seed.unionByName(touching)
-    return seed.dropDuplicates(_KEY)
+def _non_instance(rel) -> bool:
+    # SQL's three-valued ``rel <> ':instance'``: a null relation is not
+    # a non-:instance relation either
+    return rel is not None and rel != INSTANCE
 
 
-def khop_context(edges: DataFrame, subgraph: DataFrame, depth: int) -> DataFrame:
-    """Bounded frontier expansion (subgraph_extraction.py:241-260): per
-    hop, add non-:instance triples whose source equals any target already
-    in the subgraph.  Returns the grown subgraph (original rows only)."""
-    out = subgraph.select(*_COLS)
-    candidates = edges.filter(F.col("rel") != INSTANCE)
-    for _ in range(depth):
-        frontier = out.select("graph_id", F.col("dst").alias("src")).distinct()
-        additions = candidates.join(frontier, ["graph_id", "src"], "left_semi")
-        out = out.unionByName(additions.select(*_COLS)).dropDuplicates(_KEY)
-    return out
+def reentrancy_rows(rows: Rows) -> Rows:
+    """Non-instance rows whose target is a variable that two or more rows
+    of any relation point to (subgraph_extraction.py:60-74)."""
+    variables = {s for _, s, r, _ in rows if r == INSTANCE and s is not None}
+    in_deg = Counter(d for _, _, _, d in rows)
+    return [
+        row for row in rows
+        if _non_instance(row[2]) and row[3] in variables and in_deg[row[3]] > 1
+    ]
 
 
-def parents_of_seeds(edges: DataFrame, seeds: DataFrame) -> DataFrame:
-    """Triples whose target is a seed-triple source
-    (subgraph_extraction.py:236-240, add_parent aspects)."""
-    seed_srcs = seeds.select("graph_id", F.col("src").alias("dst")).distinct()
-    return edges.join(seed_srcs, ["graph_id", "dst"], "left_semi")
-
-
-def predicates_of_nodes(edges: DataFrame, subgraph: DataFrame) -> DataFrame:
-    """Predicate attachment (subgraph_extraction.py:103-126): for every
-    node of the subgraph, incoming non-:root edges from nodes with
-    in-degree 0 and out-degree 1 (degrees over non-:instance triples)."""
-    non_inst = edges.filter(F.col("rel") != INSTANCE)
-    degs = (
-        non_inst.select("graph_id", F.col("src").alias("node"), F.lit(1).alias("o"), F.lit(0).alias("i"))
-        .unionByName(
-            non_inst.select("graph_id", F.col("dst").alias("node"), F.lit(0).alias("o"), F.lit(1).alias("i"))
-        )
-        .groupBy("graph_id", "node")
-        .agg(F.sum("i").alias("in_deg"), F.sum("o").alias("out_deg"))
-    )
-    pred_nodes = degs.filter((F.col("in_deg") == 0) & (F.col("out_deg") == 1)).select(
-        "graph_id", F.col("node").alias("src")
-    )
-    sg_nodes = (
-        subgraph.select("graph_id", F.col("src").alias("dst"))
-        .unionByName(subgraph.select("graph_id", "dst"))
-        .distinct()
-    )
-    return (
-        non_inst.filter(F.col("rel") != ROOT_REL)
-        .join(sg_nodes, ["graph_id", "dst"], "left_semi")
-        .join(pred_nodes, ["graph_id", "src"], "left_semi")
-    )
-
-
-def attach_instances(edges: DataFrame, subgraph: DataFrame) -> DataFrame:
-    """Re-attach the :instance triple of every variable occurring in the
-    subgraph (subgraph_extraction.py:77-100); the concept is the
-    last-written one, so pick the max-pos instance row per variable."""
-    inst = (
-        edges.filter(F.col("rel") == INSTANCE)
-        .groupBy("graph_id", F.col("src").alias("node"))
-        .agg(F.max("pos").alias("pos"))
-    )
-    sg_nodes = (
-        subgraph.select("graph_id", F.col("src").alias("node"))
-        .unionByName(subgraph.select("graph_id", F.col("dst").alias("node")))
-        .distinct()
-    )
-    keys = inst.join(sg_nodes, ["graph_id", "node"], "left_semi").select(
-        "graph_id", "pos"
-    )
-    return _rows(edges, keys)
-
-
-def extract_aspect(
-    edges: DataFrame,
-    aspect: str,
-    aspects: dict | None = None,
-    concept_groups: dict | None = None,
-    add_instance: bool = True,
-    edge_rules: dict | None = None,
-) -> DataFrame:
-    """One aspect subgraph for every graph at once
-    (clean_extend_subgraph, subgraph_extraction.py:200-226):
-    seeds → parents (if add_parent) → k-hop context → predicates (if
-    add_predicates) → :instance re-attachment → dedup.
-
-    ``edge_rules`` (optional) applies the PropBank frame-conditioned edge
-    relabel before extraction, mirroring AMRSubgraphExtractor's semantic
-    standardizer prelude (formalism/amr/tools.py:226-232)."""
-    if edge_rules:
-        from smatchpp_spark.operators.standardize import relabel_edges_by_concept
-
-        edges = relabel_edges_by_concept(edges, edge_rules)
-    aspects = aspects or GRAPH_ASPECTS
-    rules = aspects[aspect]
-    seeds = aspect_seeds(edges, aspect, aspects, concept_groups)
-    out = khop_context(edges, seeds, int(rules.get("subgraph_extraction_range", 0)))
-    if rules.get("add_parent") == 1:
-        out = out.unionByName(parents_of_seeds(edges, seeds).select(*_COLS))
-    if rules.get("add_predicates") == 1:
-        out = out.unionByName(predicates_of_nodes(edges, out).select(*_COLS))
-    if add_instance:
-        out = out.unionByName(attach_instances(edges, out).select(*_COLS))
-    return out.dropDuplicates(_KEY)
-
-
-_TAG_KEY = ["graph_id", "aspect", "pos"]
-
-
-def extract_all_aspects(
-    edges: DataFrame,
-    aspects: dict | None = None,
-    concept_groups: dict | None = None,
-    add_instance: bool = True,
-    include_reentrancies: bool = True,
-    edge_rules: dict | None = None,
-) -> DataFrame:
-    """All aspect subgraphs with an ``aspect`` tag column
+def aspect_subgraphs(rows: Rows, edge_rules: dict | None = None) -> dict[str, Rows]:
+    """All aspect subgraphs of one graph, by aspect name, rows in ``pos``
+    order; aspects without rows are absent
     (_all_subgraphs_by_name, subgraph_extraction.py:162-185).
 
-    Single tagged pipeline: the aspect rules become two broadcast tables
-    (rel→aspect, group-concept→aspect) joined against the edge table, so
-    all 18 aspects flow through ONE seeds → k-hop → parents → predicates
-    → instances chain keyed by (graph_id, aspect) — ~10 shuffles total,
-    vs ~6 per aspect for the per-aspect loop (measured 10x faster, and
-    at corpus scale it is the difference between 1 and 19 scans).
+    Per aspect (clean_extend_subgraph, py:200-226): seeds are the rows
+    with an associated relation, plus every row touching a variable whose
+    concept is in the aspect's concept group (py:187-198); parents are the
+    rows pointing at a seed source (py:236-240); the k-hop context adds
+    non-:instance rows leaving a node already reached (py:241-260);
+    predicates are the non-:root rows into a reached node from a node of
+    in-degree 0 and out-degree 1 over non-:instance rows (py:103-126).
+    ``REENTRANCIES`` holds ``reentrancy_rows``.  Every aspect then gets the
+    last :instance row of each variable it mentions (py:77-100).
 
     ``edge_rules`` (optional) applies the PropBank frame-conditioned edge
     relabel first — AMRSubgraphExtractor's semantic standardizer prelude
-    (formalism/amr/tools.py:226-232; rules from invert_frame_table,
-    tools.py:118-128)."""
-    from smatchpp_spark.operators.degrees import reentrancies
-
+    (formalism/amr/tools.py:226-232)."""
     if edge_rules:
-        from smatchpp_spark.operators.standardize import relabel_edges_by_concept
+        rows = relabel_edges_rows(rows, edge_rules)
+    by_pos = {row[0]: row for row in rows}
+    non_inst = [row for row in rows if _non_instance(row[2])]
+    out_deg = Counter(s for _, s, _, _ in non_inst)
+    in_deg = Counter(d for _, _, _, d in non_inst)
+    predicates = {v for v, n in out_deg.items() if n == 1 and not in_deg[v]}
+    instance_pos: dict = {}
+    for p, s, r, _ in rows:
+        if r == INSTANCE:
+            instance_pos[s] = max(p, instance_pos.get(s, p))
 
-        edges = relabel_edges_by_concept(edges, edge_rules)
-    aspects = aspects or GRAPH_ASPECTS
-    concept_groups = concept_groups or CONCEPT_GROUPS
-    spark = edges.sparkSession
-    edges = edges.localCheckpoint(eager=False)
+    def nodes(selected: set) -> set:
+        return {x for p in selected for x in (by_pos[p][1], by_pos[p][3])}
 
-    rel_rows = [
-        (r, name) for name, ru in aspects.items() for r in ru["associated_rel"]
-    ]
-    grp_rows = [
-        (c, name)
-        for name, ru in aspects.items()
-        if ru.get("associated_concept_group") in concept_groups
-        for c in concept_groups[ru["associated_concept_group"]]
-    ]
-    prop_rows = [
-        (
-            name,
-            int(ru.get("subgraph_extraction_range", 0)),
-            ru.get("add_parent") == 1,
-            ru.get("add_predicates") == 1,
-        )
-        for name, ru in aspects.items()
-    ]
-    rel_df = F.broadcast(spark.createDataFrame(rel_rows, "rel string, aspect string"))
-    grp_df = F.broadcast(
-        spark.createDataFrame(
-            grp_rows or [("\x00never", "\x00never")], "concept string, aspect string"
-        )
-    )
-    props = F.broadcast(
-        spark.createDataFrame(
-            prop_rows, "aspect string, range int, add_parent boolean, add_preds boolean"
-        )
-    )
+    selections = {}
+    for name, rule in GRAPH_ASPECTS.items():
+        rels = set(rule["associated_rel"])
+        seeds = {p for p, _, r, _ in rows if r in rels}
+        group = set(CONCEPT_GROUPS.get(rule.get("associated_concept_group"), ()))
+        if group:
+            members = {s for _, s, _, d in rows if d in group}
+            seeds |= {p for p, s, _, d in rows if s in members or d in members}
+        selected = set(seeds)
+        for _ in range(int(rule.get("subgraph_extraction_range", 0))):
+            frontier = {by_pos[p][3] for p in selected}
+            selected |= {p for p, s, _, _ in non_inst if s in frontier}
+        if rule.get("add_parent") == 1:
+            sources = {by_pos[p][1] for p in seeds}
+            selected |= {p for p, _, _, d in rows if d in sources}
+        if rule.get("add_predicates") == 1:
+            reached = nodes(selected)
+            selected |= {
+                p for p, s, r, d in non_inst
+                if r != ROOT_REL and d in reached and s in predicates
+            }
+        selections[name] = selected
+    selections["REENTRANCIES"] = {row[0] for row in reentrancy_rows(rows)}
 
-    tagged_cols = ["aspect", *_COLS]
+    out = {}
+    for name, selected in selections.items():
+        selected |= {instance_pos[v] for v in nodes(selected) if v in instance_pos}
+        if selected:
+            out[name] = [by_pos[p] for p in sorted(selected)]
+    return out
 
-    # --- seeds (subgraph_extraction.py:187-198), all aspects at once ----
-    rel_seeds = edges.join(rel_df, "rel").select(*tagged_cols)
-    grp_vars = (
-        edges.join(grp_df, edges["dst"] == grp_df["concept"])
-        .select("graph_id", "aspect", F.col("src").alias("node"))
-        .distinct()
-    )
-    touch_src = edges.join(
-        grp_vars.withColumnRenamed("node", "src"), ["graph_id", "src"]
-    ).select(*tagged_cols)
-    touch_dst = edges.join(
-        grp_vars.withColumnRenamed("node", "dst"), ["graph_id", "dst"]
-    ).select(*tagged_cols)
-    seeds = (
-        rel_seeds.unionByName(touch_src)
-        .unionByName(touch_dst)
-        .dropDuplicates(_TAG_KEY)
-        .localCheckpoint(eager=False)
+
+def extract_all_aspects(edges: DataFrame, edge_rules: dict | None = None) -> DataFrame:
+    """``aspect_subgraphs`` of every graph of an edge table, as
+    ``(aspect, graph_id, pos, src, rel, dst)`` rows: one shuffle on
+    graph_id."""
+    edges = edges.select("graph_id", "pos", "src", "rel", "dst")
+    cols = ["aspect", *edges.columns]
+    schema = T.StructType(
+        [T.StructField("aspect", T.StringType())]
+        + [T.StructField(f.name, f.dataType) for f in edges.schema]
     )
 
-    # --- bounded k-hop context (py:241-260), range gated per aspect ----
-    non_inst = edges.filter(F.col("rel") != INSTANCE)
-    out = seeds
-    max_range = max((p[1] for p in prop_rows), default=0)
-    for hop in range(1, max_range + 1):
-        frontier = (
-            out.join(props, "aspect")
-            .filter(F.col("range") >= hop)
-            .select("graph_id", "aspect", F.col("dst").alias("src"))
-            .distinct()
+    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
+        gid = pdf["graph_id"].iloc[0]
+        rows = list(zip(pdf["pos"], pdf["src"], pdf["rel"], pdf["dst"]))
+        return pd.DataFrame(
+            [
+                (name, gid, *row)
+                for name, sub in aspect_subgraphs(rows, edge_rules).items()
+                for row in sub
+            ],
+            columns=cols,
         )
-        adds = non_inst.join(frontier, ["graph_id", "src"]).select(*tagged_cols)
-        out = out.unionByName(adds).dropDuplicates(_TAG_KEY)
-    out = out.localCheckpoint(eager=False)
 
-    # --- parents of seed sources (py:236-240) --------------------------
-    par_frontier = (
-        seeds.join(props, "aspect")
-        .filter(F.col("add_parent"))
-        .select("graph_id", "aspect", F.col("src").alias("dst"))
-        .distinct()
-    )
-    parents = edges.join(par_frontier, ["graph_id", "dst"]).select(*tagged_cols)
-    out = out.unionByName(parents)
-
-    # --- predicates (py:103-126) ---------------------------------------
-    degs = (
-        non_inst.select("graph_id", F.col("src").alias("node"), F.lit(1).alias("o"), F.lit(0).alias("i"))
-        .unionByName(
-            non_inst.select("graph_id", F.col("dst").alias("node"), F.lit(0).alias("o"), F.lit(1).alias("i"))
-        )
-        .groupBy("graph_id", "node")
-        .agg(F.sum("i").alias("in_deg"), F.sum("o").alias("out_deg"))
-    )
-    pred_nodes = degs.filter((F.col("in_deg") == 0) & (F.col("out_deg") == 1)).select(
-        "graph_id", F.col("node").alias("src")
-    )
-    sg_nodes = (
-        out.join(props, "aspect")
-        .filter(F.col("add_preds"))
-        .select("graph_id", "aspect", F.col("src").alias("dst"))
-        .unionByName(
-            out.join(props, "aspect")
-            .filter(F.col("add_preds"))
-            .select("graph_id", "aspect", "dst")
-        )
-        .distinct()
-    )
-    preds = (
-        non_inst.filter(F.col("rel") != ROOT_REL)
-        .join(sg_nodes, ["graph_id", "dst"])
-        .join(pred_nodes, ["graph_id", "src"], "left_semi")
-        .select(*tagged_cols)
-    )
-    out = out.unionByName(preds)
-
-    # --- REENTRANCIES (py:60-74 + tools loop) --------------------------
-    if include_reentrancies:
-        re_sg = reentrancies(edges).select(
-            F.lit("REENTRANCIES").alias("aspect"), *_COLS
-        )
-        out = out.unionByName(re_sg)
-
-    out = out.dropDuplicates(_TAG_KEY).localCheckpoint(eager=False)
-
-    # --- :instance re-attachment (py:77-100), all aspects at once ------
-    if add_instance:
-        inst_pick = (
-            edges.filter(F.col("rel") == INSTANCE)
-            .groupBy("graph_id", F.col("src").alias("node"))
-            .agg(F.max("pos").alias("pos"))
-        )
-        nodes = (
-            out.select("graph_id", "aspect", F.col("src").alias("node"))
-            .unionByName(out.select("graph_id", "aspect", F.col("dst").alias("node")))
-            .distinct()
-        )
-        inst_keys = nodes.join(inst_pick, ["graph_id", "node"]).select(
-            "graph_id", "aspect", "pos"
-        )
-        inst_rows = edges.join(inst_keys, _KEY)
-        out = out.unionByName(inst_rows.select(*tagged_cols))
-
-    return out.dropDuplicates(_TAG_KEY)
+    return edges.groupBy("graph_id").applyInPandas(apply, schema)

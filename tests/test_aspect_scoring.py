@@ -1,7 +1,8 @@
-"""Differential: DataFrame-native all-onealign aspect scoring vs the
-reference, using the REFERENCE's own alignment so the comparison
-isolates extraction + substitution + matchsum (alignment parity is
-covered in test_align.py)."""
+"""Differential: per-pair all-onealign aspect scoring vs the reference,
+using the REFERENCE's own alignment so the comparison isolates
+extraction + substitution + matchsum (alignment parity is covered in
+test_align.py), and all-multialign vs the reference.  Both skip where
+the reference is not importable."""
 
 from __future__ import annotations
 
@@ -9,24 +10,19 @@ import json
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from smatchpp_spark.corpus import generate_penman
-from smatchpp_spark.operators.align import AlignConfig, align_and_score
-from smatchpp_spark.operators.aspect_scoring import (
-    alignment_table,
-    score_aspects_onealign,
-)
-from smatchpp_spark.sources.penman import parse_edges
+from smatchpp_spark.functions.graphkit import parse_penman
+from smatchpp_spark.operators.align import AlignConfig, align_pair, score_aspects
 
-ref = pytest.importorskip("smatchpp.data_helpers", reason="reference not importable")
-from smatchpp import data_helpers, preprocess, score, solvers, subgraph_extraction  # noqa: E402
-from smatchpp import align as ref_align  # noqa: E402
 
-READER = data_helpers.PenmanReader()
+def _rows(content: str) -> list[tuple]:
+    return [(pos, *t) for pos, t in enumerate(parse_penman(content))]
 
 
 def _ref_extractor():
+    from smatchpp import subgraph_extraction
+
     with open(
         "/root/reference/smatchpp/formalism/amr/resource/graph_aspects.json"
     ) as fh:
@@ -40,7 +36,14 @@ def _ref_extractor():
     )
 
 
-def test_onealign_aspect_scores_match_reference(spark):
+def test_onealign_aspect_scores_match_reference():
+    data_helpers = pytest.importorskip(
+        "smatchpp.data_helpers", reason="reference not importable"
+    )
+    from smatchpp import align as ref_align
+    from smatchpp import preprocess, score, solvers
+
+    reader = data_helpers.PenmanReader()
     n_pairs = 12
     pairs = []
     for i in range(n_pairs):
@@ -60,41 +63,26 @@ def test_onealign_aspect_scores_match_reference(spark):
     extractor = _ref_extractor()
 
     expected: dict[tuple[str, str], list[float]] = {}
-    alignment_rows = []
+    got: dict[tuple[str, str], list[float]] = {}
     for i, (s1, s2) in enumerate(pairs):
-        g1 = READER.string2graph(s1)
-        g2 = READER.string2graph(s2)
+        g1 = reader.string2graph(s1)
+        g2 = reader.string2graph(s2)
         random.seed(0)
         t1, t2, v1, v2 = prep.prepare_get_vars(list(g1), list(g2))
         am, vi, _ = aligner.align(t1, t2, v1, v2)
-        for va, vb in ref_align.GraphAligner._get_var_map(am, vi):
-            if va is not None and vb is not None:
-                alignment_rows.append((str(i), va[3:], vb[3:]))
+        var_map = {
+            va[3:]: vb[3:]
+            for va, vb in ref_align.GraphAligner._get_var_map(am, vi)
+            if va is not None and vb is not None
+        }
         sub1 = extractor.all_subgraphs_by_name(list(t1))
         sub2 = extractor.all_subgraphs_by_name(list(t2))
         for name in sub1:
             expected[(str(i), name)] = list(
                 scorer.score(list(sub1[name]), list(sub2[name]), am, vi)
             )
-
-    ca = spark.createDataFrame(
-        [(str(i), a) for i, (a, _) in enumerate(pairs)], "pid string, content string"
-    )
-    cb = spark.createDataFrame(
-        [(str(i), b) for i, (_, b) in enumerate(pairs)], "pid string, content string"
-    )
-    edges_a = parse_edges(ca, id_col="pid")
-    edges_b = parse_edges(cb, id_col="pid")
-    alignment = spark.createDataFrame(
-        alignment_rows or [("none", "x", "y")],
-        "pair_id string, var_a string, var_b string",
-    )
-    got = {
-        (r["pair_id"], r["score_dim"]): [
-            r["matchsum_x"], r["matchsum_y"], float(r["xlen"]), float(r["ylen"])
-        ]
-        for r in score_aspects_onealign(edges_a, edges_b, alignment).collect()
-    }
+        for name, mx, my, xlen, ylen in score_aspects(_rows(s1), _rows(s2), var_map):
+            got[(str(i), name)] = [mx, my, float(xlen), float(ylen)]
     mismatches = []
     for key, exp in expected.items():
         mine = got.get(key, [0.0, 0.0, 0.0, 0.0])
@@ -103,18 +91,10 @@ def test_onealign_aspect_scores_match_reference(spark):
     assert not mismatches, mismatches[:5]
 
 
-def test_alignment_table_roundtrip(spark):
-    corpus = spark.createDataFrame(
-        [("0", "(m / man :arg0 (c / cat))")], "pid string, content string"
-    )
-    edges = parse_edges(corpus, id_col="pid")
-    stats = align_and_score(
-        edges, edges, pair_col="graph_id",
-        cfg=AlignConfig(solver="exhaustive"), return_alignment=True,
-    )
-    rows = alignment_table(stats).collect()
-    got = {(r["var_a"], r["var_b"]) for r in rows}
-    assert got == {("m", "m"), ("c", "c")}
+def test_alignment_table_roundtrip():
+    triples = parse_penman("(m / man :arg0 (c / cat))")
+    var_map = align_pair(triples, triples, AlignConfig(solver="exhaustive"))[4]
+    assert var_map == {"m": "m", "c": "c"}
 
 
 def test_multialign_aspect_scores_match_reference(spark):
@@ -122,9 +102,15 @@ def test_multialign_aspect_scores_match_reference(spark):
     (bindings.py:96-110); our re-keyed pairwise kernel must reproduce the
     reference per-dim 4-vectors (small aspect subgraphs -> exhaustive
     optimum == reference hill-climber optimum)."""
-    from smatchpp_spark.engine import EngineConfig, SmatchppSpark
-    from smatchpp_spark.operators.align import AlignConfig
+    data_helpers = pytest.importorskip(
+        "smatchpp.data_helpers", reason="reference not importable"
+    )
+    from smatchpp import align as ref_align
+    from smatchpp import preprocess, score, solvers
 
+    from smatchpp_spark.engine import EngineConfig, SmatchppSpark
+
+    reader = data_helpers.PenmanReader()
     n_pairs = 8
     pairs = []
     for i in range(n_pairs):
@@ -145,8 +131,8 @@ def test_multialign_aspect_scores_match_reference(spark):
 
     expected: dict[tuple[str, str], list[float]] = {}
     for i, (s1, s2) in enumerate(pairs):
-        g1 = READER.string2graph(s1)
-        g2 = READER.string2graph(s2)
+        g1 = reader.string2graph(s1)
+        g2 = reader.string2graph(s2)
         sub1 = extractor.all_subgraphs_by_name(list(g1))
         sub2 = extractor.all_subgraphs_by_name(list(g2))
         for name in sub1:

@@ -245,6 +245,37 @@ def test_score_dimensions_bootstrap_ci(spark):
         assert lo == hi == 100.0, (dim, lo, hi)
 
 
+def test_score_dimensions_job_budget(spark):
+    """Both dimensions score inside the per-pair alignment kernel:
+    collecting pairs, micro and macro runs at most 10 Spark jobs per
+    dimension, and pair ids that contain '#' come back intact."""
+    pairs = _corpus_pairs(6)
+    ids = ["a#1", "a#2", "b#1#x", "#", "c", "d#"]
+    ca = spark.createDataFrame(
+        [(pid, a) for pid, (a, _) in zip(ids, pairs)], "pair_id string, content string"
+    )
+    cb = spark.createDataFrame(
+        [(pid, b) for pid, (_, b) in zip(ids, pairs)], "pair_id string, content string"
+    )
+    engine = SmatchppSpark(EngineConfig(standardizer="amr"))
+    sc = spark.sparkContext
+    for dimension in ("all-onealign", "all-multialign"):
+        group = f"test-dims-budget-{dimension}"
+        sc.setJobGroup(group, dimension)
+        try:
+            out = engine.score_dimensions(ca, cb, dimension=dimension)
+            got = {r["pair_id"] for r in out["pairs"].collect()}
+            out["micro"].collect()
+            out["macro"].collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs <= 10, (dimension, n_jobs)
+        assert got == set(ids), dimension
+
+
 def test_bca_interval_matches_independent_numpy():
     """Differential of the scipy-free BCa arithmetic against a
     straightforward independent implementation (statistics.NormalDist for

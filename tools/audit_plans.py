@@ -66,7 +66,9 @@ CHECKS = {
     "reentrancies": [
         ("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_suppkey:bigint,l_linenumber:int>",
          "triple-table derivation prunes to the 4-5 source columns it needs"),
-        ("codegen id", "joins + conditional projections stay in codegen"),
+        ("FlatMapGroupsInPandas",
+         "one per-graph Python pass (reentrancy_rows) behind a single "
+         "shuffle on graph_id"),
     ],
     "doc_exact_dedup": [
         ("ReadSchema: struct<doc_id:bigint,text:string>",
@@ -74,10 +76,9 @@ CHECKS = {
         ("HashAggregate", "map-side partial aggregation absorbs duplicates"),
     ],
     "edge_relabel": [
-        ("BroadcastExchange",
-         "the (concept, rel → new_rel) rules dim broadcasts — the edge "
-         "table never reshuffles for the rules lookup"),
-        ("codegen id", "relabel projection stays in codegen"),
+        ("FlatMapGroupsInPandas",
+         "one per-graph Python pass (relabel_edges_rows, the rule the "
+         "aspect extractor applies) behind a single shuffle on graph_id"),
     ],
     "emb_hyperplane_topk": [
         ("HashJoin",

@@ -50,9 +50,9 @@ def test_parse_frame_table_mirrors_reference_format():
 
 
 def test_invert_frame_table_matches_reference():
-    _reader()
-    from smatchpp.formalism.amr import tools as ref_tools
-
+    ref_tools = pytest.importorskip(
+        "smatchpp.formalism.amr.tools", reason="reference not importable"
+    )
     with open(
         "/root/reference/smatchpp/formalism/amr/resource/graph_aspects.json"
     ) as fh:

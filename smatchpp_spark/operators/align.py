@@ -926,26 +926,24 @@ def process_pair_dimensions(
     rows1: list,
     rows2: list,
     dimension: str,
-    cfg: AlignConfig | None = None,
-    pair_id: str = "",
+    cfg: AlignConfig,
+    pair_id: str,
     edge_rules: dict | None = None,
 ) -> list[tuple]:
     """``(score_dim, matchsum_x, matchsum_y, xlen, ylen)`` rows of one pair
-    from its two graphs' ``(pos, src, rel, dst)`` rows (bindings.py:81-110).
+    from its two graphs' ``(pos, src, rel, dst)`` rows (bindings.py:81-110);
+    ``dimension`` is one of ``DIMENSIONS``.
 
     ``all-onealign``: solve the whole graphs once and emit ``main``, then
     score every aspect under that alignment (``score_aspects``).
     ``all-multialign``: prepare and align each aspect pair on its own,
     seeded by ``pair_id#aspect``; there is no ``main`` row."""
-    cfg = cfg or AlignConfig()
     if dimension == "all-onealign":
         t1, t2, _, _, var_map, _, _ = align_pair(
             _triples(rows1), _triples(rows2), cfg, stable_pair_seed(pair_id)
         )
         main = score_given_alignment(t1, t2, var_map, cfg.concept_sim)
         return [("main", *main), *score_aspects(rows1, rows2, var_map, edge_rules)]
-    if dimension != "all-multialign":
-        raise ValueError(f"unknown dimension {dimension!r}")
     asp1 = aspect_subgraphs(rows1, edge_rules)
     asp2 = aspect_subgraphs(rows2, edge_rules)
     out = []

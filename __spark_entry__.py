@@ -832,354 +832,6 @@ FROM agg
 """
 
 
-def _trustrank_sql(iters: int, alpha: float = ALPHA) -> str:
-    """trustrank_spam_mass replay (operators/trustrank.py): the uniform
-    PageRank chain (p*) and the seed-personalized chain (t*) unrolled
-    side by side over the order→part graph, seeds = parts with
-    l_partkey % 40 = 0 (the personalized row's set); trust scales the
-    PPR by n_seed/n and spam mass is (rank − trust)/rank."""
-    parts = [
-        f"WITH e AS ({SQL_E_OP}),",
-        "v AS (SELECT src AS vertex FROM e UNION SELECT dst FROM e),",
-        "nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM v),",
-        "outd AS (SELECT src AS vertex, CAST(COUNT(*) AS DOUBLE) AS od FROM e GROUP BY src),",
-        "w AS (SELECT e.src, e.dst, 1.0 / outd.od AS w FROM e JOIN outd ON outd.vertex = e.src),",
-        "srcs AS (SELECT DISTINCT 'p' || l_partkey AS vertex FROM lineitem WHERE l_partkey % 40 = 0),",
-        "ns AS (SELECT CAST(COUNT(*) AS DOUBLE) AS k FROM srcs JOIN v USING (vertex)),",
-        "tpv AS (SELECT v.vertex, CASE WHEN s.vertex IS NOT NULL "
-        "THEN 1.0 / (SELECT k FROM ns) ELSE 0.0 END AS tp "
-        "FROM v LEFT JOIN srcs s ON s.vertex = v.vertex),",
-        "p0 AS (SELECT vertex, 1.0 / (SELECT n FROM nn) AS rank FROM v),",
-        "t0 AS (SELECT vertex, tp AS rank FROM tpv),",
-    ]
-    for k in range(1, iters + 1):
-        parts.append(
-            f"pd{k} AS (SELECT COALESCE(SUM(rank), 0.0) AS dm FROM p{k-1} "
-            f"WHERE vertex NOT IN (SELECT vertex FROM outd)),"
-        )
-        parts.append(
-            f"ps{k} AS (SELECT w.dst AS vertex, SUM(r.rank * w.w) AS in_sum "
-            f"FROM p{k-1} r JOIN w ON w.src = r.vertex GROUP BY w.dst),"
-        )
-        parts.append(
-            f"p{k} AS (SELECT v.vertex, "
-            f"((1 - {alpha}) / (SELECT n FROM nn) + {alpha} * (SELECT dm FROM pd{k}) / (SELECT n FROM nn)) "
-            f"+ {alpha} * COALESCE(ps{k}.in_sum, 0.0) AS rank "
-            f"FROM v LEFT JOIN ps{k} ON ps{k}.vertex = v.vertex),"
-        )
-        parts.append(
-            f"td{k} AS (SELECT COALESCE(SUM(rank), 0.0) AS dm FROM t{k-1} "
-            f"WHERE vertex NOT IN (SELECT vertex FROM outd)),"
-        )
-        parts.append(
-            f"ts{k} AS (SELECT w.dst AS vertex, SUM(r.rank * w.w) AS in_sum "
-            f"FROM t{k-1} r JOIN w ON w.src = r.vertex GROUP BY w.dst),"
-        )
-        parts.append(
-            f"t{k} AS (SELECT tv.vertex, "
-            f"({1.0 - alpha!r} + {alpha!r} * (SELECT dm FROM td{k})) * tv.tp "
-            f"+ {alpha!r} * COALESCE(ts{k}.in_sum, 0.0) AS rank "
-            f"FROM tpv tv LEFT JOIN ts{k} ON ts{k}.vertex = tv.vertex),"
-        )
-    # trust = ppr * (n_seed / n) exactly as the operator multiplies by
-    # the python-division scalar; spam = (rank - trust)/rank
-    parts.append(
-        "sc AS (SELECT (SELECT k FROM ns) / (SELECT n FROM nn) AS s) "
-        f"SELECT p.vertex, ROUND(p.rank, 9) AS rank, "
-        f"ROUND(t.rank * (SELECT s FROM sc), 9) AS trust, "
-        f"ROUND((p.rank - t.rank * (SELECT s FROM sc)) / p.rank, 9) AS spam_mass "
-        f"FROM p{iters} p JOIN t{iters} t ON t.vertex = p.vertex"
-    )
-    return "\n".join(parts)
-
-
-def _cocitation_sql(
-    min_score: float = 2.0, max_pivot: int = 64, top_k: int = 100
-) -> str:
-    """cocitation_scores replay (operators/linkpred.py): wedge self-join
-    on the source pivot over the distinct order→part edges, hub pivots
-    capped, raw-common-count filter, cosine normalization by in-degree,
-    deterministic (score desc, u, v) top-k."""
-    return f"""
-WITH raw AS ({SQL_E_OP}),
-e AS (SELECT DISTINCT src, dst FROM raw WHERE src <> dst),
-deg AS (SELECT dst AS x, COUNT(*) AS dx FROM e GROUP BY dst),
-pdeg AS (SELECT src AS z, COUNT(*) AS dz FROM e GROUP BY src),
-piv AS (SELECT z FROM pdeg WHERE dz >= 2 AND dz <= {max_pivot}),
-nbrs AS MATERIALIZED (SELECT e.src AS z, e.dst AS n FROM e JOIN piv ON piv.z = e.src),
-pairs AS (SELECT e1.n AS u, e2.n AS v, CAST(COUNT(*) AS DOUBLE) AS score
-          FROM nbrs e1 JOIN nbrs e2 ON e1.z = e2.z AND e1.n < e2.n
-          GROUP BY u, v),
-filt AS (SELECT * FROM pairs WHERE score >= {min_score!r}),
-scored AS (SELECT u, v,
-             ROUND(f.score / sqrt(CAST(du.dx AS DOUBLE) * dv.dx), 9) AS score
-           FROM filt f JOIN deg du ON du.x = f.u JOIN deg dv ON dv.x = f.v)
-SELECT u, v, score FROM scored ORDER BY score DESC, u, v LIMIT {top_k}
-"""
-
-
-def _dag_layers_sql(rounds: int) -> str:
-    """topological_layers replay (operators/dag.py): ``rounds`` unrolled
-    Kahn peels over the key-oriented co-purchase DAG (src part key <
-    dst part key, so the graph is acyclic by construction and the layer
-    is the longest-chain depth); vertices not peeled inside the budget
-    stay -1, exactly the operator's fixed-budget state."""
-    parts = [
-        f"WITH raw AS ({SQL_E_CO}),",
-        "e AS (SELECT DISTINCT src, dst FROM raw),",
-        "v AS (SELECT src AS vertex FROM e UNION SELECT dst FROM e),",
-        "s0 AS (SELECT vertex, -1 AS layer FROM v),",
-    ]
-    for k in range(1, rounds + 1):
-        parts.append(
-            f"b{k} AS (SELECT DISTINCT dst AS vertex FROM e "
-            f"WHERE src IN (SELECT vertex FROM s{k-1} WHERE layer = -1)),"
-        )
-        parts.append(
-            f"s{k} AS (SELECT vertex, CASE WHEN layer <> -1 THEN layer "
-            f"WHEN vertex NOT IN (SELECT vertex FROM b{k}) THEN {k-1} "
-            f"ELSE -1 END AS layer FROM s{k-1}),"
-        )
-    parts.append(
-        f"fin AS (SELECT 1) SELECT vertex, layer FROM s{rounds}"
-    )
-    return "\n".join(parts)
-
-
-def _ppr_push_parts(
-    rounds: int = 6,
-    alpha: float = 0.15,
-    eps: float = 1e-4,
-    edge_sql: str | None = None,
-) -> list:
-    """Shared CTE prefix for the push-PPR replays (operators/push.py):
-    ``rounds`` unrolled synchronous forward-push supersteps over the
-    undirected graph of ``edge_sql`` (default supplier↔nation), seed =
-    MIN(vertex) — active set r ≥ eps·deg, push converts α·r to p and
-    spreads (1−α)·r/d.  Ends with the dangling comma of CTE
-    ``s{rounds}``; callers append their own final SELECT (ppr_push
-    state dump, or the sweep-cut scan)."""
-    parts = [
-        f"WITH e AS ({edge_sql or SQL_E_SUPP}),",
-        "und AS MATERIALIZED (SELECT DISTINCT a, b FROM "
-        "(SELECT src AS a, dst AS b FROM e UNION ALL SELECT dst, src FROM e) "
-        "WHERE a <> b),",
-        "deg AS (SELECT a AS vertex, CAST(COUNT(*) AS BIGINT) AS degree "
-        "FROM und GROUP BY a),",
-        "w AS MATERIALIZED (SELECT und.a AS u, und.b AS v, "
-        "1.0 / deg.degree AS w FROM und JOIN deg ON deg.vertex = und.a),",
-        "sd AS (SELECT MIN(vertex) AS s FROM deg),",
-        "s0 AS (SELECT vertex, 0.0 AS p, "
-        "CASE WHEN vertex = (SELECT s FROM sd) THEN 1.0 ELSE 0.0 END AS r, "
-        "degree FROM deg),",
-    ]
-    for k in range(1, rounds + 1):
-        p = f"s{k-1}"
-        parts.append(
-            f"a{k} AS (SELECT vertex, r FROM {p} "
-            f"WHERE r >= {eps!r} * degree),"
-        )
-        parts.append(
-            f"m{k} AS (SELECT w.v AS vertex, "
-            f"SUM({1.0 - alpha!r} * a.r * w.w) AS rin "
-            f"FROM a{k} a JOIN w ON w.u = a.vertex GROUP BY w.v),"
-        )
-        parts.append(
-            f"s{k} AS MATERIALIZED (SELECT s.vertex, "
-            f"CASE WHEN s.r >= {eps!r} * s.degree "
-            f"THEN s.p + {alpha!r} * s.r ELSE s.p END AS p, "
-            f"(CASE WHEN s.r >= {eps!r} * s.degree THEN 0.0 ELSE s.r END) "
-            f"+ COALESCE(m.rin, 0.0) AS r, s.degree "
-            f"FROM {p} s LEFT JOIN m{k} m ON m.vertex = s.vertex),"
-        )
-    return parts
-
-
-def _ppr_push_sql(
-    rounds: int = 6, alpha: float = 0.15, eps: float = 1e-4
-) -> str:
-    """ppr_push replay: the shared push unroll + the sparse state dump
-    (operators/push.py:53)."""
-    parts = _ppr_push_parts(rounds, alpha, eps)
-    parts.append(
-        # the operator's state is SPARSE (touched vertices only); the
-        # dense replay filters to the same set — raw-value comparison
-        # is exact because both engines run the identical positive-term
-        # arithmetic (p > 0 iff some alpha*r was ever absorbed)
-        f"fin AS (SELECT 1) SELECT vertex, ROUND(p, 9) AS p, "
-        f"ROUND(r, 9) AS r, degree FROM s{rounds} WHERE p > 0 OR r > 0"
-    )
-    return "\n".join(parts)
-
-
-def _local_community_sql(
-    rounds: int = 6, alpha: float = 0.15, eps: float = 1e-4
-) -> str:
-    """local_community replay (operators/push.py:239): the shared push
-    unroll, then the ACL sweep cut — rank touched vertices by p/degree,
-    cumulative volume/internal-edge counts (an edge becomes internal at
-    the larger of its two ranks), φ = cut / min(vol, vol(G) − vol),
-    best prefix by (φ asc, size asc) over prefixes with min_volume > 0.
-    All counts are exact integers; scores/φ are single IEEE divisions
-    of identical operands, so ordering and argmax match bit-for-bit.
-    Runs on the customer↔order star forest — like the supplier graph
-    every touched vertex receives push terms of one repeated value, so
-    the float state is order-independent and exactly cross-engine."""
-    parts = _ppr_push_parts(rounds, alpha, eps, edge_sql=SQL_E_CUST)
-    parts.append(
-        f"""st AS (SELECT vertex, p, degree FROM s{rounds} WHERE p > 0 OR r > 0),
-ranked AS (SELECT vertex, degree, p / degree AS score,
-           ROW_NUMBER() OVER (ORDER BY p / degree DESC, vertex ASC) AS rank
-           FROM st),
-closed AS (SELECT ra.rank AS rank, COUNT(*) AS closed
-           FROM und JOIN ranked ra ON ra.vertex = und.a
-                    JOIN ranked rb ON rb.vertex = und.b
-           WHERE ra.rank > rb.rank GROUP BY ra.rank),
-sweep AS (SELECT r.vertex, r.rank,
-            SUM(r.degree) OVER w AS vol,
-            SUM(COALESCE(c.closed, 0)) OVER w AS internal
-          FROM ranked r LEFT JOIN closed c USING (rank)
-          WINDOW w AS (ORDER BY r.rank
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-sw AS (SELECT vertex, rank, vol - 2 * internal AS cut,
-           LEAST(vol, (SELECT COUNT(*) FROM und) - vol) AS min_volume
-       FROM sweep),
-best AS (SELECT rank AS best_size, cut AS best_cut,
-           min_volume AS best_minvol,
-           CAST(cut AS DOUBLE) / min_volume AS phi
-         FROM sw WHERE min_volume > 0
-         ORDER BY phi ASC, best_size ASC LIMIT 1)
-SELECT s.vertex, CAST(s.rank AS INT) AS rank, CAST(b.best_size AS INT) AS size,
-       CAST(b.best_cut AS BIGINT) AS cut_edges,
-       CAST(b.best_minvol AS BIGINT) AS min_volume,
-       ROUND(b.phi, 9) AS conductance
-FROM sw s, best b WHERE s.rank <= b.best_size"""
-    )
-    return "\n".join(parts)
-
-
-def _densest_sql(rounds: int = 8, num: int = 3, den: int = 1) -> str:
-    """densest_subgraph replay (operators/densest.py): ``rounds``
-    unrolled parallel-peel supersteps over the co-purchase graph plus
-    the customer-order stars (sparse periphery, so the densest prefix
-    is a later round's proper core) — round k removes active v with
-    deg_k(v)·V_k·den ≤ num·E_k (exact integer comparison; num/den is
-    the rational value of 2(1+eps)) — then the post-hoc profile from
-    removal rounds (V_r/E_r = counts with expiry ≥ r), the
-    (density desc, round asc) argmax, and the member prefix
-    (expiry ≥ best round)."""
-    horizon = rounds + 1
-    parts = [
-        f"WITH raw AS ({SQL_E_CO} UNION ALL {SQL_E_CUST}),",
-        "c AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, "
-        "greatest(src, dst) AS b FROM raw WHERE src <> dst),",
-        "v AS (SELECT DISTINCT vertex FROM "
-        "(SELECT a AS vertex FROM c UNION ALL SELECT b FROM c)),",
-        "s0 AS (SELECT vertex, -1 AS rr FROM v),",
-    ]
-    for k in range(1, rounds + 1):
-        p = f"s{k-1}"
-        parts.append(f"a{k} AS (SELECT vertex FROM {p} WHERE rr = -1),")
-        parts.append(
-            f"e{k} AS MATERIALIZED (SELECT c.a, c.b FROM c "
-            f"JOIN a{k} x ON x.vertex = c.a "
-            f"JOIN a{k} y ON y.vertex = c.b),"
-        )
-        parts.append(
-            f"d{k} AS (SELECT vertex, COUNT(*) AS deg FROM "
-            f"(SELECT a AS vertex FROM e{k} UNION ALL SELECT b FROM e{k}) "
-            f"GROUP BY vertex),"
-        )
-        parts.append(
-            f"s{k} AS MATERIALIZED (SELECT s.vertex, "
-            f"CASE WHEN s.rr = -1 AND "
-            f"CAST(COALESCE(d.deg, 0) AS HUGEINT) "
-            f"* (SELECT COUNT(*) FROM a{k}) * {den} "
-            f"<= {num} * CAST((SELECT COUNT(*) FROM e{k}) AS HUGEINT) "
-            f"THEN {k} ELSE s.rr END AS rr "
-            f"FROM {p} s LEFT JOIN d{k} d USING (vertex)),"
-        )
-    parts.append(
-        f"""fs AS MATERIALIZED (SELECT vertex,
-        CASE WHEN rr = -1 THEN {horizon} ELSE rr END AS e FROM s{rounds}),
-fe AS MATERIALIZED (SELECT LEAST(fa.e, fb.e) AS e FROM c
-      JOIN fs fa ON fa.vertex = c.a JOIN fs fb ON fb.vertex = c.b),
-g AS (SELECT r FROM range(1, {rounds + 1}) t(r)),
-prof AS (SELECT g.r AS round,
-           (SELECT COUNT(*) FROM fs WHERE fs.e >= g.r) AS nv,
-           (SELECT COUNT(*) FROM fe WHERE fe.e >= g.r) AS ne
-         FROM g),
-best AS (SELECT round, nv, ne, CAST(ne AS DOUBLE) / nv AS density
-         FROM prof WHERE nv > 0 ORDER BY density DESC, round ASC LIMIT 1)
-SELECT fs.vertex, CAST(b.round AS INT) AS best_round,
-       CAST(b.nv AS BIGINT) AS n_vertices, CAST(b.ne AS BIGINT) AS n_edges,
-       ROUND(b.density, 9) AS density
-FROM fs, best b WHERE fs.e >= b.round"""
-    )
-    return "\n".join(parts)
-
-
-def _balanced_partition_sql(
-    rounds: int = 5, k: int = 4, num: int = 5, den: int = 4
-) -> str:
-    """balanced_partition replay (operators/partition.py): ``rounds``
-    unrolled capacity-gated LPA supersteps over the undirected
-    supplier↔nation graph.  num/den is the exact rational value of
-    1+slack, so capacity = ceil(num·V/(den·k)) compares integers on
-    both engines; moves need (votes desc, load asc, part asc) argmax
-    strictly better than own votes, room under capacity, and the
-    portable-hash parity coin for the round.  Runs on the
-    customer↔order graph (~16.5k vertices at sf0.01) — pure integer
-    state, so scale of the graph costs nothing in parity."""
-
-    def h(expr: str) -> str:
-        return duckdb_hash64_sql(expr)
-
-    dk = den * k
-    parts = [
-        f"WITH e AS ({SQL_E_CUST}),",
-        "und AS MATERIALIZED (SELECT DISTINCT a, b FROM "
-        "(SELECT src AS a, dst AS b FROM e UNION ALL SELECT dst, src FROM e) "
-        "WHERE a <> b),",
-        "v AS (SELECT DISTINCT a AS vertex FROM und),",
-        f"cap AS (SELECT CAST(({num} * COUNT(*) + {dk - 1}) // {dk} "
-        f"AS BIGINT) AS capacity FROM v),",
-        f"s0 AS MATERIALIZED (SELECT vertex, "
-        f"CAST({h('vertex')} % {k} AS INT) AS part FROM v),",
-    ]
-    for r in range(1, rounds + 1):
-        p = f"s{r-1}"
-        parts.append(
-            f"ld{r} AS (SELECT part, COUNT(*) AS load FROM {p} GROUP BY part),"
-        )
-        parts.append(
-            f"vt{r} AS MATERIALIZED (SELECT und.a AS vertex, s.part AS cand, "
-            f"COUNT(*) AS votes FROM und JOIN {p} s ON s.vertex = und.b "
-            f"GROUP BY und.a, s.part),"
-        )
-        parts.append(
-            f"bs{r} AS (SELECT vertex, cand AS best_part, votes AS best_votes, "
-            f"load AS best_load FROM "
-            f"(SELECT vt.vertex, vt.cand, vt.votes, l.load, "
-            f"ROW_NUMBER() OVER (PARTITION BY vt.vertex "
-            f"ORDER BY vt.votes DESC, l.load ASC, vt.cand ASC) AS rn "
-            f"FROM vt{r} vt JOIN ld{r} l ON l.part = vt.cand) WHERE rn = 1),"
-        )
-        parts.append(
-            f"s{r} AS MATERIALIZED (SELECT s.vertex, "
-            f"CAST(CASE WHEN b.best_part IS NOT NULL "
-            f"AND b.best_part <> s.part "
-            f"AND b.best_votes > COALESCE(ov.votes, 0) "
-            f"AND b.best_load < (SELECT capacity FROM cap) "
-            f"AND {h('s.vertex || ' + repr(':' + str(r)))} % 2 = 0 "
-            f"THEN b.best_part ELSE s.part END AS INT) AS part "
-            f"FROM {p} s LEFT JOIN bs{r} b USING (vertex) "
-            f"LEFT JOIN vt{r} ov ON ov.vertex = s.vertex AND ov.cand = s.part),"
-        )
-    parts.append(f"fin AS (SELECT 1) SELECT vertex, part FROM s{rounds}")
-    return "\n".join(parts)
-
-
 def _cc_incremental_sql(old_iters: int = 6, inc_iters: int = 4) -> str:
     """cc_incremental replay (operators/incremental.py): ``old_iters``
     truncated hash-min rounds on the o_orderkey % 4 != 0 customer
@@ -1460,97 +1112,6 @@ def _bpe_sql(n_merges: int = 6) -> str:
     )
     parts.append(f"fin AS (SELECT 1)\n{unions}")
     return "\n".join(parts)
-
-
-def _bowtie_sql() -> str:
-    """bowtie_components replay (operators/bowtie.py): exact transitive
-    closure of the supplier/nation/region digraph, SCC = min mutual
-    reach partner, core = (size desc, label asc) argmax, IN/OUT/TUBE/
-    TENDRIL/DISCONNECTED from the four reachability balls."""
-    return """
-WITH RECURSIVE sup AS (
-  SELECT s_suppkey AS k,
-         's' || s_suppkey AS sv,
-         'n' || s_nationkey AS nv,
-         'r' || n_regionkey AS rv
-  FROM supplier JOIN nation ON n_nationkey = s_nationkey),
-e0 AS (
-  SELECT sv AS src, nv AS dst FROM sup
-  UNION ALL SELECT nv, sv FROM sup WHERE k % 2 = 0
-  UNION ALL SELECT DISTINCT nv, rv FROM sup
-  UNION ALL SELECT sv, 'x' || k FROM sup WHERE k % 10 = 1
-  UNION ALL SELECT 'x' || k, rv FROM sup WHERE k % 10 = 1),
-ee AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-v AS (SELECT src AS vertex FROM ee UNION SELECT dst FROM ee),
-reach(a, b) AS (
-  SELECT src, dst FROM ee
-  UNION
-  SELECT r.a, e.dst FROM reach r JOIN ee e ON e.src = r.b),
-mut AS (SELECT r1.a AS v, r1.b AS u
-        FROM reach r1 JOIN reach r2 ON r2.a = r1.b AND r2.b = r1.a),
-scc AS (SELECT v.vertex,
-               LEAST(v.vertex, COALESCE(MIN(m.u), v.vertex)) AS scc
-        FROM v LEFT JOIN mut m ON m.v = v.vertex GROUP BY v.vertex),
-core_l AS (SELECT scc FROM (
-  SELECT scc, COUNT(*) AS n FROM scc GROUP BY scc
-  ORDER BY n DESC, scc ASC LIMIT 1)),
-corev AS (SELECT vertex FROM scc WHERE scc = (SELECT scc FROM core_l)),
-fwd AS (SELECT vertex FROM corev
-        UNION SELECT r.b FROM reach r JOIN corev c ON c.vertex = r.a),
-bwd AS (SELECT vertex FROM corev
-        UNION SELECT r.a FROM reach r JOIN corev c ON c.vertex = r.b),
-inset AS (SELECT vertex FROM bwd
-          WHERE vertex NOT IN (SELECT vertex FROM corev)),
-outset AS (SELECT vertex FROM fwd
-           WHERE vertex NOT IN (SELECT vertex FROM corev)),
-from_in AS (SELECT vertex FROM inset
-            UNION SELECT r.b FROM reach r JOIN inset i ON i.vertex = r.a),
-to_out AS (SELECT vertex FROM outset
-           UNION SELECT r.a FROM reach r JOIN outset o ON o.vertex = r.b)
-SELECT s.vertex,
-       CASE WHEN s.vertex IN (SELECT vertex FROM corev) THEN 'CORE'
-            WHEN s.vertex IN (SELECT vertex FROM bwd) THEN 'IN'
-            WHEN s.vertex IN (SELECT vertex FROM fwd) THEN 'OUT'
-            WHEN s.vertex IN (SELECT vertex FROM from_in)
-                 AND s.vertex IN (SELECT vertex FROM to_out) THEN 'TUBE'
-            WHEN s.vertex IN (SELECT vertex FROM from_in)
-                 OR s.vertex IN (SELECT vertex FROM to_out) THEN 'TENDRIL'
-            ELSE 'DISCONNECTED' END AS component,
-       s.scc
-FROM scc s
-"""
-
-
-def _richclub_sql(thresholds: "tuple[int, ...]" = (1, 2, 4, 8, 16)) -> str:
-    """rich_club replay (operators/graphstats.py): vertex-degree and
-    min-endpoint-degree histograms of the undirected simple order↔part
-    graph crossed against the threshold list; phi = 2E_k/(N_k(N_k-1))."""
-    ks = ", ".join(str(int(t)) for t in sorted(set(thresholds)))
-    return f"""
-WITH raw AS ({SQL_E_OP}),
-c AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      FROM raw WHERE src <> dst),
-und AS (SELECT a, b FROM c UNION ALL SELECT b, a FROM c),
-deg AS (SELECT a AS vertex, COUNT(*) AS degree FROM und GROUP BY a),
-ks AS (SELECT unnest([{ks}]) AS k),
-dh AS (SELECT degree, COUNT(*) AS nv FROM deg GROUP BY degree),
-nvt AS (SELECT k, CAST(SUM(nv) AS BIGINT) AS n_vertices
-        FROM dh JOIN ks ON dh.degree > ks.k GROUP BY k),
-eh AS (SELECT least(da.degree, db.degree) AS md, COUNT(*) AS ne
-       FROM c JOIN deg da ON da.vertex = c.a
-              JOIN deg db ON db.vertex = c.b
-       GROUP BY md),
-net AS (SELECT k, CAST(SUM(ne) AS BIGINT) AS n_edges
-        FROM eh JOIN ks ON eh.md > ks.k GROUP BY k)
-SELECT ks.k,
-       COALESCE(n_vertices, 0) AS n_vertices,
-       COALESCE(n_edges, 0) AS n_edges,
-       CASE WHEN COALESCE(n_vertices, 0) >= 2
-            THEN ROUND(2.0 * COALESCE(n_edges, 0)
-                       / (CAST(n_vertices AS DOUBLE) * (n_vertices - 1)), 9)
-       END AS phi
-FROM ks LEFT JOIN nvt USING (k) LEFT JOIN net USING (k)
-"""
 
 
 def _katz_sql(iters: int, alpha: float = 0.05, beta: float = 1.0) -> str:
@@ -2657,22 +2218,6 @@ def _harmonic_sql(depth: int = 4, k: int = 4) -> str:
     return "\n".join(parts)
 
 
-def _closeness_sql(depth: int = 4, k: int = 4) -> str:
-    """closeness_centrality replay (operators/landmarks.py): the
-    harmonic oracle's seed pick + unrolled multi-source BFS, folded to
-    n/Σd over d ≥ 1 (the Eppstein–Wang sampled closeness)."""
-    base = _harmonic_sql(depth, k)
-    head, _, _ = base.rpartition("fin AS (SELECT 1)")
-    return (
-        head
-        + "fin AS (SELECT 1)\n"
-        + "SELECT vertex, CAST(SUM(distance) AS BIGINT) AS sum_dist,\n"
-        + "  CAST(COUNT(*) AS INT) AS n_sources,\n"
-        + "  ROUND(CAST(COUNT(*) AS DOUBLE) / SUM(distance), 9) AS closeness\n"
-        + f"FROM r{depth} WHERE distance > 0 GROUP BY vertex"
-    )
-
-
 def _core_hist_sql(rounds: int = 10) -> str:
     """core_histogram replay (operators/kcore.py): the coreness h-index
     unrolling folded to one row per core value with the degeneracy
@@ -3451,98 +2996,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["harmonic_centrality"] = _harmonic
 
-    def _closeness(spark, sf):
-        from smatchpp_spark.operators.landmarks import (
-            closeness_centrality,
-            pick_landmarks,
-        )
-
-        e = _e_op(spark, sf)
-        seeds = pick_landmarks(e, k=4, directed=False)
-        return closeness_centrality(e, seeds, max_depth=4, directed=False)
-
-    q["closeness_centrality"] = _closeness
-
-
     def _bpe(spark, sf):
         from smatchpp_spark.pipeline.bpe import bpe_merges
 
         return bpe_merges(_read(spark, sf, "documents"), n_merges=6)
 
     q["doc_bpe_merges"] = _bpe
-
-    def _push(spark, sf):
-        from smatchpp_spark.operators.push import ppr_push
-
-        from smatchpp_spark.operators.kcore import undirected_simple
-
-        e = _e_supp(spark, sf)
-        # deterministic seed present at every sf: min vertex of the
-        # UNDIRECTED simple graph (exactly the oracle's MIN(vertex))
-        seed = undirected_simple(e).agg(F.min("a")).collect()[0][0]
-        r = ppr_push(
-            e, seed, alpha=0.15, eps=1e-4,
-            max_supersteps=6,
-        )
-        return r.state.select(
-            "vertex",
-            F.round("p", 9).alias("p"),
-            F.round("r", 9).alias("r"),
-            "degree",
-        )
-
-    q["ppr_push"] = _push
-
-    def _egonet(spark, sf):
-        from smatchpp_spark.operators.egonet import egonet_features
-
-        return egonet_features(_e_co(spark, sf))
-
-    q["egonet_features"] = _egonet
-
-    def _densest(spark, sf):
-        from smatchpp_spark.operators.densest import densest_subgraph
-
-        # co-purchase core + customer-order star periphery: the stars
-        # dilute round-1 density, so the argmax lands on a LATER round
-        # (a proper dense core) and the oracle must replay the peel,
-        # the profile, and the prefix — not just echo the input.
-        # eps=0.5 -> exact rational factor 3: every peel compares
-        # integers (densest.py).
-        e = _e_co(spark, sf).unionByName(_e_cust(spark, sf))
-        r = densest_subgraph(e, eps=0.5, max_rounds=8)
-        return r.members
-
-    q["densest_subgraph"] = _densest
-
-    def _local_comm(spark, sf):
-        from smatchpp_spark.operators.kcore import undirected_simple
-        from smatchpp_spark.operators.push import local_community
-
-        # customer↔order star forest: larger than the supplier graph
-        # yet still exactly cross-engine (every touched vertex sums
-        # push terms of ONE repeated value — order-independent floats)
-        e = _e_cust(spark, sf)
-        # deterministic seed, same device as ppr_push: min vertex of
-        # the undirected simple graph (the oracle's MIN(vertex))
-        seed = undirected_simple(e).agg(F.min("a")).collect()[0][0]
-        r = local_community(e, seed, alpha=0.15, eps=1e-4, max_supersteps=6)
-        return r.members
-
-    q["local_community"] = _local_comm
-
-    def _balanced(spark, sf):
-        from smatchpp_spark.operators.partition import balanced_partition
-
-        # slack=0.25 -> Fraction 1/4: capacity = ceil(5V/16) in exact
-        # integers on both engines (partition.py); customer↔order
-        # graph for a representative (~16.5k vertex) assignment
-        r = balanced_partition(
-            _e_cust(spark, sf), k=4, slack=0.25, max_supersteps=5
-        )
-        return r.assignment
-
-    q["balanced_partition"] = _balanced
 
     def _slink(spark, sf):
         from smatchpp_spark.operators.slink import single_linkage
@@ -3716,41 +3175,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["cc_incremental"] = _cc_inc
 
-
-    def _egonet_anom(spark, sf):
-        from smatchpp_spark.operators.egonet import egonet_anomalies
-
-        return egonet_anomalies(_e_co(spark, sf))
-
-    q["egonet_anomalies"] = _egonet_anom
-
-    def _nbr_feats(spark, sf):
-        from smatchpp_spark.operators.egonet import egonet_features
-        from smatchpp_spark.operators.nbragg import (
-            aggregate_neighbor_features,
-        )
-
-        # integer-valued input features (egonet counts) => the mean is
-        # one exact BIGINT-sum / count division — bit-exact oracle
-        e = _e_co(spark, sf)
-        feats = egonet_features(e).select(
-            "vertex",
-            F.array(
-                F.col("degree").cast("double"),
-                F.col("triangles").cast("double"),
-            ).alias("features"),
-        )
-        r = aggregate_neighbor_features(e, feats, dims=2)
-        return r.features.select(
-            "vertex",
-            "n_neighbors",
-            F.col("mean")[0].alias("mean_degree"),
-            F.col("mean")[1].alias("mean_triangles"),
-            F.col("max")[0].alias("max_degree"),
-            F.col("max")[1].alias("max_triangles"),
-        )
-
-    q["neighbor_features"] = _nbr_feats
 
     def _rank_corr(spark, sf):
         from smatchpp_spark.operators.graphstats import (
@@ -4152,109 +3576,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["graph_powerlaw"] = _powerlaw
-
-    def _trustrank(spark, sf):
-        from smatchpp_spark.operators.trustrank import trustrank_spam_mass
-
-        li = _read(spark, sf, "lineitem")
-        seeds = (
-            li.filter(F.col("l_partkey") % 40 == 0)
-            .select(
-                F.concat(
-                    F.lit("p"), F.col("l_partkey").cast("string")
-                ).alias("vertex")
-            )
-            .distinct()
-        )
-        r = trustrank_spam_mass(
-            _e_op(spark, sf), seeds, alpha=ALPHA, tol=-1.0,
-            max_supersteps=PR_STEPS,
-        )
-        return r.scores.select(
-            "vertex",
-            F.round("rank", 9).alias("rank"),
-            F.round("trust", 9).alias("trust"),
-            F.round("spam_mass", 9).alias("spam_mass"),
-        )
-
-    q["trustrank_spam"] = _trustrank
-
-    def _cocite(spark, sf):
-        from smatchpp_spark.operators.linkpred import cocitation_scores
-
-        return cocitation_scores(
-            _e_op(spark, sf),
-            mode="cocitation",
-            normalize="cosine",
-            min_score=2.0,
-            max_pivot_degree=64,
-            top_k=100,
-        )
-
-    q["cocitation_topk"] = _cocite
-
-    def _dag_layers(spark, sf):
-        from smatchpp_spark.operators.dag import topological_layers
-
-        r = topological_layers(_e_co(spark, sf), max_supersteps=8)
-        return r.layers
-
-    q["dag_layers"] = _dag_layers
-
-    def _richclub(spark, sf):
-        from smatchpp_spark.operators.graphstats import rich_club
-
-        return rich_club(_e_op(spark, sf), thresholds=[1, 2, 4, 8, 16])
-
-    q["graph_richclub"] = _richclub
-
-    def _bowtie(spark, sf):
-        from smatchpp_spark.operators.bowtie import bowtie_decomposition
-
-        # web-shaped digraph with all six Broder classes possible:
-        # s→n (all suppliers), n→s (even keys — nation clusters become
-        # SCCs), n→r (regions are OUT of the core cluster), and a
-        # core-bypassing s→x→r detour for suppkey % 10 == 1
-        s = _read(spark, sf, "supplier")
-        n = _read(spark, sf, "nation")
-        sup = s.join(
-            n.select("n_nationkey", "n_regionkey"),
-            s["s_nationkey"] == n["n_nationkey"],
-        ).select(
-            F.col("s_suppkey").alias("k"),
-            F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("sv"),
-            F.concat(F.lit("n"), F.col("s_nationkey").cast("string")).alias("nv"),
-            F.concat(F.lit("r"), F.col("n_regionkey").cast("string")).alias("rv"),
-        )
-        e = (
-            sup.select(F.col("sv").alias("src"), F.col("nv").alias("dst"))
-            .unionByName(
-                sup.filter(F.col("k") % 2 == 0).select(
-                    F.col("nv").alias("src"), F.col("sv").alias("dst")
-                )
-            )
-            .unionByName(
-                sup.select(
-                    F.col("nv").alias("src"), F.col("rv").alias("dst")
-                ).distinct()
-            )
-            .unionByName(
-                sup.filter(F.col("k") % 10 == 1).select(
-                    F.col("sv").alias("src"),
-                    F.concat(F.lit("x"), F.col("k").cast("string")).alias("dst"),
-                )
-            )
-            .unionByName(
-                sup.filter(F.col("k") % 10 == 1).select(
-                    F.concat(F.lit("x"), F.col("k").cast("string")).alias("src"),
-                    F.col("rv").alias("dst"),
-                )
-            )
-        )
-        r = bowtie_decomposition(e, max_scc_rounds=10, max_depth=10)
-        return r.membership
-
-    q["bowtie_components"] = _bowtie
 
     def _katz(spark, sf):
         from smatchpp_spark.operators.hits import katz_centrality
@@ -5057,18 +4378,7 @@ _DRIVER_WINDOW_FRONT = [
     "katz_centrality",
     "rmat_edges",
     "graph_powerlaw",
-    "trustrank_spam",
-    "cocitation_topk",
-    "dag_layers",
-    "graph_richclub",
-    "bowtie_components",
-    "closeness_centrality",
     "doc_bpe_merges",
-    "ppr_push",
-    "egonet_features",
-    "densest_subgraph",
-    "local_community",
-    "balanced_partition",
 ]
 
 
@@ -5100,69 +4410,6 @@ FROM ends GROUP BY vertex
         "pagerank_incremental": _pagerank_incremental_sql(PR_STEPS, 4),
         "fastrp_embeddings": _fastrp_sql(4, 2, (1.0, 0.5)),
         "cc_incremental": _cc_incremental_sql(6, 4),
-        "neighbor_features": f"""
-WITH raw AS ({SQL_E_CO}),
-c AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-                   FROM raw WHERE src <> dst),
-und AS (SELECT a, b FROM c UNION ALL SELECT b, a FROM c),
-deg AS (SELECT a AS vertex, COUNT(*) AS degree FROM und GROUP BY a),
-tri AS (SELECT e1.a AS v1, e1.b AS v2, e2.b AS v3
-        FROM c e1 JOIN c e2 ON e2.a = e1.b
-                  JOIN c e3 ON e3.a = e1.a AND e3.b = e2.b),
-corners AS (SELECT v1 AS vertex FROM tri UNION ALL SELECT v2 FROM tri
-            UNION ALL SELECT v3 FROM tri),
-tc AS (SELECT vertex, COUNT(*) AS triangles FROM corners GROUP BY vertex),
-f AS MATERIALIZED (SELECT d.vertex,
-       CAST(d.degree AS DOUBLE) AS fdeg,
-       CAST(COALESCE(t.triangles, 0) AS DOUBLE) AS ftri
-     FROM deg d LEFT JOIN tc t USING (vertex)),
-nb AS (SELECT und.a AS vertex, f.fdeg, f.ftri
-       FROM und JOIN f ON f.vertex = und.b)
-SELECT vertex, CAST(COUNT(*) AS BIGINT) AS n_neighbors,
-       SUM(fdeg) / COUNT(*) AS mean_degree,
-       SUM(ftri) / COUNT(*) AS mean_triangles,
-       MAX(fdeg) AS max_degree, MAX(ftri) AS max_triangles
-FROM nb GROUP BY vertex
-""",
-        "egonet_anomalies": f"""
-WITH raw AS ({SQL_E_CO}),
-c AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-                   FROM raw WHERE src <> dst),
-und AS (SELECT a, b FROM c UNION ALL SELECT b, a FROM c),
-deg AS (SELECT a AS vertex, COUNT(*) AS degree FROM und GROUP BY a),
-tri AS (SELECT e1.a AS v1, e1.b AS v2, e2.b AS v3
-        FROM c e1 JOIN c e2 ON e2.a = e1.b
-                  JOIN c e3 ON e3.a = e1.a AND e3.b = e2.b),
-corners AS (SELECT v1 AS vertex FROM tri UNION ALL SELECT v2 FROM tri
-            UNION ALL SELECT v3 FROM tri),
-tc AS (SELECT vertex, COUNT(*) AS triangles FROM corners GROUP BY vertex),
-f AS MATERIALIZED (SELECT d.vertex,
-       CAST(d.degree + 1 AS BIGINT) AS ego_nodes,
-       CAST(d.degree + COALESCE(t.triangles, 0) AS BIGINT) AS ego_edges
-     FROM deg d LEFT JOIN tc t USING (vertex)),
-mom AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         SUM(ln(CAST(ego_nodes AS DOUBLE))) AS sx,
-         SUM(ln(CAST(ego_edges AS DOUBLE))) AS sy,
-         SUM(ln(CAST(ego_nodes AS DOUBLE)) * ln(CAST(ego_nodes AS DOUBLE))) AS sxx,
-         SUM(ln(CAST(ego_nodes AS DOUBLE)) * ln(CAST(ego_edges AS DOUBLE))) AS sxy
-       FROM f),
-fit AS (SELECT ((sxy / n - (sx / n) * (sy / n))
-                / (sxx / n - (sx / n) * (sx / n))) AS theta,
-               (sy / n - ((sxy / n - (sx / n) * (sy / n))
-                / (sxx / n - (sx / n) * (sx / n))) * (sx / n)) AS logc
-        FROM mom)
-SELECT f.vertex, f.ego_nodes, f.ego_edges,
-       ROUND(exp(fit.logc + fit.theta * ln(CAST(f.ego_nodes AS DOUBLE))), 6)
-         AS expected_edges,
-       ROUND((GREATEST(CAST(f.ego_edges AS DOUBLE),
-                       exp(fit.logc + fit.theta * ln(CAST(f.ego_nodes AS DOUBLE))))
-              / LEAST(CAST(f.ego_edges AS DOUBLE),
-                      exp(fit.logc + fit.theta * ln(CAST(f.ego_nodes AS DOUBLE)))))
-             * ln(abs(CAST(f.ego_edges AS DOUBLE)
-                      - exp(fit.logc + fit.theta * ln(CAST(f.ego_nodes AS DOUBLE))))
-                  + 1.0), 6) AS score
-FROM f, fit
-""",
         "pagerank_hetero": _pagerank_sql(PR_STEPS, edge_sql=_TPCH_EDGES_SQL),
         "pagerank_personalized": _personalized_pagerank_sql(PR_STEPS),
         "pagerank_weighted": _pagerank_sql(
@@ -5610,11 +4857,6 @@ WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.a = s.u AND c.b = s.v)
         "rmat_edges": _rmat_sql(),
         "doc_source_similarity": _source_similarity_sql(16),
         "graph_powerlaw": _powerlaw_sql(3),
-        "trustrank_spam": _trustrank_sql(PR_STEPS),
-        "cocitation_topk": _cocitation_sql(2.0, 64, 100),
-        "dag_layers": _dag_layers_sql(8),
-        "graph_richclub": _richclub_sql((1, 2, 4, 8, 16)),
-        "bowtie_components": _bowtie_sql(),
         "louvain_communities": _louvain_sql(3, 2),
         "doc_substring_dedup": _substring_dedup_sql(5, 8, 2),
         "linkpred_ppr": _linkpred_ppr_sql(3, ALPHA, 10),
@@ -5624,11 +4866,7 @@ WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.a = s.u AND c.b = s.v)
         "landmark_distances": _landmark_sql(4, 4),
         "landmark_distances_packed": _landmark_sql(4, 4),
         "harmonic_centrality": _harmonic_sql(4, 4),
-        "closeness_centrality": _closeness_sql(4, 4),
         "doc_bpe_merges": _bpe_sql(6),
-        "ppr_push": _ppr_push_sql(6, 0.15, 1e-4),
-        "local_community": _local_community_sql(6, 0.15, 1e-4),
-        "densest_subgraph": _densest_sql(8, 3, 1),
         "single_linkage_clusters": """
 WITH RECURSIVE raw AS (SELECT 'o' || l_orderkey AS src, 'p' || l_partkey AS dst,
              (l_orderkey + l_partkey) % 9 + 1 AS w
@@ -5644,27 +4882,6 @@ reach(v, l) AS (SELECT src, src FROM und
 comp AS (SELECT v, MIN(l) AS c FROM reach GROUP BY v)
 SELECT verts.v AS vertex, COALESCE(comp.c, verts.v) AS cluster
 FROM verts LEFT JOIN comp ON comp.v = verts.v
-""",
-        "balanced_partition": _balanced_partition_sql(5, 4, 5, 4),
-        "egonet_features": f"""
-WITH raw AS ({SQL_E_CO}),
-c AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-                   FROM raw WHERE src <> dst),
-und AS (SELECT a, b FROM c UNION ALL SELECT b, a FROM c),
-deg AS (SELECT a AS vertex, COUNT(*) AS degree FROM und GROUP BY a),
-tri AS (SELECT e1.a AS v1, e1.b AS v2, e2.b AS v3
-        FROM c e1 JOIN c e2 ON e2.a = e1.b
-                  JOIN c e3 ON e3.a = e1.a AND e3.b = e2.b),
-corners AS (SELECT v1 AS vertex FROM tri UNION ALL SELECT v2 FROM tri
-            UNION ALL SELECT v3 FROM tri),
-tc AS (SELECT vertex, COUNT(*) AS triangles FROM corners GROUP BY vertex)
-SELECT d.vertex, CAST(d.degree AS BIGINT) AS degree,
-       CAST(COALESCE(t.triangles, 0) AS BIGINT) AS triangles,
-       CAST(d.degree + 1 AS BIGINT) AS ego_nodes,
-       CAST(d.degree + COALESCE(t.triangles, 0) AS BIGINT) AS ego_edges,
-       ROUND(CAST(d.degree + COALESCE(t.triangles, 0) AS DOUBLE)
-             / (d.degree + 1), 9) AS edge_ratio
-FROM deg d LEFT JOIN tc t USING (vertex)
 """,
         "core_histogram": _core_hist_sql(10),
         "linkpred_jaccard": """

@@ -1,8 +1,12 @@
 """spark-submit job for the link-graph suite (north-rule pipeline):
 
   spark-submit --py-files smatchpp_spark.zip jobs/linkgraph.py \
-      --op pagerank|pagerank_incremental|components|components_twophase|labelprop \
-           |triangles|degrees|kcore|bfs|scc|hyperball|clustering|linkpred \
+      --op pagerank|pagerank_incremental|hits|components|components_twophase \
+           |cc_incremental|labelprop|triangles|degrees|kcore|coreness|ktruss \
+           |bfs|scc|sssp|landmarks|betweenness|hyperball|clustering|linkpred \
+           |walks|node2vec|louvain|mis|coloring|msf|single_linkage|fastrp \
+           |widest_path|reliable_path|graph_diff|hitting|spectral|encode \
+           |degree_quantiles|percolation|sparsify|embeddedness \
       --edges <parquet dir with (src, dst)> \
       [--src-col src] [--dst-col dst] \
       [--checkpoint-dir /ckpt] [--resume] [--max-supersteps N] \
@@ -35,9 +39,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
                             "linkpred", "walks", "node2vec", "louvain",
                             "betweenness", "landmarks", "sssp",
                             "mis", "coloring", "msf", "ktruss", "coreness",
-                            "trustrank", "bowtie", "toposort", "closeness",
-                            "cocitation", "egonet", "densest",
-                            "local_community", "partition",
                             "single_linkage", "pagerank_incremental",
                             "fastrp", "widest_path", "reliable_path",
                             "graph_diff", "cc_incremental",
@@ -64,14 +65,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--threshold", type=float, default=None,
                    help="single_linkage: inclusive distance cut; omit to "
                         "cut at --k clusters instead")
-    p.add_argument("--push-eps", type=float, default=1e-4,
-                   help="local_community: push residual threshold")
-    p.add_argument("--peel-eps", type=float, default=0.5,
-                   help="densest: approximation slack (factor 2(1+eps))")
-    p.add_argument("--n-parts", type=int, default=4,
-                   help="partition: number of parts")
-    p.add_argument("--slack", type=float, default=0.05,
-                   help="partition: capacity slack over |V|/k")
     p.add_argument("--sweeps-per-level", type=int, default=8,
                    help="louvain: local-move sweeps per level")
     p.add_argument("--levels", type=int, default=2,
@@ -127,8 +120,7 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--resume", action="store_true")
     p.add_argument("--max-supersteps", type=int, default=100)
     p.add_argument("--alpha", type=float, default=0.85,
-                   help="pagerank damping (local_community converts to the "
-                        "ACL teleport 1-alpha)")
+                   help="pagerank damping")
     p.add_argument("--sources", default=None,
                    help="pagerank: comma-separated teleport vertices, or "
                         "@/path/to/parquet with a vertex column — switches "
@@ -440,72 +432,6 @@ def main() -> None:
         )
         out = res.communities
         summary["levels"] = res.levels
-    elif args.op == "trustrank":
-        from smatchpp_spark.operators.trustrank import trustrank_spam_mass
-
-        if not args.sources:
-            raise SystemExit("trustrank requires --sources (trusted seeds)")
-        if args.sources.startswith("@"):
-            seeds = spark.read.parquet(args.sources[1:])
-        else:
-            seeds = args.sources.split(",")
-        res = trustrank_spam_mass(
-            edges, seeds, alpha=args.alpha, tol=args.tol,
-            max_supersteps=args.max_supersteps,
-            checkpoint_dir=args.checkpoint_dir,
-        )
-        out = res.scores
-        summary["n_seeds"] = res.n_seeds
-    elif args.op == "bowtie":
-        from smatchpp_spark.operators.bowtie import bowtie_decomposition
-
-        res = bowtie_decomposition(
-            edges, max_scc_rounds=args.max_supersteps,
-            max_depth=args.max_supersteps,
-            checkpoint_dir=args.checkpoint_dir,
-        )
-        out = res.membership
-        summary["core_label"] = str(res.core_label)
-        summary["core_size"] = res.core_size
-    elif args.op == "toposort":
-        from smatchpp_spark.operators.dag import topological_layers
-
-        res = topological_layers(
-            edges, max_supersteps=args.max_supersteps,
-            checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-        )
-        out = res.layers
-        summary["acyclic"] = res.acyclic
-        summary["rounds"] = res.rounds
-    elif args.op == "closeness":
-        from smatchpp_spark.operators.landmarks import (
-            closeness_centrality,
-            pick_landmarks,
-        )
-
-        if args.sources:
-            seeds = (
-                spark.read.parquet(args.sources[1:])
-                if args.sources.startswith("@")
-                else args.sources.split(",")
-            )
-        else:
-            seeds = pick_landmarks(
-                edges, k=args.n_landmarks, directed=not args.undirected
-            )
-        out = closeness_centrality(
-            edges, seeds, max_depth=args.max_supersteps,
-            directed=not args.undirected,
-        )
-    elif args.op == "cocitation":
-        from smatchpp_spark.operators.linkpred import cocitation_scores
-
-        out = cocitation_scores(
-            edges,
-            mode="cocitation",
-            top_k=args.top_k,
-            max_pivot_degree=args.max_pivot_degree,
-        )
     elif args.op == "cc_incremental":
         from smatchpp_spark.operators.incremental import cc_incremental
 
@@ -671,54 +597,6 @@ def main() -> None:
         from smatchpp_spark.operators.sparsify import edge_embeddedness
 
         out = edge_embeddedness(edges)
-    elif args.op == "egonet":
-        from smatchpp_spark.operators.egonet import egonet_features
-
-        out = egonet_features(edges)
-    elif args.op == "densest":
-        from smatchpp_spark.operators.densest import densest_subgraph
-
-        res = densest_subgraph(
-            edges, eps=args.peel_eps,
-            max_rounds=args.max_supersteps,
-            checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-        )
-        print(f"densest: best_round={res.best_round} "
-              f"density={res.best_density:.6f} rounds={res.rounds} "
-              f"converged={res.converged}")
-        out = res.members
-    elif args.op == "local_community":
-        from smatchpp_spark.operators.push import local_community
-
-        if not args.sources or args.sources.startswith("@"):
-            raise SystemExit(
-                "--op local_community requires --sources <one seed vertex>"
-            )
-        seed = args.sources.split(",")[0]
-        res = local_community(
-            edges, seed, alpha=1.0 - args.alpha, eps=args.push_eps,
-            max_supersteps=args.max_supersteps,
-            checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-        )
-        print(f"local_community: supersteps={res.supersteps} "
-              f"converged={res.converged}")
-        out = res.members
-    elif args.op == "partition":
-        from smatchpp_spark.operators.partition import (
-            balanced_partition,
-            partition_stats,
-        )
-
-        res = balanced_partition(
-            edges, k=args.n_parts, slack=args.slack,
-            max_supersteps=args.max_supersteps,
-            checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-        )
-        stats = partition_stats(edges, res.assignment).collect()[0]
-        print(f"partition: k={res.k} capacity={res.capacity} "
-              f"rounds={res.rounds} cut_fraction={stats['cut_fraction']} "
-              f"imbalance={stats['imbalance']}")
-        out = res.assignment
     elif args.op == "walks":
         from smatchpp_spark.operators.walks import random_walks
 

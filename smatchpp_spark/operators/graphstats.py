@@ -411,103 +411,6 @@ def powerlaw_fit(edges: DataFrame, d_min: int = 2) -> DataFrame:
     )
 
 
-def rich_club(
-    edges: DataFrame, thresholds: "list[int] | None" = None
-) -> DataFrame:
-    """Rich-club coefficient φ(k) of the undirected simple graph for
-    each degree threshold k (Zhou & Mondragon 2004, public): with
-    ``N_k`` = vertices of degree > k and ``E_k`` = edges with BOTH
-    endpoints of degree > k,
-
-        φ(k) = 2·E_k / (N_k · (N_k − 1))
-
-    — the edge density among the hubs.  φ(k) → 1 means the hubs form a
-    near-clique (the "rich club" of web/AS graphs); the curve over k is
-    the standard hub-interconnection summary and decides whether hub
-    salting alone fixes join skew (no club) or the hub-hub edge block
-    needs its own handling (club).
-
-    ``thresholds`` defaults to powers of two up to the max degree.
-    Plan shape: the full-size tables are reduced to HISTOGRAMS first —
-    a (degree → count) histogram of vertices and a
-    (min-endpoint-degree → count) histogram of canonical edges (one
-    degree agg + two vertex-keyed joins + two map-side-combined
-    groupBys); the threshold list is then crossed against the
-    histograms only, which have at most #distinct-degrees ≈ O(√E) rows.
-    Neither the edge table nor the vertex table is ever multiplied by
-    the number of thresholds.  Output (k, n_vertices, n_edges, phi)
-    ordered by k; φ is NULL when N_k < 2 (undefined, no pairs).
-    """
-    spark = edges.sparkSession
-    und = undirected_simple(edges)  # (a, b) both directions, distinct
-    deg = und.groupBy(F.col("a").alias("vertex")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
-    if thresholds is None:
-        dmax = deg.agg(F.max("degree")).collect()[0][0] or 0
-        thresholds, k = [], 1
-        while k <= dmax:
-            thresholds.append(k)
-            k *= 2
-        if not thresholds:
-            thresholds = [1]
-    ks = spark.createDataFrame(
-        [(int(t),) for t in sorted(set(thresholds))], "k int"
-    )
-    # histogram of vertex degrees: N_k = Σ_{d > k} count(d)
-    deg_hist = deg.groupBy("degree").agg(F.count(F.lit(1)).alias("nv"))
-    nv = (
-        deg_hist.crossJoin(F.broadcast(ks))
-        .filter(F.col("degree") > F.col("k"))
-        .groupBy("k")
-        .agg(F.sum("nv").alias("n_vertices"))
-    )
-    # histogram of canonical edges by min endpoint degree: an edge is in
-    # club k iff BOTH endpoint degrees > k iff min(da, db) > k
-    canon = und.filter(F.col("a") < F.col("b"))
-    da = deg.select(F.col("vertex").alias("a"), F.col("degree").alias("da"))
-    db = deg.select(F.col("vertex").alias("b"), F.col("degree").alias("db"))
-    edge_hist = (
-        canon.join(da, "a")
-        .join(db, "b")
-        .groupBy(F.least("da", "db").alias("md"))
-        .agg(F.count(F.lit(1)).alias("ne"))
-    )
-    ne = (
-        edge_hist.crossJoin(F.broadcast(ks))
-        .filter(F.col("md") > F.col("k"))
-        .groupBy("k")
-        .agg(F.sum("ne").alias("n_edges"))
-    )
-    return (
-        ks.join(nv, "k", "left")
-        .join(ne, "k", "left")
-        .select(
-            "k",
-            F.coalesce("n_vertices", F.lit(0)).alias("n_vertices"),
-            F.coalesce("n_edges", F.lit(0)).alias("n_edges"),
-        )
-        .select(
-            "k",
-            "n_vertices",
-            "n_edges",
-            F.when(
-                F.col("n_vertices") >= 2,
-                F.round(
-                    2.0
-                    * F.col("n_edges")
-                    / (
-                        F.col("n_vertices").cast("double")
-                        * (F.col("n_vertices") - 1)
-                    ),
-                    9,
-                ),
-            ).alias("phi"),
-        )
-        .orderBy("k")
-    )
-
-
 def spearman_correlation(
     df: DataFrame, x_col: str, y_col: str
 ) -> DataFrame:

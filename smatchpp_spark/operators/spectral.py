@@ -3,9 +3,7 @@
 The second eigenvector of the normalized Laplacian ``L = I − D^(−1/2) A
 D^(−1/2)`` (the Fiedler vector) gives the classic spectral bisection:
 ``sign(fiedler)`` splits the graph along its sparsest low-conductance
-direction (Fiedler 1973; Shi–Malik normalized cuts).  Complements
-``partition.balanced_partition`` (local trade refinement): spectral
-finds the global cut direction, refinement polishes balance.
+direction (Fiedler 1973; Shi–Malik normalized cuts).
 
 K fixed, fully deterministic power-iteration steps on the SHIFTED
 normalized adjacency ``M' = (D^(−1/2) A D^(−1/2) + I)/2`` — the shift

@@ -267,19 +267,6 @@ class SuperstepRunner:
         )
 
 
-def max_abs_delta(col: str) -> Callable[[DataFrame, DataFrame], float]:
-    """max |new.col - old.col| over the vertex key — PageRank convergence."""
-
-    def fn(old: DataFrame, new: DataFrame) -> float:
-        joined = old.select("vertex", F.col(col).alias("_old")).join(
-            new.select("vertex", F.col(col).alias("_new")), "vertex"
-        )
-        row = joined.agg(F.max(F.abs(F.col("_new") - F.col("_old")))).collect()[0]
-        return row[0] if row[0] is not None else 0.0
-
-    return fn
-
-
 def changed_count_delta(col: str) -> Callable[[DataFrame, DataFrame], float]:
     """Number of vertices whose label changed — CC/LPA convergence."""
 

@@ -304,128 +304,6 @@ def test_linkgraph_job_ktruss(spark, tmp_path, monkeypatch, capsys):
                    ("b", "d"), ("c", "d")]
 
 
-def test_linkgraph_job_webgraph_ops(spark, tmp_path, monkeypatch, capsys):
-    """Round-7 web-graph ops through the job surface: trustrank,
-    bowtie, toposort, closeness, cocitation."""
-    # cycle {1,2,3} + tail 3->4->5 (DAG part), plus spam island 8->9
-    pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (8, 9)]
-    epath = _write_edges(spark, tmp_path, pairs)
-
-    s = _run_job(
-        monkeypatch, capsys,
-        ["--op", "trustrank", "--edges", epath, "--sources", "1",
-         "--max-supersteps", "30", "-o", str(tmp_path / "tr")],
-    )
-    assert s["n_seeds"] == 1 and s["rows"] == 7
-    rows = {r.vertex: r for r in spark.read.parquet(str(tmp_path / "tr")).collect()}
-    assert rows["8"].spam_mass == 1.0 and rows["9"].spam_mass == 1.0
-    assert rows["1"].spam_mass < 1.0
-
-    s = _run_job(
-        monkeypatch, capsys,
-        ["--op", "bowtie", "--edges", epath, "--max-supersteps", "10",
-         "-o", str(tmp_path / "bt")],
-    )
-    assert s["core_label"] == "1" and s["core_size"] == 3
-    comp = {r.vertex: r.component
-            for r in spark.read.parquet(str(tmp_path / "bt")).collect()}
-    assert comp["4"] == comp["5"] == "OUT"
-    assert comp["8"] == comp["9"] == "DISCONNECTED"
-
-    s = _run_job(
-        monkeypatch, capsys,
-        ["--op", "toposort", "--edges", epath, "--max-supersteps", "10",
-         "-o", str(tmp_path / "ts")],
-    )
-    assert s["acyclic"] is False  # the 1-2-3 cycle never peels
-    layers = {r.vertex: r.layer
-              for r in spark.read.parquet(str(tmp_path / "ts")).collect()}
-    assert layers["8"] == 0 and layers["9"] == 1
-    assert layers["1"] == -1
-
-    s = _run_job(
-        monkeypatch, capsys,
-        ["--op", "closeness", "--edges", epath, "--sources", "1",
-         "--undirected", "--max-supersteps", "10",
-         "-o", str(tmp_path / "cn")],
-    )
-    cl = {r.vertex: r.closeness
-          for r in spark.read.parquet(str(tmp_path / "cn")).collect()}
-    assert cl["2"] == 1.0 and cl["4"] == 0.5  # d=1 and d=2 from seed 1
-
-    s = _run_job(
-        monkeypatch, capsys,
-        ["--op", "cocitation", "--edges", epath, "--top-k", "5",
-         "-o", str(tmp_path / "cc2")],
-    )
-    # pivot 3 cites {1, 4}: the only cocited pair
-    got = {(r.u, r.v): r.score
-           for r in spark.read.parquet(str(tmp_path / "cc2")).collect()}
-    assert got == {("1", "4"): 1.0}
-
-
-def test_linkgraph_job_mining_ops(spark, tmp_path, monkeypatch, capsys):
-    """Round-7 graph-mining ops through the job surface: egonet,
-    densest, local_community, partition."""
-    # 5-clique {1..5} + a 20-vertex chain hung off vertex 5: the chain
-    # is sparse periphery, so the densest core is exactly the clique
-    clique = [(a, b) for a in range(1, 6) for b in range(a + 1, 6)]
-    chain = [(5, 10)] + [(i, i + 1) for i in range(10, 29)]
-    epath = _write_edges(spark, tmp_path, clique + chain)
-
-    s = _run_job(
-        monkeypatch, capsys,
-        ["--op", "egonet", "--edges", epath, "-o", str(tmp_path / "eg")],
-    )
-    assert s["rows"] == 25
-    rows = {r.vertex: r
-            for r in spark.read.parquet(str(tmp_path / "eg")).collect()}
-    # interior clique vertex: ego = the whole clique
-    assert rows["1"].degree == 4 and rows["1"].triangles == 6
-    assert rows["1"].ego_nodes == 5 and rows["1"].ego_edges == 10
-    # chain interior: star ego, no triangles
-    assert rows["11"].triangles == 0 and rows["11"].ego_edges == 2
-
-    s = _run_job(
-        monkeypatch, capsys,
-        ["--op", "densest", "--edges", epath, "--max-supersteps", "10",
-         "-o", str(tmp_path / "dn")],
-    )
-    members = {r.vertex
-               for r in spark.read.parquet(str(tmp_path / "dn")).collect()}
-    assert members == {"1", "2", "3", "4", "5"}
-
-    s = _run_job(
-        monkeypatch, capsys,
-        ["--op", "local_community", "--edges", epath, "--sources", "1",
-         "--max-supersteps", "30", "-o", str(tmp_path / "lc")],
-    )
-    comm = {(r.vertex, r.conductance)
-            for r in spark.read.parquet(str(tmp_path / "lc")).collect()}
-    got = {v for v, _ in comm}
-    # the min-φ cut keeps the clique and walks the chain until the
-    # volume midpoint: cut stays 1 while min-volume grows, so φ keeps
-    # falling until vol = vol(G)/2 — prefix {clique, 10..13}, φ = 1/29
-    assert {"1", "2", "3", "4", "5"} <= got
-    assert got == {"1", "2", "3", "4", "5", "10", "11", "12", "13"}
-    assert all(abs(c - 1.0 / 29.0) < 1e-8 for _, c in comm)
-
-    s = _run_job(
-        monkeypatch, capsys,
-        ["--op", "partition", "--edges", epath, "--n-parts", "2",
-         "--slack", "0.25", "--max-supersteps", "5",
-         "-o", str(tmp_path / "pt")],
-    )
-    assert s["rows"] == 25
-    parts = {r.vertex: r.part
-             for r in spark.read.parquet(str(tmp_path / "pt")).collect()}
-    assert set(parts.values()) <= {0, 1}
-    from collections import Counter
-
-    # capacity = ceil(1.25 * 25 / 2) = 16
-    assert max(Counter(parts.values()).values()) <= 16 + 13  # start-load relaxation bound
-
-
 def test_linkgraph_job_single_linkage(spark, tmp_path, monkeypatch, capsys):
     # two weight-1 triangles joined by a weight-9 bridge
     t1 = [(1, 2), (2, 3), (1, 3)]

@@ -127,13 +127,6 @@ CHECKS = {
          "degree deltas combine map-side; the edge-key full-outer join "
          "is the only wide exchange"),
     ],
-    "egonet_features": [
-        ("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint>",
-         "egonet counts scan only the 2 key columns of lineitem"),
-        ("HashAggregate",
-         "degree + triangle-corner counts combine map-side; ego_edges "
-         "is arithmetic on the joined aggregates, no third pass"),
-    ],
     "degree_assortativity": [
         ("HashAggregate",
          "the whole statistic is ONE global moment aggregation — "
@@ -192,25 +185,6 @@ CHECKS = {
          "volume/cut/member counts combine map-side over the label key"),
         ("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint>",
          "co-purchase edge derivation prunes to the 2 key columns"),
-    ],
-    "graph_richclub": [
-        ("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint>",
-         "edge derivation reads 2 of 11 lineitem columns"),
-        ("HashAggregate",
-         "degree and min-endpoint-degree HISTOGRAMS combine map-side — "
-         "the threshold list multiplies histogram rows, never edges"),
-        ("BroadcastNestedLoopJoin",
-         "the ≤dozens-row threshold list crosses the tiny histograms "
-         "as a broadcast"),
-    ],
-    "cocitation_topk": [
-        ("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint>",
-         "edge derivation reads 2 of 11 lineitem columns"),
-        ("HashAggregate",
-         "wedge pair counts combine map-side on the (u, v) key"),
-        ("TakeOrderedAndProject",
-         "global top-k runs as take-ordered — no full sort "
-         "materialization of the pair table"),
     ],
     "emb_pq_topk": [
         ("BroadcastExchange",

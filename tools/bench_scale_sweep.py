@@ -231,7 +231,6 @@ def main() -> None:
             "e_cust": em._e_cust(spark, sf_dir),
             "e_co": em._e_co(spark, sf_dir),
             "e_co19": co19,
-            "e_op_hub": hub_edges(em._e_op(spark, sf_dir), 1),
             "e_co_hub": hub_edges(co19, 1),
             "events": ev1,
             "docs": docs1,
@@ -246,7 +245,6 @@ def main() -> None:
             "e_cust": replicate_edges(em._e_cust(spark, sf_dir), SCALE),
             "e_co": replicate_edges(em._e_co(spark, sf_dir), SCALE),
             "e_co19": replicate_edges(co19, SCALE),
-            "e_op_hub": hub_edges(replicate_edges(em._e_op(spark, sf_dir), SCALE), SCALE),
             "e_co_hub": hub_edges(replicate_edges(co19, SCALE), SCALE),
             "events": ev10,
             "docs": docs10,
@@ -674,78 +672,18 @@ def main() -> None:
             spark, scale=20, n_edges=500_000 * scale, seed=1
         ).agg(F.count(F.lit(1)), F.max("src")).collect())
 
-        from smatchpp_spark.operators.dag import topological_layers
-        from smatchpp_spark.operators.graphstats import rich_club
-        from smatchpp_spark.operators.linkpred import cocitation_scores
-        from smatchpp_spark.operators.trustrank import trustrank_spam_mass
-
-        # two fixed-step PR chains + one vertex join; expect the
-        # pagerank_10steps profile (shuffle-floor dominated)
-        _trseeds = (
-            e_op.select(F.col("dst").alias("vertex"))
-            .distinct()
-            .filter(F.xxhash64("vertex") % 32 == 0)
-        )
-        timed("trustrank_5steps", scale, lambda: trustrank_spam_mass(
-            e_op, _trseeds, tol=-1.0, max_supersteps=5
-        ).scores.count())
-        # wedge self-join on the capped source pivot — the linkpred/
-        # triangle work profile (~Σd², disjoint copies make it linear)
-        timed("cocitation_cap64", scale, lambda: cocitation_scores(
-            e_op, mode="cocitation", normalize="cosine",
-            min_score=2.0, max_pivot_degree=64,
-        ).count())
-
         # ---- round-8 hub-skew twins (VERDICT r7 item 5): identical
         # operators on the planted-hub graphs; the guards cap the hub's
         # wedge contribution, so the 1x->10x exponent should track the
         # unhubbed rows instead of the hub's quadratic growth ----
         from smatchpp_spark.operators.sparsify import edge_embeddedness
 
-        timed("cocitation_hubbed", scale, lambda: cocitation_scores(
-            inp["e_op_hub"], mode="cocitation", normalize="cosine",
-            min_score=2.0, max_pivot_degree=64,
-        ).count())
         # embeddedness has no cap parameter: its wedge join is
         # degree-ORIENTED (pivot degree <= sqrt(2m) by construction), so
         # the hubbed row demonstrates the orientation itself absorbing
         # the star
         timed("embeddedness_hubbed", scale, lambda: edge_embeddedness(
             inp["e_co_hub"]
-        ).count())
-        # fixed 6 Kahn peels over the key-oriented DAG; per-round work
-        # is one semi-join + one anti-join over the shrinking active set
-        timed("dag_layers_6rounds", scale, lambda: topological_layers(
-            inp["e_co"], max_supersteps=6
-        ).layers.count())
-        # two histogram aggs + broadcast threshold cross — one edge scan
-        timed("graph_richclub", scale, lambda: rich_club(
-            e_op, thresholds=[1, 2, 4, 8, 16]
-        ).count())
-
-        from smatchpp_spark.operators.bowtie import bowtie_decomposition
-
-        # SCC peel + 4 bounded BFS balls; half the edges get a reverse
-        # twin (hash-chosen), so SCC clusters + IN/OUT fringes exist and
-        # the structure is identical per disjoint copy
-        _bt = e_op.unionByName(
-            e_op.filter(F.xxhash64("src", "dst") % 2 == 0).select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        timed("bowtie_d6", scale, lambda: bowtie_decomposition(
-            _bt, max_scc_rounds=6, max_depth=6
-        ).membership.count())
-
-        from smatchpp_spark.operators.landmarks import (
-            closeness_centrality,
-            pick_landmarks,
-        )
-
-        # shares the landmark multi-source BFS; fold is one groupBy
-        _cl_seeds = pick_landmarks(e_op, k=4, directed=False)
-        timed("closeness_d4", scale, lambda: closeness_centrality(
-            e_op, _cl_seeds, max_depth=4, directed=False
         ).count())
 
         from smatchpp_spark.pipeline.bpe import bpe_merges
@@ -756,55 +694,6 @@ def main() -> None:
         timed("doc_bpe_4merges", scale, lambda: bpe_merges(
             inp["docs"], n_merges=4
         ).count())
-
-        from smatchpp_spark.operators.push import ppr_push
-
-        # the push story at 10x: work is O(1/(eps*alpha)) around the
-        # seed, NOT graph-size-bound — expect a near-flat wall (only
-        # the static contrib build scans the bigger edge table)
-        _push_seed = (
-            e_op.select(F.least(F.min("src"), F.min("dst")).alias("s"))
-            .collect()[0]["s"]
-        )
-        timed("ppr_push_6rounds", scale, lambda: ppr_push(
-            e_op, _push_seed, alpha=0.15, eps=1e-4, max_supersteps=6
-        ).state.count())
-
-        from smatchpp_spark.operators.egonet import egonet_features
-
-        # one degree agg + the degree-oriented wedge corners: bounded
-        # by sum(d_lo^2) like triangle_counts — expect its exponent
-        timed("egonet_features", scale, lambda: egonet_features(
-            inp["e_co"]
-        ).count())
-
-        from smatchpp_spark.operators.densest import densest_subgraph
-
-        # log-round parallel peel: per round two semi-joins + one
-        # degree agg on the SHRINKING survivor set; 10x disjoint
-        # copies peel in the same number of rounds (same degree
-        # profile), so work ~ 10x round-1 volume decaying — sublinear
-        timed("densest_8rounds", scale, lambda: densest_subgraph(
-            e_op, eps=0.5, max_rounds=8
-        ).members.count())
-
-        from smatchpp_spark.operators.push import local_community
-
-        # push is seed-local (O(1/(eps*alpha)) touched); the sweep adds
-        # one edge join against the touched set + a window over it —
-        # expect near-flat like ppr_push_6rounds
-        timed("local_community", scale, lambda: local_community(
-            e_op, _push_seed, alpha=0.15, eps=1e-4, max_supersteps=6
-        ).members.count())
-
-        from smatchpp_spark.operators.partition import balanced_partition
-
-        # capacity-gated LPA: per round one edge-vs-state join + one
-        # map-side-combined (vertex, part) count; k-row load table
-        # broadcasts — expect the label_propagation profile
-        timed("balanced_partition_5rounds", scale, lambda: balanced_partition(
-            inp["e_cust"], k=4, slack=0.25, max_supersteps=5
-        ).assignment.count())
 
         from smatchpp_spark.operators.slink import single_linkage
 
@@ -880,31 +769,6 @@ def main() -> None:
         timed("graph_snapshot_diff", scale, lambda: graph_diff(
             _gd_old, inp["e_co"]
         ).vertices.count())
-
-        from smatchpp_spark.operators.egonet import egonet_anomalies
-        from smatchpp_spark.operators.nbragg import (
-            aggregate_neighbor_features,
-        )
-
-        # egonet features + one moment agg + stateless scoring
-        timed("egonet_anomalies", scale, lambda: egonet_anomalies(
-            inp["e_co"]
-        ).count())
-        # one edges-vs-features join + one 2d+1-accumulator agg
-        from smatchpp_spark.operators.egonet import egonet_features
-
-        _nf = egonet_features(inp["e_co"]).select(
-            "vertex",
-            F.array(
-                F.col("degree").cast("double"),
-                F.col("triangles").cast("double"),
-            ).alias("features"),
-        ).localCheckpoint(eager=True)
-        _nf.count()
-        timed("neighbor_features", scale, lambda:
-              aggregate_neighbor_features(
-                  inp["e_co"], _nf, dims=2
-              ).features.count())
 
         # -- round-7 late additions ---------------------------------------
         from smatchpp_spark.operators.graphstats import (
@@ -1143,44 +1007,11 @@ def main() -> None:
         "  vertex-keyed state, the sssp/pagerank dataflow.",
         "* **graph_powerlaw** — one scan + map-side combined",
         "  aggregation; expect ~linear with a large fixed floor.",
-        "* **trustrank_5steps** — two fixed-budget PR chains + one",
-        "  vertex join; tracks the pagerank_10steps shuffle-floor",
-        "  profile at half the steps per chain.",
-        "* **cocitation_cap64** — capped-pivot wedge join; the hub",
-        "  guard IS the scale mechanism (the sweep pins cap 64 at both",
-        "  scales for an identical, affordable work definition).",
-        "* **dag_layers_6rounds / closeness_d4 / bowtie_d6** — fixed",
-        "  round budgets; Kahn peeling is two vertex-keyed joins per",
-        "  round over a shrinking active set, closeness rides the",
-        "  landmark multi-source BFS, bowtie = one SCC peel + four",
-        "  bounded BFS balls (the SCC dominates, as published).",
-        "* **graph_richclub** — histogram-crossed thresholds; pure",
-        "  scan work, walls sit on the fixed floor at both scales.",
-        "* **ppr_push_6rounds** — SPARSE touched-only state: per-round",
-        "  work is O(active-set volume), graph-size-independent; the",
-        "  residual exponent (~0.4) is the ONE-TIME static contrib",
-        "  build (a full-edge repartition+persist, necessarily O(E)).",
-        "  Dense state measured 0.57 before the sparse rewrite.",
         "* **doc_bpe_4merges** — one corpus scan builds word",
         "  frequencies; merge rounds then touch only the VOCAB-sized",
         "  word table, which barely grows when the corpus is 10",
         "  duplicated copies — hence the ~flat wall (exponent ~0.04),",
         "  exactly the word-frequency-table design argument.",
-        "* **egonet_features** — degree agg + the degree-oriented wedge",
-        "  corner counts (ego_edges = deg + triangles identity); bounded",
-        "  by Σd_lo² exactly like triangle_counts, one extra vertex join.",
-        "* **densest_8rounds** — parallel peel: per round two semi-joins",
-        "  + one degree agg on a survivor set that shrinks geometrically",
-        "  (the 2(1+eps) threshold removes a constant fraction); fixed",
-        "  8-round budget keeps the work definition identical.",
-        "* **local_community** — ppr_push (seed-local) + ONE edge join",
-        "  against the touched set + a window over it; the window is",
-        "  provably small (O(1/(eps·alpha)) rows), so the wall tracks",
-        "  ppr_push_6rounds' static-build floor.",
-        "* **balanced_partition_5rounds** — capacity-gated LPA: per",
-        "  round one edge⋈state join + one map-side-combined (vertex,",
-        "  part) count; the k-row load table broadcasts; expect the",
-        "  label_propagation profile.",
         "* **single_linkage_t3** — Borůvka MSF (log rounds, component",
         "  count halves) then hash-min CC over ≤V−1 FOREST edges (not",
         "  the full edge set) — the Gower–Ross identity is the scale",
@@ -1201,9 +1032,6 @@ def main() -> None:
         "  diameter-independent, the incremental best case.",
         "* **graph_snapshot_diff** — single-pass: distinct + full-outer",
         "  join + degree aggs, map-side combined.",
-        "* **egonet_anomalies / neighbor_features** — the egonet wedge",
-        "  bound plus one moment agg / one join + 2d+1-accumulator agg;",
-        "  both track the egonet_features profile.",
         "* This box is a shared VM: walls are best-of-2 minima, and the",
         "  residual noise band (±30% on join-heavy plans) moves exponents",
         "  by ~±0.1 between runs.  Compare the table's exponents, not its",

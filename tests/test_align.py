@@ -1,6 +1,9 @@
-"""Differential tests of the pairwise alignment + scoring kernel against
-the reference implementation (numpy-only configuration: PenmanReader,
-seeded HillClimber, IDTripleMatcher, TripleScorer)."""
+"""Tests of the pairwise alignment + scoring kernel: solver properties
+(exhaustive, branch-and-bound, LAP bounds, hill-climber) on graphs parsed
+by the engine's own Penman parser, plus differential tests against the
+reference implementation (numpy-only configuration: PenmanReader, seeded
+HillClimber, IDTripleMatcher, TripleScorer), which skip when the
+reference is not importable."""
 
 from __future__ import annotations
 
@@ -11,33 +14,38 @@ import pytest
 from pyspark.sql import functions as F
 
 from smatchpp_spark.corpus import generate_penman
+from smatchpp_spark.functions.graphkit import parse_penman
 from smatchpp_spark.operators import align as myalign
 
-ref = pytest.importorskip("smatchpp.data_helpers", reason="reference not importable")
-from smatchpp import data_helpers, preprocess, score, solvers  # noqa: E402
-from smatchpp import align as ref_align  # noqa: E402
 
-READER = data_helpers.PenmanReader()
-PREP = preprocess.BasicGraphPairPreparer()
-SCORER = score.TripleScorer()
+def _reference():
+    """The reference's (data_helpers, preprocess, score, solvers, align)
+    modules, or a skip when it is not importable."""
+    pytest.importorskip("smatchpp.data_helpers", reason="reference not importable")
+    from smatchpp import align, data_helpers, preprocess, score, solvers
+
+    return data_helpers, preprocess, score, solvers, align
 
 
 def ref_score_pair(s1: str, s2: str, restarts: int = 8) -> list[float]:
+    data_helpers, preprocess, score, solvers, ref_align = _reference()
+    reader = data_helpers.PenmanReader()
     aligner = ref_align.GraphAligner(
         score.IDTripleMatcher(), solvers.HillClimber(rand_inits=restarts)
     )
-    g1 = READER.string2graph(s1)
-    g2 = READER.string2graph(s2)
+    g1 = reader.string2graph(s1)
+    g2 = reader.string2graph(s2)
     random.seed(0)
-    t1, t2, v1, v2 = PREP.prepare_get_vars(list(g1), list(g2))
+    prep = preprocess.BasicGraphPairPreparer()
+    t1, t2, v1, v2 = prep.prepare_get_vars(list(g1), list(g2))
     am, vi, _ = aligner.align(t1, t2, v1, v2)
-    return list(SCORER.score(list(t1), list(t2), am, vi))
+    return list(score.TripleScorer().score(list(t1), list(t2), am, vi))
 
 
 def my_score_pair(s1: str, s2: str, **cfg_kwargs) -> list[float]:
-    g1 = READER.string2graph(s1)
-    g2 = READER.string2graph(s2)
-    row = myalign.process_pair(list(g1), list(g2), myalign.AlignConfig(**cfg_kwargs))
+    g1 = parse_penman(s1)
+    g2 = parse_penman(s2)
+    row = myalign.process_pair(g1, g2, myalign.AlignConfig(**cfg_kwargs))
     return [row["matchsum_x"], row["matchsum_y"], float(row["xlen"]), float(row["ylen"])]
 
 
@@ -60,6 +68,8 @@ GOLDEN = [
 def test_golden_pairs():
     for s1, s2, expect in GOLDEN:
         assert my_score_pair(s1, s2) == expect
+    _reference()
+    for s1, s2, expect in GOLDEN:
         assert ref_score_pair(s1, s2) == expect
 
 
@@ -76,6 +86,7 @@ def test_differential_vs_reference_small_graphs():
     """40 seeded small-graph pairs: our exhaustive solver (certified
     optimum) must produce the same 4-vector as the reference's seeded
     hill-climber (which reaches the optimum on graphs this small)."""
+    _reference()
     mismatches = []
     for i in range(40):
         rng = random.Random(f"diff:{i}")
@@ -99,13 +110,15 @@ def test_hillclimber_matches_exhaustive_on_small_graphs():
 
 
 def test_lossless_compression_matches_reference():
+    data_helpers, preprocess, _, _, _ = _reference()
+    reader = data_helpers.PenmanReader()
     prep_c = preprocess.BasicGraphPairPreparer(lossless_graph_compression=True)
     for i in range(25):
         rng = random.Random(f"comp:{i}")
         s1 = generate_penman(rng, max_nodes=7, max_depth=3)
         s2 = generate_penman(rng, max_nodes=7, max_depth=3)
-        g1 = READER.string2graph(s1)
-        g2 = READER.string2graph(s2)
+        g1 = reader.string2graph(s1)
+        g2 = reader.string2graph(s2)
         rt1, rt2, rv1, rv2 = prep_c.prepare_get_vars(list(g1), list(g2))
         mt1, mt2, mv1, mv2 = myalign.prepare_pair(list(g1), list(g2), compress=True)
         assert sorted(rt1) == sorted(mt1)
@@ -114,13 +127,13 @@ def test_lossless_compression_matches_reference():
         assert set(rv2) == set(mv2)
 
 
-def _clean_parse(s: str) -> bool:
+def _clean_parse(reader, s: str) -> bool:
     """True when the reference parser did not need broken-graph salvage
     (salvaged triples carry stray parens); the compression-losslessness
     property is only claimed for well-formed graphs."""
     return all(
         "(" not in x and ")" not in x
-        for tr in READER.string2graph(s)
+        for tr in reader.string2graph(s)
         for x in tr
     )
 
@@ -131,14 +144,16 @@ def test_compressed_scores_match_reference():
     "lossless" is itself conditional — a concept mentioned in only one
     graph still gets contracted, shrinking that side's length — so the
     faithful property is reference equality, not F1 invariance)."""
+    data_helpers, preprocess, score, solvers, ref_align = _reference()
+    reader = data_helpers.PenmanReader()
     for i in range(25):
         rng = random.Random(f"compscore:{i}")
         s1 = generate_penman(rng, max_nodes=6, max_depth=3)
         s2 = generate_penman(rng, max_nodes=6, max_depth=3)
-        if not (_clean_parse(s1) and _clean_parse(s2)):
+        if not (_clean_parse(reader, s1) and _clean_parse(reader, s2)):
             continue
-        g1 = READER.string2graph(s1)
-        g2 = READER.string2graph(s2)
+        g1 = reader.string2graph(s1)
+        g2 = reader.string2graph(s2)
         prep_c = preprocess.BasicGraphPairPreparer(lossless_graph_compression=True)
         aligner = ref_align.GraphAligner(
             score.IDTripleMatcher(), solvers.HillClimber(rand_inits=8)
@@ -146,7 +161,7 @@ def test_compressed_scores_match_reference():
         random.seed(0)
         t1, t2, v1, v2 = prep_c.prepare_get_vars(list(g1), list(g2))
         am, vi, _ = aligner.align(t1, t2, v1, v2)
-        refv = list(SCORER.score(list(t1), list(t2), am, vi))
+        refv = list(score.TripleScorer().score(list(t1), list(t2), am, vi))
         mine = my_score_pair(s1, s2, solver="exhaustive", compress=True)
         assert mine == refv, (i, s1, s2, mine, refv)
 
@@ -198,23 +213,23 @@ def test_graded_concept_matcher():
     the alignment objective and the matchsum."""
     sim = {("cat", "kitten"): 0.8, ("dog", "wolf"): 0.5}
     cfg = myalign.AlignConfig(solver="exhaustive", concept_sim=sim)
-    g1 = READER.string2graph("(x / cat)")
-    g2 = READER.string2graph("(y / kitten)")
-    row = myalign.process_pair(list(g1), list(g2), cfg)
+    g1 = parse_penman("(x / cat)")
+    g2 = parse_penman("(y / kitten)")
+    row = myalign.process_pair(g1, g2, cfg)
     # root triple matches exactly (1.0) + instance graded 0.8
     assert row["matchsum_x"] == pytest.approx(1.8)
     assert row["matchsum_y"] == pytest.approx(1.8)
     assert (row["xlen"], row["ylen"]) == (2, 2)
     # without the graded matcher only the root survives
     plain = myalign.process_pair(
-        list(g1), list(g2), myalign.AlignConfig(solver="exhaustive")
+        g1, g2, myalign.AlignConfig(solver="exhaustive")
     )
     assert plain["matchsum_x"] == 1.0
     # graded alignment steers the solver: dog aligns to wolf, not to an
     # unrelated node
-    g3 = READER.string2graph("(a / dog :arg0 (b / bird))")
-    g4 = READER.string2graph("(c / wolf :arg0 (d / fish))")
-    row2 = myalign.process_pair(list(g3), list(g4), cfg)
+    g3 = parse_penman("(a / dog :arg0 (b / bird))")
+    g4 = parse_penman("(c / wolf :arg0 (d / fish))")
+    row2 = myalign.process_pair(g3, g4, cfg)
     # matches: root 1.0 + dog~wolf 0.8? no: 0.5 + :arg0 edge exact 1.0
     assert row2["matchsum_x"] == pytest.approx(1.0 + 0.5 + 1.0)
 
@@ -294,8 +309,8 @@ def test_branch_bound_certifies_midsize_graphs():
         rng = random.Random(f"bnbmid:{i}")
         s1 = generate_penman(rng, max_nodes=11, max_depth=4)
         s2 = generate_penman(rng, max_nodes=11, max_depth=4)
-        g1 = list(READER.string2graph(s1))
-        g2 = list(READER.string2graph(s2))
+        g1 = parse_penman(s1)
+        g2 = parse_penman(s2)
         row = myalign.process_pair(
             g1, g2, myalign.AlignConfig(solver="auto")
         )
@@ -347,8 +362,8 @@ def test_large_v_pairs_report_finite_bounds():
         rng = random.Random(f"bigv:{i}")
         s1 = generate_penman(rng, max_nodes=20, max_depth=5)
         s2 = generate_penman(rng, max_nodes=20, max_depth=5)
-        g1 = list(READER.string2graph(s1))
-        g2 = list(READER.string2graph(s2))
+        g1 = parse_penman(s1)
+        g2 = parse_penman(s2)
         row = myalign.process_pair(g1, g2, myalign.AlignConfig(solver="auto"))
         V = max(row["n_vars_a"], row["n_vars_b"])
         if V <= 12:
@@ -369,8 +384,8 @@ def test_bnb_escalation_certifies_exhausted_pairs():
         rng = random.Random(f"bnb-escalate:{i}")
         s1 = generate_penman(rng, max_nodes=11, max_depth=4)
         s2 = generate_penman(rng, max_nodes=11, max_depth=4)
-        g1 = list(READER.string2graph(s1))
-        g2 = list(READER.string2graph(s2))
+        g1 = parse_penman(s1)
+        g2 = parse_penman(s2)
         starved = myalign.process_pair(
             g1, g2,
             myalign.AlignConfig(solver="bnb", bnb_node_budget=3, bnb_escalation=0),
@@ -467,8 +482,8 @@ def test_bnb_root_certification_skips_search():
         rng = random.Random(f"lap-root:{i}")
         s1 = generate_penman(rng, max_nodes=10, max_depth=4)
         s2 = generate_penman(rng, max_nodes=10, max_depth=4)
-        g1 = list(READER.string2graph(s1))
-        g2 = list(READER.string2graph(s2))
+        g1 = parse_penman(s1)
+        g2 = parse_penman(s2)
         full = myalign.process_pair(g1, g2, myalign.AlignConfig(solver="bnb"))
         starved = myalign.process_pair(
             g1,

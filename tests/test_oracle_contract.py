@@ -99,3 +99,18 @@ def test_query_matches_golden_hash(spark, sf_dir, contract, name):
     srows = [tuple(r) for r in sdf.collect()]
     assert srows, f"{name}: empty result proves nothing"
     assert check_contract._rows_hash(srows, sdf.columns) == gold
+
+
+def test_contract_keys_are_consistent(contract):
+    """The three key sets of the contract agree: every ``oracle_sql()``
+    entry names a query, only the golden-hash queries lack an oracle, and
+    every ``_DRIVER_WINDOW_FRONT`` name is a query. tools/check_contract.py
+    counts a query without an oracle as a rows-only pass, and ``queries()``
+    drops unknown front names silently, so neither notices a half-deleted
+    entry. No Spark session starts."""
+    import __spark_entry__
+
+    queries, oracles = contract
+    assert sorted(set(oracles) - set(queries)) == []
+    assert sorted(set(queries) - set(oracles)) == sorted(GOLDEN_QUERIES)
+    assert sorted(set(__spark_entry__._DRIVER_WINDOW_FRONT) - set(queries)) == []

@@ -4344,8 +4344,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ROUND-9 PLAN: front-load the remaining 26 never-driver-checked
 # queries — single_linkage_clusters, pagerank_incremental,
 # fastrp_embeddings, widest_path, reliable_path, graph_snapshot_diff,
-# cc_incremental, egonet_anomalies, neighbor_features,
-# vertex_encode, doc_lm_scores, degree_quantiles,
+# cc_incremental, vertex_encode, doc_lm_scores, degree_quantiles,
 # hitting_times, doc_dedup_against, spectral_bisection,
 # doc_collocations, edge_embeddedness, graph_sparsify, doc_containment,
 # graph_percolation, doc_entropy, emb_sq_topk, doc_clone_pairs — plus

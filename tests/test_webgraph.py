@@ -1,6 +1,6 @@
-"""Web-graph relatedness & structure operators: co-citation /
-bibliographic coupling, TrustRank + spam mass, topological layering,
-rich-club coefficient — python-replay and closed-form checks."""
+"""Web-graph relatedness and centrality operators: co-citation /
+bibliographic coupling and sampled closeness — python-replay and
+closed-form checks."""
 
 from __future__ import annotations
 
@@ -8,10 +8,7 @@ import math
 
 import pytest
 
-from smatchpp_spark.operators.dag import topological_layers
-from smatchpp_spark.operators.graphstats import rich_club
 from smatchpp_spark.operators.linkpred import cocitation_scores
-from smatchpp_spark.operators.trustrank import trustrank_spam_mass
 
 
 def _df(spark, pairs):
@@ -81,251 +78,6 @@ def test_cocitation_pivot_cap_and_min_score(spark):
     assert {(r["u"], r["v"]): r["score"] for r in filt} == {("u0", "u1"): 2.0}
 
 
-# ----------------------------------------------------------------- trustrank
-
-
-def test_trustrank_star_spam_mass(spark):
-    """Trusted hub t -> a, b; spam page s -> s2 in a separate component:
-    the spam pages' trust is 0, so their spam mass is exactly 1; pages
-    reachable from the seed have spam mass < 1."""
-    pairs = [("t", "a"), ("t", "b"), ("s", "s2")]
-    r = trustrank_spam_mass(
-        _df(spark, pairs), ["t"], alpha=0.85, max_supersteps=30, tol=1e-12
-    )
-    rows = {x["vertex"]: x for x in r.scores.collect()}
-    assert r.n_seeds == 1
-    assert set(rows) == {"t", "a", "b", "s", "s2"}
-    for v in ("s", "s2"):
-        assert rows[v]["trust"] == 0.0
-        assert rows[v]["spam_mass"] == 1.0
-    for v in ("t", "a", "b"):
-        assert rows[v]["trust"] > 0.0
-        assert rows[v]["spam_mass"] < 1.0
-    # core-based scaling: trust = ppr * n_seed / n
-    tr_rank = {x["vertex"]: x["rank"] for x in r.trustrank.ranks.collect()}
-    for v, row in rows.items():
-        assert abs(row["trust"] - tr_rank[v] * (1 / 5)) < 1e-15
-
-
-def test_trustrank_all_seeds_zero_mass(spark):
-    """Seeding EVERY page makes trust == rank (teleport vectors agree),
-    so spam mass is ~0 everywhere."""
-    pairs = [(1, 2), (2, 3), (3, 1), (2, 4)]
-    verts = ["1", "2", "3", "4"]
-    r = trustrank_spam_mass(
-        _df(spark, pairs), verts, alpha=0.85, max_supersteps=60, tol=1e-13
-    )
-    for row in r.scores.collect():
-        assert abs(row["spam_mass"]) < 1e-9
-
-
-# --------------------------------------------------------------- topo layers
-
-
-def test_topo_layers_diamond(spark):
-    # a->b, a->c, b->d, c->d, d->e : layers 0,1,1,2,3
-    r = topological_layers(_df(spark, [
-        ("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "e"),
-    ]))
-    got = {x["vertex"]: x["layer"] for x in r.layers.collect()}
-    assert got == {"a": 0, "b": 1, "c": 1, "d": 2, "e": 3}
-    assert r.acyclic and r.converged
-
-
-def test_topo_layers_longest_path_semantics(spark):
-    # shortcut a->d plus chain a->b->c->d: d's layer is the LONGEST path
-    r = topological_layers(
-        _df(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("a", "d")])
-    )
-    got = {x["vertex"]: x["layer"] for x in r.layers.collect()}
-    assert got["d"] == 3
-
-
-def test_topo_layers_cycle_detection(spark):
-    # cycle 1->2->3->1 with a tail 0->1 and an escapee 3->4: the cycle
-    # and everything downstream of it (4) never peels
-    r = topological_layers(_df(spark, [
-        ("0", "1"), ("1", "2"), ("2", "3"), ("3", "1"), ("3", "4"),
-    ]))
-    got = {x["vertex"]: x["layer"] for x in r.layers.collect()}
-    assert got["0"] == 0
-    assert got["1"] == got["2"] == got["3"] == got["4"] == -1
-    assert not r.acyclic
-    assert r.converged  # fixed point reached within budget
-
-
-def test_topo_layers_self_loop_is_cyclic(spark):
-    r = topological_layers(_df(spark, [("a", "a"), ("a", "b")]))
-    got = {x["vertex"]: x["layer"] for x in r.layers.collect()}
-    assert got == {"a": -1, "b": -1}
-    assert not r.acyclic
-
-
-# ----------------------------------------------------------------- rich club
-
-
-def test_rich_club_clique_plus_pendants(spark):
-    """K4 on {1..4} (degree >= 3) plus a pendant 5-1: above k=1 only
-    the clique survives and phi = 1 at k where N_k is the clique."""
-    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    rows = rich_club(
-        _df(spark, k4 + [(5, 1)]), thresholds=[1, 2, 3]
-    ).collect()
-    by_k = {r["k"]: r for r in rows}
-    # k=1: degrees are 1:4, 2..4:3, 5:1 -> club {1,2,3,4}, all 6 edges
-    assert by_k[1]["n_vertices"] == 4 and by_k[1]["n_edges"] == 6
-    assert by_k[1]["phi"] == 1.0
-    # k=2: same club
-    assert by_k[2]["phi"] == 1.0
-    # k=3: only vertex 1 (degree 4) -> undefined
-    assert by_k[3]["n_vertices"] == 1 and by_k[3]["phi"] is None
-
-
-def test_rich_club_default_thresholds_powers_of_two(spark):
-    star = [(0, i) for i in range(1, 9)]  # hub degree 8
-    rows = rich_club(_df(spark, star)).collect()
-    assert [r["k"] for r in rows] == [1, 2, 4, 8]
-    by_k = {r["k"]: r for r in rows}
-    # club at k=1 is just the hub -> 0 edges, phi undefined
-    assert by_k[1]["n_vertices"] == 1 and by_k[1]["phi"] is None
-    assert by_k[8]["n_vertices"] == 0 and by_k[8]["phi"] is None
-
-
-def test_rich_club_replay_on_cocitation_graph(spark):
-    import random
-
-    rng = random.Random(5)
-    pairs = {(rng.randrange(30), rng.randrange(30)) for _ in range(120)}
-    pairs = [(a, b) for a, b in pairs if a != b]
-    und = set()
-    for a, b in pairs:
-        und.add((min(a, b), max(a, b)))
-    deg = {}
-    for a, b in und:
-        deg[a] = deg.get(a, 0) + 1
-        deg[b] = deg.get(b, 0) + 1
-    ks = [1, 2, 4, 8]
-    rows = rich_club(_df(spark, pairs), thresholds=ks).collect()
-    by_k = {r["k"]: r for r in rows}
-    for k in ks:
-        club = {v for v, d in deg.items() if d > k}
-        ek = sum(1 for a, b in und if a in club and b in club)
-        assert by_k[k]["n_vertices"] == len(club)
-        assert by_k[k]["n_edges"] == ek
-        if len(club) >= 2:
-            want = 2.0 * ek / (len(club) * (len(club) - 1))
-            assert abs(by_k[k]["phi"] - want) < 1e-9
-        else:
-            assert by_k[k]["phi"] is None
-
-
-# ------------------------------------------------------------------- bow-tie
-
-
-def _py_bowtie(pairs):
-    """Reachability-replay classifier (same taxonomy as the operator)."""
-    e = {(str(a), str(b)) for a, b in pairs if str(a) != str(b)}
-    verts = {v for p in e for v in p}
-    adj, radj = {}, {}
-    for a, b in e:
-        adj.setdefault(a, set()).add(b)
-        radj.setdefault(b, set()).add(a)
-
-    def ball(seeds, g):
-        seen = set(seeds)
-        fr = set(seeds)
-        while fr:
-            nxt = {w for v in fr for w in g.get(v, ())} - seen
-            seen |= nxt
-            fr = nxt
-        return seen
-
-    # SCC via double reachability (fine at test size)
-    reach = {v: ball([v], adj) for v in verts}
-    scc = {
-        v: min(u for u in verts if u in reach[v] and v in reach[u])
-        for v in verts
-    }
-    sizes = {}
-    for v, l in scc.items():
-        sizes[l] = sizes.get(l, 0) + 1
-    core_label = min(
-        sizes, key=lambda l: (-sizes[l], l)
-    )
-    core = {v for v in verts if scc[v] == core_label}
-    fwd, bwd = ball(core, adj), ball(core, radj)
-    in_set, out_set = bwd - core, fwd - core
-    from_in, to_out = ball(in_set, adj), ball(out_set, radj)
-    out = {}
-    for v in verts:
-        if v in core:
-            out[v] = "CORE"
-        elif v in bwd:
-            out[v] = "IN"
-        elif v in fwd:
-            out[v] = "OUT"
-        elif v in from_in and v in to_out:
-            out[v] = "TUBE"
-        elif v in from_in or v in to_out:
-            out[v] = "TENDRIL"
-        else:
-            out[v] = "DISCONNECTED"
-    return out, core_label
-
-
-def test_bowtie_all_six_classes(spark):
-    from smatchpp_spark.operators.bowtie import bowtie_decomposition
-
-    pairs = [
-        ("a1", "a2"), ("a2", "a3"), ("a3", "a1"),   # CORE cycle
-        ("i0", "i1"), ("i1", "a1"),                 # IN chain
-        ("a2", "o1"), ("o1", "o2"),                 # OUT chain
-        ("i1", "t1"), ("t1", "o1"),                 # TUBE bypass
-        ("i1", "d1"),                               # TENDRIL off IN
-        ("d2", "o2"),                               # TENDRIL into OUT
-        ("z1", "z2"),                               # DISCONNECTED
-    ]
-    r = bowtie_decomposition(_df(spark, pairs), max_depth=10)
-    got = {x["vertex"]: x["component"] for x in r.membership.collect()}
-    assert got == {
-        "a1": "CORE", "a2": "CORE", "a3": "CORE",
-        "i0": "IN", "i1": "IN",
-        "o1": "OUT", "o2": "OUT",
-        "t1": "TUBE", "d1": "TENDRIL", "d2": "TENDRIL",
-        "z1": "DISCONNECTED", "z2": "DISCONNECTED",
-    }
-    assert r.core_label == "a1" and r.core_size == 3
-
-
-def test_bowtie_vs_python_replay(spark):
-    import random
-
-    from smatchpp_spark.operators.bowtie import bowtie_decomposition
-
-    rng = random.Random(11)
-    n = 24
-    pairs = {(rng.randrange(n), rng.randrange(n)) for _ in range(40)}
-    pairs = [(f"v{a:02d}", f"v{b:02d}") for a, b in pairs if a != b]
-    want, core_label = _py_bowtie(pairs)
-    r = bowtie_decomposition(_df(spark, pairs), max_depth=30)
-    got = {x["vertex"]: x["component"] for x in r.membership.collect()}
-    assert got == want
-    assert r.core_label == core_label
-
-
-def test_bowtie_acyclic_graph_core_is_min_singleton(spark):
-    """No cycle: every SCC is a singleton, the tie-break picks the
-    minimum vertex id as the 1-vertex core."""
-    from smatchpp_spark.operators.bowtie import bowtie_decomposition
-
-    r = bowtie_decomposition(
-        _df(spark, [("b", "c"), ("a", "b")]), max_depth=5
-    )
-    got = {x["vertex"]: x["component"] for x in r.membership.collect()}
-    assert r.core_label == "a" and r.core_size == 1
-    assert got == {"a": "CORE", "b": "OUT", "c": "OUT"}
-
-
 # ------------------------------------------------------------------ closeness
 
 
@@ -386,98 +138,3 @@ def test_closeness_vs_python_replay(spark):
         for x in r.collect()
     }
     assert got == want
-
-
-# ---------------------------------------------------------------- ppr push
-
-
-def _py_push(pairs, seed, alpha, eps, rounds):
-    adj = {}
-    for a, b in pairs:
-        a, b = str(a), str(b)
-        if a == b:
-            continue
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    p = {v: 0.0 for v in adj}
-    r = {v: 0.0 for v in adj}
-    r[str(seed)] = 1.0
-    for _ in range(rounds):
-        act = [v for v in adj if r[v] >= eps * len(adj[v])]
-        if not act:
-            break
-        nr = {v: (0.0 if v in act else r[v]) for v in adj}
-        for u in act:
-            p[u] += alpha * r[u]
-            share = (1 - alpha) * r[u] / len(adj[u])
-            for w in adj[u]:
-                nr[w] += share
-        r = nr
-    return p, r
-
-
-def test_ppr_push_mass_conservation_and_replay(spark):
-    import random
-
-    from smatchpp_spark.operators.push import ppr_push
-
-    rng = random.Random(7)
-    pairs = [(rng.randrange(15), rng.randrange(15)) for _ in range(40)]
-    pairs = [(a, b) for a, b in pairs if a != b]
-    seed = str(pairs[0][0])
-    res = ppr_push(_df(spark, pairs), seed, alpha=0.15, eps=1e-3,
-                   max_supersteps=8)
-    rows = res.state.collect()
-    # exact conservation: every push moves alpha of r into p (untouched
-    # vertices hold exactly 0 and are not materialized — sparse state)
-    total = sum(x["p"] + x["r"] for x in rows)
-    assert abs(total - 1.0) < 1e-12
-    # python replay of the same synchronous rounds (fixed 8); the
-    # sparse state must cover exactly the touched replay vertices
-    wp, wr = _py_push(pairs, seed, 0.15, 1e-3, 8)
-    touched = {v for v in wp if wp[v] > 0 or wr[v] > 0}
-    assert {x["vertex"] for x in rows} == touched
-    for x in rows:
-        assert abs(x["p"] - wp[x["vertex"]]) < 1e-12
-        assert abs(x["r"] - wr[x["vertex"]]) < 1e-12
-
-
-def test_ppr_push_approximates_fixed_step_ppr(spark):
-    """On a small expander the push estimate lands within the eps*deg
-    bound of a long power iteration (linkpred_ppr's kernel)."""
-    from smatchpp_spark.operators.linkpred import linkpred_ppr
-    from smatchpp_spark.operators.push import ppr_push
-
-    pairs = [(i, (i + 1) % 8) for i in range(8)] + [(i, (i + 3) % 8) for i in range(8)]
-    res = ppr_push(_df(spark, pairs), "0", alpha=0.15, eps=1e-6,
-                   max_supersteps=200)
-    assert res.converged
-    push_p = {x["vertex"]: x["p"] for x in res.state.collect()}
-    deg = {x["vertex"]: x["degree"] for x in res.state.collect()}
-    # steps=200: the truncated power iteration undershoots the fixpoint
-    # by ~0.85^steps, which must be far below push's eps for the
-    # one-sided bound to be observable (0.85^60 ~ 6e-5 > eps broke it)
-    ppr = {
-        x["candidate"]: x["score"]
-        for x in linkpred_ppr(
-            _df(spark, pairs), ["0"], steps=200, alpha=0.85,
-            exclude_existing=False, top_k=None,
-        ).collect()
-    }
-    for v, est in push_p.items():
-        if v == "0":
-            continue
-        assert ppr[v] >= est - 1e-8          # p underestimates (9dp rounding)
-        assert ppr[v] - est <= 1e-6 * deg[v] + 1e-8  # within eps*deg
-
-
-def test_ppr_push_guards(spark):
-    from smatchpp_spark.operators.push import ppr_push
-
-    df = _df(spark, [("a", "b")])
-    with pytest.raises(ValueError):
-        ppr_push(df, "zz")
-    with pytest.raises(ValueError):
-        ppr_push(df, "a", alpha=1.5)
-    with pytest.raises(ValueError):
-        ppr_push(df, "a", eps=0.0)

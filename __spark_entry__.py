@@ -968,77 +968,6 @@ def _pagerank_incremental_sql(
     return "\n".join(parts)
 
 
-def _fastrp_sql(
-    dims: int = 4, s: int = 2, weights: tuple = (1.0, 0.5)
-) -> str:
-    """fastrp_embeddings replay (operators/fastrp.py): hash-seeded
-    very-sparse projection (±sqrt(s) at portable-hash buckets 0/1),
-    ``len(weights)`` unrolled D⁻¹A multiplications with per-dimension
-    sums, weighted accumulation, final L2 normalization, posexplode to
-    (vertex, dim, value) rows — over the customer↔order graph."""
-    import math as _math
-
-    val = repr(_math.sqrt(float(s)))
-    h = duckdb_hash64_sql
-    dims_r = range(dims)
-    def _seed_case(i: int) -> str:
-        hexpr = h(f"vertex || ':' || '{i}'")
-        return (
-            f"CASE {hexpr} % {2 * s} "
-            f"WHEN 0 THEN {val} WHEN 1 THEN -{val} ELSE 0.0 END AS e{i}"
-        )
-
-    seed = ", ".join(_seed_case(i) for i in dims_r)
-    parts = [
-        f"WITH e AS ({SQL_E_CUST}),",
-        "und AS MATERIALIZED (SELECT DISTINCT a, b FROM "
-        "(SELECT src AS a, dst AS b FROM e UNION ALL SELECT dst, src FROM e) "
-        "WHERE a <> b),",
-        "deg AS (SELECT a AS vertex, COUNT(*) AS deg FROM und GROUP BY a),",
-        "w AS MATERIALIZED (SELECT und.a AS src, und.b AS dst, "
-        "1.0 / deg.deg AS w FROM und JOIN deg ON deg.vertex = und.a),",
-        f"s0 AS MATERIALIZED (SELECT vertex, {seed}, "
-        + ", ".join(f"0.0 AS a{i}" for i in dims_r)
-        + " FROM deg),",
-    ]
-    for k, wk in enumerate(weights, start=1):
-        p = f"s{k-1}"
-        msums = ", ".join(
-            f"SUM(r.e{i} * w.w) AS m{i}" for i in dims_r
-        )
-        ecols = ", ".join(
-            f"COALESCE(m.m{i}, 0.0) AS e{i}" for i in dims_r
-        )
-        accs = ", ".join(
-            f"x.a{i} + {wk!r} * COALESCE(m.m{i}, 0.0) AS a{i}"
-            for i in dims_r
-        )
-        parts.append(
-            f"m{k} AS (SELECT w.dst AS vertex, {msums} "
-            f"FROM {p} r JOIN w ON w.src = r.vertex GROUP BY w.dst),"
-        )
-        parts.append(
-            f"s{k} AS MATERIALIZED (SELECT x.vertex, {ecols}, {accs} "
-            f"FROM {p} x LEFT JOIN m{k} m ON m.vertex = x.vertex),"
-        )
-    last = f"s{len(weights)}"
-    n2 = " + ".join(f"a{i} * a{i}" for i in dims_r)
-    parts.append(
-        f"nrm AS (SELECT vertex, {n2} AS n2, "
-        + ", ".join(f"a{i}" for i in dims_r)
-        + f" FROM {last}),"
-    )
-    # + 0.0 canonicalizes -0.0 on both engines (see the query comment)
-    explode = "\nUNION ALL\n".join(
-        f"SELECT vertex, CAST({i} AS INT) AS dim, "
-        f"ROUND(CASE WHEN n2 > 0.0 THEN a{i} / sqrt(n2) ELSE 0.0 END, 9) "
-        f"+ 0.0 AS value FROM nrm"
-        for i in dims_r
-    )
-    parts.append(f"fin AS (SELECT 1)\n{explode}")
-    return "\n".join(parts)
-
-
 def _bpe_sql(n_merges: int = 6) -> str:
     """doc_bpe_merges replay (pipeline/bpe.py): ``n_merges`` unrolled
     rounds over the word-frequency table — pair stats with multiplicity
@@ -1442,60 +1371,6 @@ WHERE CASE WHEN len(list_distinct(list_concat(sa.sh, sb.sh))) = 0 THEN 0.0
       ELSE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
            / len(list_distinct(list_concat(sa.sh, sb.sh))) END >= {threshold!r}
 """
-
-
-def _spectral_sql(iters: int = 10, seed: int = 7) -> str:
-    """spectral_bisection replay (operators/spectral.py): the exact
-    deflated power iterates — closed-form phi = sqrt(d) deflation and
-    l2 normalization per step, hash-seeded start vector, shift (M+I)/2.
-    Float-order noise stays ~1e-13 through the smooth normalization;
-    ROUND 6 absorbs it."""
-    h = _h(f"(vertex || '#{seed}')")
-    parts = [
-        f"WITH e0 AS ({SQL_E_OP}),",
-        "c0 AS (SELECT least(src, dst) AS a, greatest(src, dst) AS b",
-        "       FROM e0 WHERE src <> dst GROUP BY 1, 2),",
-        "und AS MATERIALIZED (SELECT a AS src, b AS dst FROM c0",
-        "        UNION ALL SELECT b, a FROM c0),",
-        "deg AS MATERIALIZED (SELECT src AS vertex, CAST(COUNT(*) AS DOUBLE) AS d",
-        "        FROM und GROUP BY src),",
-        "w AS MATERIALIZED (SELECT und.src, und.dst, 1.0 / sqrt(ds.d * dt.d) AS w",
-        "      FROM und JOIN deg ds ON ds.vertex = und.src",
-        "      JOIN deg dt ON dt.vertex = und.dst),",
-        f"xr AS (SELECT vertex, sqrt(d) AS phi,",
-        f"        CAST(({h}) % 1000000 AS DOUBLE) / 500000.0 - 1.0 AS x",
-        "        FROM deg),",
-    ]
-
-    def deflate(k: int, src_cte: str) -> list[str]:
-        return [
-            f"c_{k} AS (SELECT SUM(x * phi) / SUM(phi * phi) AS c FROM {src_cte}),",
-            f"y_{k} AS MATERIALIZED (SELECT vertex, phi,",
-            f"          x - (SELECT c FROM c_{k}) * phi AS x FROM {src_cte}),",
-            f"n_{k} AS (SELECT sqrt(SUM(x * x)) AS nrm FROM y_{k}),",
-            f"x{k} AS MATERIALIZED (SELECT vertex, phi,",
-            f"         CASE WHEN (SELECT nrm FROM n_{k}) > 0",
-            f"              THEN x / (SELECT nrm FROM n_{k}) ELSE 0.0 END AS x",
-            f"         FROM y_{k}),",
-        ]
-
-    parts += deflate(0, "xr")
-    for k in range(1, iters + 1):
-        p = f"x{k-1}"
-        parts += [
-            f"m_{k} AS (SELECT w.dst AS vertex, SUM(x.x * w.w) AS mx",
-            f"          FROM {p} x JOIN w ON w.src = x.vertex GROUP BY w.dst),",
-            f"s_{k} AS (SELECT p.vertex, p.phi,",
-            f"          (COALESCE(m.mx, 0.0) + p.x) / 2.0 AS x",
-            f"          FROM {p} p LEFT JOIN m_{k} m ON m.vertex = p.vertex),",
-        ]
-        parts += deflate(k, f"s_{k}")
-    parts.append(
-        f"fin AS (SELECT 1) SELECT vertex,"
-        f" ROUND(x, 6) + 0.0 AS fiedler,"
-        f" ROUND(x, 6) + 0.0 >= 0 AS side FROM x{iters}"
-    )
-    return "\n".join(parts)
 
 
 def _containment_sql(
@@ -3003,30 +2878,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["doc_bpe_merges"] = _bpe
 
-    def _slink(spark, sf):
-        from smatchpp_spark.operators.slink import single_linkage
-
-        # the msf_boruvka weighted graph; threshold cut at w <= 3.
-        # Spark runs the SCALE path (Boruvka once, CC over <=V-1 forest
-        # edges); the oracle uses the independent identity (CC of the
-        # thresholded ORIGINAL graph) — a forest bug cannot cancel.
-        li = _read(spark, sf, "lineitem").filter(F.col("l_partkey") % 20 == 0)
-        we = li.select(
-            F.concat(F.lit("o"), F.col("l_orderkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias(
-                "dst"
-            ),
-            ((F.col("l_orderkey") + F.col("l_partkey")) % 9 + 1)
-            .cast("long")
-            .alias("weight"),
-        )
-        r = single_linkage(we, threshold=3, max_rounds=12, cc_supersteps=60)
-        return r.clusters
-
-    q["single_linkage_clusters"] = _slink
-
     def _pr_inc(spark, sf):
         from smatchpp_spark.operators.incremental import pagerank_incremental
 
@@ -3055,24 +2906,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return r.ranks.select("vertex", F.round("rank", 9).alias("rank"))
 
     q["pagerank_incremental"] = _pr_inc
-
-    def _fastrp(spark, sf):
-        from smatchpp_spark.operators.fastrp import fastrp_embeddings
-
-        r = fastrp_embeddings(
-            _e_cust(spark, sf), dims=4, s=2, weights=[1.0, 0.5]
-        )
-        # + 0.0 canonicalizes -0.0 (a tiny negative that rounds to zero
-        # keeps its sign bit through ROUND in both engines, but the
-        # SIGN of a near-zero sum is sum-order noise — the one float
-        # artifact ROUND(,9) can't wash out)
-        return r.embeddings.select(
-            "vertex", F.posexplode("embedding").alias("dim", "value")
-        ).select(
-            "vertex", "dim", (F.round("value", 9) + 0.0).alias("value")
-        )
-
-    q["fastrp_embeddings"] = _fastrp
 
     def _we_edges(spark, sf):
         li = _read(spark, sf, "lineitem")
@@ -3288,75 +3121,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["vertex_encode"] = _vertex_encode
 
-    def _deg_quantiles(spark, sf):
-        from smatchpp_spark.operators.quantiles import quantiles_exact
-
-        deg = (
-            _e_op(spark, sf)
-            .groupBy("src")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        return quantiles_exact(deg, "d", [0.1, 0.5, 0.9, 0.99])
-
-    q["degree_quantiles"] = _deg_quantiles
-
-    def _hitting(spark, sf):
-        from smatchpp_spark.operators.hitting import hitting_times
-
-        targets = (
-            _read(spark, sf, "part")
-            .filter(F.col("p_partkey") % 97 == 0)
-            .select(
-                F.concat(F.lit("p"), F.col("p_partkey").cast("string")).alias(
-                    "vertex"
-                )
-            )
-        )
-        r = hitting_times(_e_op(spark, sf), targets, horizon=6)
-        return r.times.select(
-            "vertex", F.round("hitting_time", 9).alias("hitting_time")
-        )
-
-    q["hitting_times"] = _hitting
-
-    def _spectral(spark, sf):
-        from smatchpp_spark.operators.spectral import spectral_bisection
-
-        r = spectral_bisection(_e_op(spark, sf), supersteps=10, seed=7)
-        # + 0.0 clears IEEE -0.0 (repr-sorts differently than 0.0 in the
-        # driver compare); side re-derived from the ROUNDED value so both
-        # engines decide the boundary at the same granularity
-        f6 = F.round("fiedler", 6) + F.lit(0.0)
-        return r.coords.select(
-            "vertex", f6.alias("fiedler"), (f6 >= 0).alias("side")
-        )
-
-    q["spectral_bisection"] = _spectral
-
     def _embeddedness(spark, sf):
         from smatchpp_spark.operators.sparsify import edge_embeddedness
 
         return edge_embeddedness(_e_co(spark, sf))
 
     q["edge_embeddedness"] = _embeddedness
-
-    def _percolation(spark, sf):
-        from smatchpp_spark.operators.percolation import percolation_profile
-
-        return percolation_profile(
-            _read(spark, sf, "orders").select(
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                    "src"
-                ),
-                F.concat(F.lit("o"), F.col("o_orderkey").cast("string")).alias(
-                    "dst"
-                ),
-            ),
-            ps=(0.3, 0.7),
-            seed=13,
-        )
-
-    q["graph_percolation"] = _percolation
 
     def _sparsify(spark, sf):
         from smatchpp_spark.operators.sparsify import local_sparsify
@@ -4342,12 +4112,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # that had NO contract evidence until the judge ran them (slots 1-14),
 # then 36 more of the never-driver-checked set, filling the window.
 # ROUND-9 PLAN: front-load the remaining 26 never-driver-checked
-# queries — single_linkage_clusters, pagerank_incremental,
-# fastrp_embeddings, widest_path, reliable_path, graph_snapshot_diff,
-# cc_incremental, vertex_encode, doc_lm_scores, degree_quantiles,
-# hitting_times, doc_dedup_against, spectral_bisection,
-# doc_collocations, edge_embeddedness, graph_sparsify, doc_containment,
-# graph_percolation, doc_entropy, emb_sq_topk, doc_clone_pairs — plus
+# queries — pagerank_incremental, widest_path, reliable_path,
+# graph_snapshot_diff, cc_incremental, vertex_encode, doc_lm_scores,
+# doc_dedup_against, doc_collocations, edge_embeddedness, graph_sparsify,
+# doc_containment, doc_entropy, emb_sq_topk, doc_clone_pairs — plus
 # the two rows-only queries (amr_standardize_sizes, smatch_micro_macro)
 # rotating back in; after that every query has a driver row at most two
 # rounds old and the normal staleness rotation resumes.
@@ -4407,7 +4175,6 @@ FROM ends GROUP BY vertex
 """,
         "pagerank_fixed": _pagerank_sql(PR_STEPS),
         "pagerank_incremental": _pagerank_incremental_sql(PR_STEPS, 4),
-        "fastrp_embeddings": _fastrp_sql(4, 2, (1.0, 0.5)),
         "cc_incremental": _cc_incremental_sql(6, 4),
         "pagerank_hetero": _pagerank_sql(PR_STEPS, edge_sql=_TPCH_EDGES_SQL),
         "pagerank_personalized": _personalized_pagerank_sql(PR_STEPS),
@@ -4540,42 +4307,9 @@ FROM curve, f WHERE nf_estimate >= 0.9 * final_nf
         "simrank_scores": _simrank_sql(3, 8, 50, 7),
         "config_model_edges": _config_model_sql(11, 256),
         "transitivity_sampled": _transitivity_approx_sql(2, 42),
-        # truncated hitting time replay (operators/hitting.py):
-        # K=6 value-iteration steps, targets = parts with key % 97 = 0
-        "spectral_bisection": _spectral_sql(10, 7),
         # edge embeddedness / local sparsification replays
         # (operators/sparsify.py): common-neighbor support over the
         # canonical simple co-purchase graph, ratios rounded 9
-        # bond percolation replay (operators/percolation.py):
-        # hash-coin edge retention at p in (0.3, 0.7) + recursive CC,
-        # vertex set fixed by the original graph (singletons count)
-        "graph_percolation": f"""
-WITH RECURSIVE e AS ({SQL_E_CUST}),
-c AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a,
-        greatest(src, dst) AS b FROM e WHERE src <> dst),
-v AS MATERIALIZED (SELECT DISTINCT x AS v FROM
-        (SELECT a AS x FROM c UNION ALL SELECT b FROM c)),
-k0 AS MATERIALIZED (SELECT a, b FROM c WHERE CAST(('0x' || substr(md5(a || '#' || b || '#13'), 1, 15)) AS BIGINT) % 1000000 < 300000),
-u0 AS (SELECT a AS s, b AS d FROM k0 UNION SELECT b, a FROM k0),
-r0(vv, l) AS (SELECT s, s FROM u0
-      UNION SELECT u.d, r.l FROM r0 r JOIN u0 u ON u.s = r.vv),
-cc0 AS (SELECT vv, MIN(l) AS comp FROM r0 GROUP BY vv),
-f0 AS (SELECT v.v, COALESCE(cc0.comp, v.v) AS comp
-       FROM v LEFT JOIN cc0 ON cc0.vv = v.v),
-sz0 AS (SELECT comp, COUNT(*) AS sz FROM f0 GROUP BY comp),
-k1 AS MATERIALIZED (SELECT a, b FROM c WHERE CAST(('0x' || substr(md5(a || '#' || b || '#13'), 1, 15)) AS BIGINT) % 1000000 < 700000),
-u1 AS (SELECT a AS s, b AS d FROM k1 UNION SELECT b, a FROM k1),
-r1(vv, l) AS (SELECT s, s FROM u1
-      UNION SELECT u.d, r.l FROM r1 r JOIN u1 u ON u.s = r.vv),
-cc1 AS (SELECT vv, MIN(l) AS comp FROM r1 GROUP BY vv),
-f1 AS (SELECT v.v, COALESCE(cc1.comp, v.v) AS comp
-       FROM v LEFT JOIN cc1 ON cc1.vv = v.v),
-sz1 AS (SELECT comp, COUNT(*) AS sz FROM f1 GROUP BY comp),
-fin AS (SELECT 1)
-SELECT CAST(0.3 AS DOUBLE) AS p, CAST(SUM(sz) AS BIGINT) AS n_vertices, (SELECT COUNT(*) FROM k0) AS n_edges_kept, CAST(COUNT(*) AS BIGINT) AS n_components, CAST(MAX(sz) AS BIGINT) AS largest_component, ROUND(CAST(MAX(sz) AS DOUBLE) / SUM(sz), 9) AS frac_largest FROM sz0
-UNION ALL
-SELECT CAST(0.7 AS DOUBLE) AS p, CAST(SUM(sz) AS BIGINT) AS n_vertices, (SELECT COUNT(*) FROM k1) AS n_edges_kept, CAST(COUNT(*) AS BIGINT) AS n_components, CAST(MAX(sz) AS BIGINT) AS largest_component, ROUND(CAST(MAX(sz) AS DOUBLE) / SUM(sz), 9) AS frac_largest FROM sz1
-""",
         "edge_embeddedness": f"""
 WITH raw AS ({SQL_E_CO}),
 c AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a,
@@ -4628,47 +4362,6 @@ kept AS (SELECT DISTINCT least(v, nbr) AS a, greatest(v, nbr) AS b
          FROM ranked WHERE r <= k)
 SELECT emb.a, emb.b, emb.support, emb.s AS nbr_jaccard
 FROM kept JOIN emb ON emb.a = kept.a AND emb.b = kept.b
-""",
-
-        "hitting_times": f"""
-WITH e AS ({SQL_E_OP}),
-v AS (SELECT src AS vertex FROM e UNION SELECT dst FROM e),
-tg AS (SELECT DISTINCT 'p' || p_partkey AS vertex FROM part WHERE p_partkey % 97 = 0),
-outd AS (SELECT src AS vertex, CAST(COUNT(*) AS DOUBLE) AS od FROM e GROUP BY src),
-w AS (SELECT e.src, e.dst, 1.0 / outd.od AS w FROM e JOIN outd ON outd.vertex = e.src),
-h0 AS (SELECT v.vertex, (tg.vertex IS NOT NULL) AS is_t, (outd.vertex IS NULL) AS stuck, 0.0 AS h
-       FROM v LEFT JOIN tg ON tg.vertex = v.vertex LEFT JOIN outd ON outd.vertex = v.vertex),
-s1 AS (SELECT w.src AS vertex, SUM(h.h * w.w) AS nh FROM h0 h JOIN w ON w.dst = h.vertex GROUP BY w.src),
-h1 AS (SELECT p.vertex, p.is_t, p.stuck, CASE WHEN p.is_t THEN 0.0 WHEN p.stuck THEN 1.0 + p.h
-     ELSE 1.0 + COALESCE(s.nh, 0.0) END AS h FROM h0 p LEFT JOIN s1 s ON s.vertex = p.vertex),
-s2 AS (SELECT w.src AS vertex, SUM(h.h * w.w) AS nh FROM h1 h JOIN w ON w.dst = h.vertex GROUP BY w.src),
-h2 AS (SELECT p.vertex, p.is_t, p.stuck, CASE WHEN p.is_t THEN 0.0 WHEN p.stuck THEN 1.0 + p.h
-     ELSE 1.0 + COALESCE(s.nh, 0.0) END AS h FROM h1 p LEFT JOIN s2 s ON s.vertex = p.vertex),
-s3 AS (SELECT w.src AS vertex, SUM(h.h * w.w) AS nh FROM h2 h JOIN w ON w.dst = h.vertex GROUP BY w.src),
-h3 AS (SELECT p.vertex, p.is_t, p.stuck, CASE WHEN p.is_t THEN 0.0 WHEN p.stuck THEN 1.0 + p.h
-     ELSE 1.0 + COALESCE(s.nh, 0.0) END AS h FROM h2 p LEFT JOIN s3 s ON s.vertex = p.vertex),
-s4 AS (SELECT w.src AS vertex, SUM(h.h * w.w) AS nh FROM h3 h JOIN w ON w.dst = h.vertex GROUP BY w.src),
-h4 AS (SELECT p.vertex, p.is_t, p.stuck, CASE WHEN p.is_t THEN 0.0 WHEN p.stuck THEN 1.0 + p.h
-     ELSE 1.0 + COALESCE(s.nh, 0.0) END AS h FROM h3 p LEFT JOIN s4 s ON s.vertex = p.vertex),
-s5 AS (SELECT w.src AS vertex, SUM(h.h * w.w) AS nh FROM h4 h JOIN w ON w.dst = h.vertex GROUP BY w.src),
-h5 AS (SELECT p.vertex, p.is_t, p.stuck, CASE WHEN p.is_t THEN 0.0 WHEN p.stuck THEN 1.0 + p.h
-     ELSE 1.0 + COALESCE(s.nh, 0.0) END AS h FROM h4 p LEFT JOIN s5 s ON s.vertex = p.vertex),
-s6 AS (SELECT w.src AS vertex, SUM(h.h * w.w) AS nh FROM h5 h JOIN w ON w.dst = h.vertex GROUP BY w.src),
-h6 AS (SELECT p.vertex, p.is_t, p.stuck, CASE WHEN p.is_t THEN 0.0 WHEN p.stuck THEN 1.0 + p.h
-     ELSE 1.0 + COALESCE(s.nh, 0.0) END AS h FROM h5 p LEFT JOIN s6 s ON s.vertex = p.vertex),
-fin AS (SELECT 1) SELECT vertex, ROUND(h, 9) AS hitting_time FROM h6
-""",
-        # exact order statistics at the 'lower' rank convention
-        # (operators/quantiles.py): k = floor(q*(n-1)) + 1
-        "degree_quantiles": f"""
-WITH e AS ({SQL_E_OP}),
-deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY src),
-n AS (SELECT COUNT(*) AS n FROM deg),
-qs(q) AS (VALUES (0.1), (0.5), (0.9), (0.99)),
-ks AS (SELECT q, CAST(floor(q * (n - 1)) + 1 AS BIGINT) AS k FROM qs, n),
-s AS (SELECT d, row_number() OVER (ORDER BY d) AS rn FROM deg)
-SELECT CAST(ks.q AS DOUBLE) AS q, ks.k AS k, CAST(s.d AS DOUBLE) AS value
-FROM ks JOIN s ON s.rn = ks.k
 """,
         "vertex_encode": f"""
 WITH e AS ({SQL_E_OP}),
@@ -4866,22 +4559,6 @@ WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.a = s.u AND c.b = s.v)
         "landmark_distances_packed": _landmark_sql(4, 4),
         "harmonic_centrality": _harmonic_sql(4, 4),
         "doc_bpe_merges": _bpe_sql(6),
-        "single_linkage_clusters": """
-WITH RECURSIVE raw AS (SELECT 'o' || l_orderkey AS src, 'p' || l_partkey AS dst,
-             (l_orderkey + l_partkey) % 9 + 1 AS w
-             FROM lineitem WHERE l_partkey % 20 = 0),
-verts AS (SELECT DISTINCT v FROM
-          (SELECT src AS v FROM raw UNION ALL SELECT dst FROM raw)),
-te AS MATERIALIZED (SELECT DISTINCT src, dst FROM raw
-                    WHERE w <= 3 AND src <> dst),
-und AS (SELECT src, dst FROM te UNION SELECT dst, src FROM te),
-reach(v, l) AS (SELECT src, src FROM und
-                UNION
-                SELECT u.dst, r.l FROM reach r JOIN und u ON u.src = r.v),
-comp AS (SELECT v, MIN(l) AS c FROM reach GROUP BY v)
-SELECT verts.v AS vertex, COALESCE(comp.c, verts.v) AS cluster
-FROM verts LEFT JOIN comp ON comp.v = verts.v
-""",
         "core_histogram": _core_hist_sql(10),
         "linkpred_jaccard": """
 WITH raw AS (SELECT 'o' || l_orderkey AS src, 'p' || l_partkey AS dst

@@ -4,9 +4,8 @@
       --op pagerank|pagerank_incremental|hits|components|components_twophase \
            |cc_incremental|labelprop|triangles|degrees|kcore|coreness|ktruss \
            |bfs|scc|sssp|landmarks|betweenness|hyperball|clustering|linkpred \
-           |walks|node2vec|louvain|mis|coloring|msf|single_linkage|fastrp \
-           |widest_path|reliable_path|graph_diff|hitting|spectral|encode \
-           |degree_quantiles|percolation|sparsify|embeddedness \
+           |walks|node2vec|louvain|mis|coloring|msf|widest_path \
+           |reliable_path|graph_diff|encode|sparsify|embeddedness \
       --edges <parquet dir with (src, dst)> \
       [--src-col src] [--dst-col dst] \
       [--checkpoint-dir /ckpt] [--resume] [--max-supersteps N] \
@@ -39,32 +38,18 @@ def build_arg_parser() -> argparse.ArgumentParser:
                             "linkpred", "walks", "node2vec", "louvain",
                             "betweenness", "landmarks", "sssp",
                             "mis", "coloring", "msf", "ktruss", "coreness",
-                            "single_linkage", "pagerank_incremental",
-                            "fastrp", "widest_path", "reliable_path",
-                            "graph_diff", "cc_incremental",
-                            "hitting", "spectral",
-                            "encode", "degree_quantiles",
-                            "percolation", "sparsify", "embeddedness"])
-    p.add_argument("--ps", default="0.2,0.5,0.8",
-                   help="percolation: comma-separated retention probs")
+                            "pagerank_incremental", "widest_path",
+                            "reliable_path", "graph_diff", "cc_incremental",
+                            "encode", "sparsify", "embeddedness"])
     p.add_argument("--exponent", type=float, default=0.5,
                    help="sparsify: keep top-ceil(d^exponent) per vertex")
-    p.add_argument("--quantiles", default="0.1,0.5,0.9,0.99",
-                   help="degree_quantiles: comma-separated q values")
     p.add_argument("--edges-old", default=None,
                    help="graph_diff: parquet dir of the OLD snapshot "
                         "(--edges is the new one)")
-    p.add_argument("--dims", type=int, default=16,
-                   help="fastrp: embedding dimensions (<= 64)")
-    p.add_argument("--hop-weights", default="1.0,1.0,0.5",
-                   help="fastrp: comma-separated per-hop weights")
     p.add_argument("--warm-ranks", default=None,
                    help="pagerank_incremental: parquet dir of (vertex, "
                         "rank) to warm-start from (e.g. yesterday's "
                         "pagerank output)")
-    p.add_argument("--threshold", type=float, default=None,
-                   help="single_linkage: inclusive distance cut; omit to "
-                        "cut at --k clusters instead")
     p.add_argument("--sweeps-per-level", type=int, default=8,
                    help="louvain: local-move sweeps per level")
     p.add_argument("--levels", type=int, default=2,
@@ -494,15 +479,6 @@ def main() -> None:
         out, summary["supersteps"], summary["converged"] = (
             res.values, res.rounds, res.converged
         )
-    elif args.op == "fastrp":
-        from smatchpp_spark.operators.fastrp import fastrp_embeddings
-
-        res = fastrp_embeddings(
-            edges, dims=args.dims,
-            weights=[float(x) for x in args.hop_weights.split(",")],
-            checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-        )
-        out = res.embeddings
     elif args.op == "pagerank_incremental":
         from smatchpp_spark.operators.incremental import pagerank_incremental
 
@@ -522,72 +498,10 @@ def main() -> None:
         out, summary["supersteps"], summary["converged"] = (
             res.ranks, res.supersteps, res.converged
         )
-    elif args.op == "single_linkage":
-        from smatchpp_spark.operators.slink import (
-            single_linkage,
-            single_linkage_k,
-        )
-
-        wedges = src.select(
-            F.col(args.src_col).alias("src"),
-            F.col(args.dst_col).alias("dst"),
-            F.col(args.weight_col).alias("weight"),
-        )
-        if args.threshold is not None:
-            res = single_linkage(
-                wedges, threshold=args.threshold,
-                max_rounds=args.max_supersteps,
-                checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-            )
-        else:
-            res = single_linkage_k(
-                wedges, k=args.k, max_rounds=args.max_supersteps,
-                checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-            )
-        print(f"single_linkage: n_clusters={res.n_clusters} "
-              f"msf_rounds={res.msf_rounds}")
-        out = res.clusters
-    elif args.op == "hitting":
-        from smatchpp_spark.operators.hitting import hitting_times
-
-        if not args.sources:
-            raise SystemExit("hitting requires --sources (the target set)")
-        if args.sources.startswith("@"):
-            targets = spark.read.parquet(args.sources[1:])
-        else:
-            targets = spark.createDataFrame(
-                [(v,) for v in args.sources.split(",")], "vertex string"
-            )
-        res = hitting_times(
-            edges, targets, horizon=args.max_supersteps,
-            checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-        )
-        out, summary["supersteps"] = res.times, res.supersteps
-    elif args.op == "spectral":
-        from smatchpp_spark.operators.spectral import spectral_bisection
-
-        res = spectral_bisection(
-            edges, supersteps=args.max_supersteps, seed=args.seed,
-            checkpoint_dir=args.checkpoint_dir, resume=args.resume,
-        )
-        out, summary["supersteps"] = res.coords, res.supersteps
     elif args.op == "encode":
         from smatchpp_spark.sources.encode import vertex_dictionary
 
         out = vertex_dictionary(edges, seed=args.seed)
-    elif args.op == "degree_quantiles":
-        from smatchpp_spark.operators.quantiles import quantiles_exact
-
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        qs = [float(x) for x in args.quantiles.split(",")]
-        out = quantiles_exact(deg, "d", qs)
-    elif args.op == "percolation":
-        from smatchpp_spark.operators.percolation import percolation_profile
-
-        out = percolation_profile(
-            edges, ps=tuple(float(x) for x in args.ps.split(",")),
-            seed=args.seed,
-        )
     elif args.op == "sparsify":
         from smatchpp_spark.operators.sparsify import local_sparsify
 

@@ -323,40 +323,3 @@ def estimate_distances(distances: DataFrame, pairs: DataFrame) -> DataFrame:
             F.count(F.lit(1)).cast("int").alias("n_landmarks"),
         )
     )
-
-
-def closeness_centrality(
-    edges: DataFrame,
-    sources: DataFrame | list,
-    max_depth: int = 6,
-    directed: bool = False,
-) -> DataFrame:
-    """Sampled closeness centrality — the Eppstein–Wang estimator
-    (public): ``C(v) = n_reached / Σ_s d(s, v)`` over the seeds that
-    reach v at distance ≥ 1, i.e. the reciprocal of v's average
-    distance from the sample.  Companions harmonic_centrality when the
-    reachable-set sizes are comparable (closeness is undefined/biased
-    across disconnected regions — the documented reason Boldi–Vigna
-    prefer harmonic; both are exposed, callers pick).
-
-    Output ``(vertex, sum_dist long, n_sources int, closeness double)``
-    for every vertex some seed reaches at d ≥ 1.  Plan: identical to
-    harmonic_centrality — ONE multi-source BFS (edge table scanned once
-    per depth for all seeds) + one map-side-combined groupBy.
-    """
-    res = landmark_distances(
-        edges, sources, max_depth=max_depth, directed=directed
-    )
-    pos = res.distances.filter(F.col("distance") > 0)
-    agg = pos.groupBy("vertex").agg(
-        F.sum("distance").alias("sum_dist"),
-        F.count(F.lit(1)).cast("int").alias("n_sources"),
-    )
-    return agg.select(
-        "vertex",
-        "sum_dist",
-        "n_sources",
-        F.round(
-            F.col("n_sources").cast("double") / F.col("sum_dist"), 9
-        ).alias("closeness"),
-    )

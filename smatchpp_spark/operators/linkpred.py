@@ -237,91 +237,3 @@ def linkpred_ppr(
             .drop("_rn")
         )
     return out
-
-
-def cocitation_scores(
-    edges: DataFrame,
-    mode: str = "cocitation",
-    normalize: str | None = None,
-    top_k: int | None = None,
-    max_pivot_degree: int | None = None,
-    min_score: float | None = None,
-) -> DataFrame:
-    """Co-citation / bibliographic-coupling similarity over the DIRECTED
-    edge table — the classic web/citation-graph relatedness primitives
-    (Small 1973; Kessler 1963, public algorithms; the SimRank/
-    companion-page family builds on them).  Beyond the reference's
-    operator set, same contract style as linkpred_scores.
-
-    ``mode='cocitation'``: score(u, v) = |{z : z→u AND z→v}| — two pages
-    are related when the same pages link to both (pivot z is a SOURCE,
-    its out-neighbor pairs are the wedges).  ``mode='coupling'``:
-    score(u, v) = |{z : u→z AND v→z}| — two pages are related when they
-    link to the same pages (pivot z is a TARGET, its in-neighbor pairs
-    are the wedges).
-
-    ``normalize=None`` leaves the raw common count;
-    ``normalize='jaccard'`` divides by the union of the relevant
-    neighborhoods (in-neighborhoods for cocitation, out- for coupling);
-    ``normalize='cosine'`` divides by sqrt(d(u)·d(v)) of the same
-    degrees.
-
-    Plan shape (the linkpred_scores skew discipline): parallel edges are
-    collapsed and candidate pairs come from a wedge equi-join on the
-    pivot z — never all-pairs.  A pivot of degree d yields d(d-1)/2
-    wedges, so ``max_pivot_degree`` drops super-hub pivots (a page
-    linked BY everyone relates everything to everything — standard
-    stop-listing; with it the count is a documented lower bound).
-    ``min_score`` filters before the optional normalization joins and
-    the top-k, cutting the dominant long tail of 1-common-neighbor
-    pairs.  Output (u, v, score double), u < v, deterministic top-k.
-    """
-    if mode not in ("cocitation", "coupling"):
-        raise ValueError(f"unknown cocitation mode {mode!r}")
-    if normalize not in (None, "jaccard", "cosine"):
-        raise ValueError(f"unknown normalize {normalize!r}")
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    if mode == "cocitation":
-        # pivot = source, items = its out-neighbors
-        wedges = e.select(F.col("src").alias("z"), F.col("dst").alias("n"))
-    else:
-        wedges = e.select(F.col("dst").alias("z"), F.col("src").alias("n"))
-    # d(item) in the SAME orientation: in-degree for cocitation (how many
-    # cite u), out-degree for coupling (how many u cites)
-    deg = wedges.groupBy(F.col("n").alias("x")).agg(
-        F.count(F.lit(1)).alias("dx")
-    )
-    pdeg = wedges.groupBy("z").agg(F.count(F.lit(1)).alias("dz"))
-    pivots = pdeg.filter(F.col("dz") >= 2)
-    if max_pivot_degree is not None:
-        pivots = pivots.filter(F.col("dz") <= max_pivot_degree)
-    nbrs = wedges.join(pivots.select("z"), "z")
-    pairs = (
-        nbrs.select("z", F.col("n").alias("u"))
-        .join(nbrs.select("z", F.col("n").alias("v")), "z")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).cast("double").alias("score"))
-    )
-    if min_score is not None:
-        pairs = pairs.filter(F.col("score") >= min_score)
-    if normalize is not None:
-        du = deg.select(F.col("x").alias("u"), F.col("dx").alias("du"))
-        dv = deg.select(F.col("x").alias("v"), F.col("dx").alias("dv"))
-        joined = pairs.join(du, "u").join(dv, "v")
-        if normalize == "jaccard":
-            den = F.col("du") + F.col("dv") - F.col("score")
-        else:
-            den = F.sqrt(F.col("du").cast("double") * F.col("dv"))
-        pairs = joined.select(
-            "u", "v", F.round(F.col("score") / den, 9).alias("score")
-        )
-    if top_k is not None:
-        pairs = pairs.orderBy(F.desc("score"), F.asc("u"), F.asc("v")).limit(
-            top_k
-        )
-    return pairs

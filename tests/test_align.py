@@ -355,8 +355,9 @@ def test_hillclimber_upper_bound_finite_and_admissible():
 
 
 def test_large_v_pairs_report_finite_bounds():
-    """V > bnb_max_v pairs route to the hillclimber — their stats row must
-    carry a finite honest (lb, ub), no 1e7 anywhere."""
+    """Pairs of up to 20 variables stay under the default bnb_max_v (25),
+    so ``auto`` runs branch-and-bound with its escalated retry; the rows
+    with V > 12 must carry a finite honest (lb, ub), no 1e7 anywhere."""
     seen_large = 0
     for i in range(10):
         rng = random.Random(f"bigv:{i}")
@@ -375,6 +376,28 @@ def test_large_v_pairs_report_finite_bounds():
         assert row["upper_bound"] >= row["matchsum_x"] - 1e-9
     assert seen_large >= 3
 
+
+
+def test_auto_hillclimbs_above_bnb_max_v():
+    """``auto`` hands a pair with V > bnb_max_v to the hill-climber: the
+    row equals the hill-climber's under the same seed, and its (lb, ub)
+    is finite and bounds the achieved matchsum.  On this pair the
+    hill-climber's upper bound stays above the one B&B certifies, so the
+    route shows in the row."""
+    rng = random.Random("auto-hc:2")
+    g1 = parse_penman(generate_penman(rng, max_nodes=8, max_depth=3))
+    g2 = parse_penman(generate_penman(rng, max_nodes=8, max_depth=3))
+    hc = myalign.process_pair(g1, g2, myalign.AlignConfig(solver="hillclimber"))
+    V = max(hc["n_vars_a"], hc["n_vars_b"])
+    assert V >= 6
+    bnb = myalign.process_pair(g1, g2, myalign.AlignConfig(solver="bnb"))
+    assert bnb != hc
+    row = myalign.process_pair(
+        g1, g2, myalign.AlignConfig(solver="auto", bnb_max_v=V - 1)
+    )
+    assert row == hc
+    assert np.isfinite(row["lower_bound"]) and np.isfinite(row["upper_bound"])
+    assert row["upper_bound"] >= row["matchsum_x"] - 1e-9
 
 def test_bnb_escalation_certifies_exhausted_pairs():
     """A starved B&B budget leaves a gap (ub > lb); one escalated retry

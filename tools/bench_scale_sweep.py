@@ -695,19 +695,6 @@ def main() -> None:
             inp["docs"], n_merges=4
         ).count())
 
-        from smatchpp_spark.operators.slink import single_linkage
-
-        # Boruvka once (log-round, component count halves) + one CC
-        # over <=V-1 forest edges; weights synthesized per-edge so both
-        # scales share the construction
-        _sw = e_op.withColumn(
-            "weight",
-            (F.pmod(F.xxhash64("src", "dst"), F.lit(9)) + 1).cast("long"),
-        )
-        timed("single_linkage_t3", scale, lambda: single_linkage(
-            _sw, threshold=3, max_rounds=20
-        ).clusters.count())
-
         from smatchpp_spark.operators.incremental import pagerank_incremental
         from smatchpp_spark.operators.pagerank import pagerank
 
@@ -722,15 +709,6 @@ def main() -> None:
         timed("pagerank_incremental4", scale, lambda: pagerank_incremental(
             e_op, _warm, tol=-1.0, max_supersteps=4
         ).ranks.count())
-
-        from smatchpp_spark.operators.fastrp import fastrp_embeddings
-
-        # the pagerank superstep dataflow with d=8 accumulators: one
-        # edges-vs-state join + one map-side-combined per-dim sum per
-        # hop; expect the pagerank profile
-        timed("fastrp_d8", scale, lambda: fastrp_embeddings(
-            e_op, dims=8, s=2, weights=[1.0, 0.5]
-        ).embeddings.count())
 
         from smatchpp_spark.operators.pathalgebra import widest_path
 
@@ -850,40 +828,12 @@ def main() -> None:
         timed("vertex_encode", scale, lambda: vertex_dictionary(
             inp["e_op"]).count())
 
-        from smatchpp_spark.operators.hitting import hitting_times
-
-        ht_targets = inp["e_op"].select("dst").distinct().filter(
-            F.col("dst").rlike("00$")
-        )
-        timed("hitting_times", scale, lambda: hitting_times(
-            inp["e_op"], ht_targets, horizon=6
-        ).times.count())
-
-        from smatchpp_spark.operators.spectral import spectral_bisection
-
-        timed("spectral_bisection", scale, lambda: spectral_bisection(
-            inp["e_op"], supersteps=6
-        ).coords.count())
-
-        from smatchpp_spark.operators.percolation import percolation_profile
-
-        timed("graph_percolation", scale, lambda: percolation_profile(
-            inp["e_cust"], ps=(0.5,)
-        ).count())
-
         from smatchpp_spark.operators.sparsify import local_sparsify
 
         timed("graph_sparsify", scale, lambda: local_sparsify(
             inp["e_co19"], exponent=0.5
         ).count())
 
-        from smatchpp_spark.operators.quantiles import quantiles_exact
-
-        qe_deg = (
-            inp["e_op"].groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        )
-        timed("degree_quantiles", scale, lambda: quantiles_exact(
-            qe_deg, "d", [0.1, 0.5, 0.9, 0.99]).count())
         e_op.unpersist()
 
     fits = {}
@@ -1012,17 +962,9 @@ def main() -> None:
         "  word table, which barely grows when the corpus is 10",
         "  duplicated copies — hence the ~flat wall (exponent ~0.04),",
         "  exactly the word-frequency-table design argument.",
-        "* **single_linkage_t3** — Borůvka MSF (log rounds, component",
-        "  count halves) then hash-min CC over ≤V−1 FOREST edges (not",
-        "  the full edge set) — the Gower–Ross identity is the scale",
-        "  mechanism; extra thresholds reuse the forest for free.",
         "* **pagerank_incremental4** — pagerank(init=warm ranks): the",
         "  pagerank superstep, warm-started; per round it tracks the",
         "  pagerank_10steps profile, and the warm start cuts rounds.",
-        "* **fastrp_d8** — hash-seeded projection + per-hop D⁻¹A",
-        "  multiply: the pagerank superstep with 8 accumulator columns",
-        "  (state V×8 doubles, all sums map-side-combined); no",
-        "  training, no sampling — expect the pagerank profile.",
         "* **widest_path_8rounds** — the sssp frontier superstep under",
         "  the (max, min) semiring; fixed 8-round budget keeps the work",
         "  definition identical at both scales.",
